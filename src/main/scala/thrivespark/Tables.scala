@@ -12,19 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scales from one local file to a 100 TB multi-file dataset unchanged.
   */
 object Tables {
-  // Reader cache: a DataFrame is an immutable plan, so reusing one per
-  // (session, file) is result-identical while skipping the repeated footer
-  // read + relation resolution that 100+ queries would otherwise each pay.
-  // Entries of stopped sessions are pruned on access so a long-lived JVM
-  // (test suites, multi-session services) doesn't pin dead sessions and
-  // their plans forever. (getOrElseUpdate may double-evaluate under a race;
-  // harmless — both values are equivalent immutable plans.)
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+  // Reader per (session, file) through the Shared registry: a DataFrame is
+  // an immutable plan, so reusing one is result-identical while skipping the
+  // repeated footer read + relation resolution that 100+ queries would
+  // otherwise each pay.
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    cache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"), {
+    Shared(spark, ("table", s"$sfDir/$name.parquet")) {
       // ms-precision parquet timestamps must arrive as TIMESTAMP (session-TZ
       // UTC), not TIMESTAMP_NTZ — same values under UTC, but unix_micros() and
       // friends require the TZ-typed flavor.
@@ -34,7 +27,7 @@ object Tables {
       // integer division is lossless — FIXTURES.md).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(s"$sfDir/$name.parquet")
-    })
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
@@ -80,16 +73,12 @@ object Tables {
   // cluster this would be the one checkpointed intermediate of the events
   // stage). Column `k` is the parsed INT; all other event columns pass
   // through unchanged.
-  private val parsedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   def eventsParsed(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    parsedCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    parsedCache.getOrElseUpdate((s, d), {
+    Shared(s, ("eventsParsed", d)) {
       events(s, d)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 }

@@ -3,7 +3,7 @@ package thrivespark.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import thrivespark.{Op, Tables => T}
+import thrivespark.{Op, Shared, Tables => T}
 
 /** SURVEY.md §2.9 dedup (#50, #51).
   *
@@ -31,19 +31,14 @@ object Dedup {
     * Cached persisted per (session, sf): five dedup queries consume the
     * same shingle table (minhash, survivors, ngram-jaccard, simhash), and
     * on a cluster this would be the one checkpointed intermediate of the
-    * dedup stage. Entries of stopped sessions are pruned on access. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def shingleDocs(s: SparkSession, d: String): DataFrame = {
-    shingleCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    shingleCache.getOrElseUpdate((s, d), {
+    * dedup stage. */
+  def shingleDocs(s: SparkSession, d: String): DataFrame =
+    Shared(s, ("shingles", d)) {
       thrivespark.functions.Register(s)
       T.documents(s, d).select(col("doc_id"),
           call_function("shingle_hashes", split(col("text"), " ")).as("shl"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   /** 32 minhash values per doc in one pass — custom codegen'd Catalyst
     * expression (thrivespark.functions.MinHashSignature), registered per
@@ -76,30 +71,18 @@ object Dedup {
     * (near_minhash, pipeline_survivors, clusters), so it is persisted per
     * (session, sf, τ) like the shingle table — on a cluster, the second
     * checkpointed intermediate of the dedup stage. */
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Double), DataFrame]
-
-  /** Read-only view of the live cache keys (DedupSimilaritySpec pins the
-    * r22 one-sf-dir-per-session eviction). */
-  def pairCacheKeys: Set[(SparkSession, String, Double)] =
-    pairCache.keySet.toSet
-
   def nearDupPairs(s: SparkSession, d: String, threshold: Double): DataFrame = {
-    pairCache.filterInPlace { case ((ss, _, _), _) => !ss.sparkContext.isStopped }
-    // r22 (r20 verdict item 5): evict (and unpersist) this SESSION's entries
-    // for OTHER sf dirs — a long-lived session cycling many sf dirs would
+    // r22 (r20 verdict item 5): release this SESSION's pair tables for
+    // OTHER sf dirs — a long-lived session cycling many sf dirs would
     // otherwise pin one persisted pair table per dir forever. Entries for
     // the same dir at other thresholds stay (several ops share τ=0.6; a
     // different τ is a different declared result, not churn).
-    pairCache.filterInPlace { case ((ss, dd, _), df) =>
-      val keep = !(ss eq s) || dd == d
-      if (!keep) df.unpersist(blocking = false)
-      keep
-    }
-    pairCache.getOrElseUpdate((s, d, threshold),
+    Shared.release(s) { case ("pairs", dd, _) => dd != d }
+    Shared(s, ("pairs", d, threshold)) {
       nearDupPairsOf(shingleDocs(s, d), threshold)
         .orderBy(col("a_id"), col("b_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
   }
 
   /** The LSH→verify pipeline over any (doc_id, shl) frame — the un-cached
@@ -386,59 +369,23 @@ object Dedup {
     sb.toString
   }
 
-  /** Registry for the shared edge set: FOUR graph ops (pagerank,
-    * canonical rank, triangles, common neighbors) derive from the same
-    * paragraph-sharing pair frame, and the build (paragraph hashing +
-    * distinct + df valve + self-join, ~1.9 s at sf0.1) dominated each
-    * op's cost when paid per query. The cached artifact is a
-    * localCheckpoint, NOT a MEMORY_AND_DISK persist (the Text registry's
-    * choice): the consumers are ITERATIVE (per-round joins against the
-    * edge table), and keeping the InMemoryRelation subtree in every
-    * round's plan measured SLOWER than the truncated RDD scan
-    * (persist: pagerank 4.25→4.8-5.5 s; checkpoint restores the r17
-    * per-op shape while still sharing the build). Keyed by logical plan;
-    * entries of stopped sessions are pruned on access, the
-    * shingleCache discipline.
-    *
-    * INVALIDATION CONTRACT (r19, documenting the r18 advisory): the key
-    * is (session, canonicalized plan) ONLY — it does not fingerprint the
-    * source files, so rewriting the table files at the same path
-    * mid-session (a re-staged corpus) would serve the stale checkpointed
-    * edges/ranks. A long-lived session that mutates its inputs MUST call
-    * releaseSharedCaches() (and Text.releaseSharedCaches /
-    * Pipeline.releaseSurvivorCache) between data generations — the same
-    * contract Spark's own df.cache() carries for path-stable rewrites.
-    * Bench/Verify sessions are immune by construction (one static corpus
-    * per session, caches die with it); the streaming stagings, which DO
-    * re-read paths across sessions, carry their own source fingerprint
-    * (StreamingOps.srcFingerprint) for exactly this reason. */
-  private val sharedEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame]
-
-  /** Drop the shared edge registry (checkpoint RDDs are GC-reclaimed). */
-  def releaseSharedCaches(): Unit = sharedEdgeCache.clear()
-
-  /** The session-shared edge set all four graph ops read — built and
-    * checkpointed once per (corpus) per session (the substring-family
-    * window-index discipline; at 100 TB this is the materialized edge
+  /** The session-shared edge set all four graph ops (pagerank, canonical
+    * rank, triangles, common neighbors) read — built and checkpointed once
+    * per (corpus) per session (at 100 TB this is the materialized edge
     * table a production graph pipeline writes before running any
-    * algorithm on it). */
+    * algorithm on it). The build (paragraph hashing + distinct + df valve
+    * + self-join, ~1.9 s at sf0.1) dominated each op's cost when paid per
+    * query. The artifact is an eager localCheckpoint, NOT a persist: the
+    * consumers are ITERATIVE (per-round joins against the edge table), and
+    * keeping the InMemoryRelation subtree in every round's plan measured
+    * SLOWER than the truncated RDD scan (persist: pagerank 4.25→4.8-5.5 s).
+    * Registered in `Shared` under the canonicalized edge plan. */
   def sharedParagraphEdges(docs: DataFrame, maxDf: Int): DataFrame = {
-    sharedEdgeCache.filterInPlace { case (_, df) =>
-      !df.sparkSession.sparkContext.isStopped }
     val und = paragraphShareEdges(docs, maxDf)
-    // key on (session, CANONICALIZED analyzed plan): each call mints
-    // fresh ExprIds for its aliases, so raw logical plans from two calls
-    // are never equal and a plan-object key would silently miss on every
-    // lookup (measured: the "shared" build re-ran per op) —
-    // canonicalization normalizes ExprIds away, so semantically-identical
-    // derivations share one entry (SharedCacheSpec pins the identity);
-    // the session is in the key so two live sessions with identical
-    // plans never cross-wire frames (the shingleCache discipline).
-    sharedEdgeCache.getOrElseUpdate(
-      (docs.sparkSession, und.queryExecution.analyzed.canonicalized),
-      und.localCheckpoint(true))
+    Shared(docs.sparkSession,
+        ("paragraphEdges", und.queryExecution.analyzed.canonicalized)) {
+      und.localCheckpoint(true)
+    }
   }
 
   /** Undirected doc pairs sharing at least one identical 10-token
@@ -488,22 +435,15 @@ object Dedup {
     * und, same iteration bound), so in a session that runs both, the 3
     * checkpointed power-iteration rounds are paid once. The cached value
     * is the final localCheckpoint'd frame — small (one row per node) and
-    * lineage-free. */
-  private val rankCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-      DataFrame]
-
-  def pagerankFrom(und: DataFrame, iters: Int = PagerankIters): DataFrame = {
-    rankCache.filterInPlace { case (_, df) =>
-      !df.sparkSession.sparkContext.isStopped }
-    // (session, canonicalized plan, iters) key, same reasons as
-    // sharedParagraphEdges — though here the common case is the literal
-    // SAME checkpointed frame (a LogicalRDD canonicalizes to itself),
-    // this also dedups re-derivations
-    rankCache.getOrElseUpdate(
-      (und.sparkSession, und.queryExecution.analyzed.canonicalized, iters),
-      pagerankFromUncached(und, iters))
-  }
+    * lineage-free. Keyed on the canonicalized edge plan, like
+    * sharedParagraphEdges — the common case is the literal SAME
+    * checkpointed frame (a LogicalRDD canonicalizes to itself), but this
+    * also dedups re-derivations. */
+  def pagerankFrom(und: DataFrame, iters: Int = PagerankIters): DataFrame =
+    Shared(und.sparkSession,
+        ("pagerank", und.queryExecution.analyzed.canonicalized, iters)) {
+      pagerankFromUncached(und, iters)
+    }
 
   private def pagerankFromUncached(und: DataFrame, iters: Int): DataFrame = {
     val edges = und.select(col("a_id").as("src"), col("b_id").as("dst"))

@@ -2,7 +2,7 @@ package thrivespark.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{Op, Shared, Tables => T}
 import thrivespark.Det._
 
 /** The end-to-end training-corpus pipeline as ONE oracled query (r7 — the
@@ -64,34 +64,25 @@ object Pipeline {
     * should take survivorsOfDisk (the durable parquet boundary below) as
     * the inter-stage checkpoint — same frame, survives executor loss.
     *
-    * r19: the boundary is an EAGER localCheckpoint behind a (session,
-    * canonicalized plan)-keyed registry (the sharedEdgeCache discipline —
-    * raw logical plans never match across calls, fresh ExprIds per alias)
-    * instead of a plan-cached persist. The persist left every consumer
-    * carrying the full dedup lineage above the InMemoryRelation, so the
-    * op's in-suite cost depended on what earlier suite keys had already
-    * materialized (r18 driver record: 2.54 s in-suite vs 1.9 s warm —
-    * adjudicated as exactly this). The checkpoint truncates lineage at
-    * first use INSIDE the op, pinning the cost wherever it runs. */
-  private val survivorCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]
-
-  /** Drop registry entries (the checkpointed RDDs die with their session;
-    * long-lived sessions re-staging data call this between generations). */
-  def releaseSurvivorCache(): Unit = survivorCache.clear()
-
+    * r19: the boundary is an EAGER localCheckpoint registered in `Shared`
+    * under its canonicalized plan, instead of a plan-cached persist. The
+    * persist left every consumer carrying the full dedup lineage above the
+    * InMemoryRelation, so the op's in-suite cost depended on what earlier
+    * suite keys had already materialized (r18 driver record: 2.54 s
+    * in-suite vs 1.9 s warm — adjudicated as exactly this). The checkpoint
+    * truncates lineage at first use INSIDE the op, pinning the cost
+    * wherever it runs. */
   def survivors(s: SparkSession, d: String): DataFrame = {
-    survivorCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
     val raw = survivorsRawOf(
       T.documents(s, d).select(col("doc_id"), split(col("text"), " ").as("ts")),
       Dedup.nearDupPairs(s, d, 0.6))
-    survivorCache.getOrElseUpdate(
-      (s, raw.queryExecution.analyzed.canonicalized),
+    Shared(s, ("survivors", raw.queryExecution.analyzed.canonicalized)) {
       // EAGER checkpoint: a lazy one would only "take" at the end of the
       // first job that computes it, so the gate's four plan branches each
       // recompute the full dedup lineage inside that first job (measured
       // 12.3 s vs 3.8 s at sf0.1).
-      raw.localCheckpoint(true))
+      raw.localCheckpoint(true)
+    }
   }
 
   /** The un-materialized stage-1 frame: docs (doc_id, ts) minus every b_id

@@ -3,7 +3,7 @@ package thrivespark.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{Op, Shared, Tables => T}
 import thrivespark.Det._
 
 /** SURVEY.md §2.9 similarity search (#52–#54).
@@ -46,29 +46,18 @@ object Similarity {
     * 64-dim verify join). Same kernel, density not declared. */
   def dotNullable(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  /** Session-scoped cache of the persisted trimodal manifest (decode-once
-    * stage boundary of pipeline_multimodal_e2e). Memoized by (session,
-    * sfDir) so repeated op invocations reuse ONE persisted frame — the
-    * CacheManager would dedupe identical plans anyway, but this makes the
-    * reuse explicit and gives the storage an owner with a release hook
-    * (same shape as Text.bpeRelease) instead of blocks that live until
-    * session teardown with nothing accountable for them. */
-  private val manifestCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
+  /** The persisted trimodal manifest (decode-once stage boundary of
+    * pipeline_multimodal_e2e), one per (session, sfDir) in `Shared` so
+    * repeated op invocations reuse ONE persisted frame with an owner that
+    * can release it. */
   private def trimodalManifestCached(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    manifestCache.getOrElseUpdate((s, d), {
+    Shared(s, ("trimodalManifest", d)) {
       val mm = thrivespark.multimodal.Multimodal
       mm.extractTrimodalManifest(mm.mediaTrimodalFromDocuments(T.documents(s, d)),
           everyNth = 3)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  /** Unpersist every cached manifest and drop the registry entries. */
-  def releaseManifestCache(): Unit = {
-    manifestCache.values.foreach(df => df.unpersist(): Unit)
-    manifestCache.clear()
-  }
+    }
 
   private val duckDot =
     "list_sum(list_transform(generate_series(1, 64), " +
@@ -312,18 +301,9 @@ object Similarity {
     * training runs ONCE per (session, corpus) and every consumer
     * (sim_ann_kmeans_train, the trained-centroid recall ops) reads the same
     * result, exactly like bpeMergesFor. */
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (Seq[(Long, Array[Long])], Seq[(Int, Long, Long, Long, Long)])]
   private def kmeansTrained(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(Long, Array[Long])], Seq[(Int, Long, Long, Long, Long)]) = {
-    // prune codebooks of stopped sessions on access (the Tables.cache
-    // discipline) so long-lived multi-session JVMs don't retain dead ones
-    kmeansCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    kmeansCache.getOrElseUpdate((s, d), kmeansTrain(s, d))
-  }
-  /** Drop memoized codebooks (tests + long-lived multi-corpus JVMs). */
-  def releaseKmeansCache(): Unit = kmeansCache.clear()
+      : (Seq[(Long, Array[Long])], Seq[(Int, Long, Long, Long, Long)]) =
+    Shared(s, ("kmeans", d))(kmeansTrain(s, d))
 
   /** Trained codebook as a broadcastable centroid frame. cent_emb is the
     * MICRO vector as float (exact): centroid RANKING under a micro-space

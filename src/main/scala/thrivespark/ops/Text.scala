@@ -2,7 +2,7 @@ package thrivespark.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{Op, Shared, Tables => T}
 import thrivespark.Det._
 
 /** SURVEY.md §2.9 text analysis (#48–#49) plus the training-data-pipeline
@@ -104,82 +104,24 @@ object Text {
       .select(col("p.l").as("l"), col("p.r").as("r"))
   }
 
-  /** localCheckpoint storage registry: `Dataset.unpersist` does NOT
-    * release localCheckpoint blocks — it only uncaches CacheManager
-    * entries, while the checkpoint persists its INTERNAL RDD directly
-    * (verified on this Spark: the checkpointed RDD stays fully cached
-    * after unpersist(true)). The trainers therefore record each
-    * checkpoint's RDD handles here and `bpeRelease` frees them by
-    * handle. Snapshot-diff of getPersistentRDDs is safe: the training
-    * loops are single-threaded within a session.
-    *
-    * OWNERSHIP INVARIANT: every frame the BPE trainers return (or
-    * checkpoint internally) is registered here with STRONG references to
-    * its LogicalPlan + RDD handles, held until `bpeRelease(frame)` is
-    * called. Callers MUST route release through bpeRelease — a plain
-    * `frame.unpersist()` releases NOTHING for checkpoint-backed frames
-    * (see above) and leaves both the blocks and this registry's entry
-    * resident for the life of the session. Bench/Verify sessions satisfy
-    * the invariant by construction (the shared training caches are
-    * per-session and torn down with it); long-lived embedding sessions
-    * must pair every train call with a bpeRelease. */
-  private val ckStorage = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[org.apache.spark.rdd.RDD[_]]]
-
-  private def localCheckpointTracked(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(false)
-    val added = sc.getPersistentRDDs.collect {
-      case (id, r) if !before.contains(id) => r }.toSeq
-    ckStorage.put(out.queryExecution.logical, added): Unit
-    out
-  }
-
-  /** Release the BlockManager storage behind a frame returned by the BPE
-    * trainers — checkpoint-backed (via the registry) or plain persist. */
-  def bpeRelease(df: DataFrame): Unit = {
-    ckStorage.remove(df.queryExecution.logical)
-      .foreach(_.foreach(_.unpersist(false)))
-    df.unpersist(): Unit
-  }
-
   // -------------------------------------- shared-derivation cache ---
 
-  /** Registry for the persisted SHARED derivations (the four-flag filter
-    * gate, the quality-model train/score boundaries, the positional
-    * window index): frames that ≥2 consumers read per session, persisted
-    * so the work behind them runs once. Storage dedup is the
-    * CacheManager's: persisting an equivalent plan twice creates ONE
-    * cache entry (sameResult match), so registering per-call handles is
-    * harmless — the registry exists so the storage is RELEASABLE
-    * (`releaseSharedCaches`), mirroring the trimodal-manifest registry
-    * (Similarity.releaseManifestCache) instead of pinning blocks for the
-    * session's lifetime. Bench/Verify sessions tear the caches down with
-    * the session; long-lived sessions with changing inputs (e.g. repeated
-    * qualityModelScoresOn holdout splits) call releaseSharedCaches
-    * between generations. */
-  private val sharedCaches = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]
-
+  /** Persist a frame that ≥2 consumers read per session (the four-flag
+    * filter gate, the quality-model train/score boundaries, the positional
+    * window index and its run table), registered in `Shared` under its
+    * canonicalized plan so re-deriving it returns the registered frame.
+    * The CacheManager is shared by every session of a context, so probe it
+    * first: a plan another session already persisted is reused, not
+    * re-persisted (which would WARN). */
   private def persistShared(df: DataFrame): DataFrame =
-    sharedCaches.getOrElseUpdate(df.queryExecution.logical, {
-      // registry keys are per-call plan objects, but storage is deduped by
-      // the CacheManager's sameResult match — probe it first so re-deriving
-      // the same frame doesn't re-persist (and doesn't WARN)
+    Shared(df.sparkSession,
+        ("persisted", df.queryExecution.analyzed.canonicalized)) {
       if (df.sparkSession.sharedState.cacheManager.lookupCachedData(
           df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           df.queryExecution.analyzed).isEmpty)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
-    })
-
-  /** Unpersist every shared derivation and drop the registry entries. */
-  def releaseSharedCaches(): Unit = {
-    sharedCaches.values.foreach(df => df.unpersist(): Unit)
-    sharedCaches.clear()
-  }
+    }
 
   /** The positional shared-window index — THE artifact of the substring
     * family: one (doc_id, i, h) row per K-token window occurrence, h =
@@ -234,8 +176,8 @@ object Text {
     * released one-behind (after its child has been built from it) instead
     * of via an eager count() per iteration — halving the job count, which
     * at 8 iterations is the dominant cost of the loop, not the data.
-    * Callers release the RETURNED corpus with `bpeRelease`, not
-    * unpersist() (see ckStorage). */
+    * Callers release the RETURNED corpus with `Shared.free`, not
+    * unpersist(), which leaves a checkpoint's blocks resident. */
   def bpeTrain(docs: DataFrame, iters: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     var corpus = bpeCorpus(docs).persist()
@@ -247,7 +189,7 @@ object Text {
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).head()
       // `corpus` is now materialized in storage; its parent can go
-      if (prev != null) bpeRelease(prev)
+      if (prev != null) Shared.free(prev)
       val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((it, l, r, cnt))
       prev = corpus
@@ -258,12 +200,12 @@ object Text {
       // planning overhead (measured: 10.6 s → ~3 s for the 8-round loop).
       // On a cluster the equivalent lineage cut is the per-round corpus
       // write the doc comment above describes.
-      corpus = localCheckpointTracked(corpus.withColumn("s",
+      corpus = corpus.withColumn("s",
         replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
-          lit(BpeD + l + " " + r + BpeD))))
+          lit(BpeD + l + " " + r + BpeD))).localCheckpoint(false)
     }
     corpus.count()                    // materialize the final rewrite …
-    if (prev != null) bpeRelease(prev) // … then release its parent
+    if (prev != null) Shared.free(prev) // … then release its parent
     (merges.result(), corpus)
   }
 
@@ -315,34 +257,30 @@ object Text {
         .groupBy(col("l"), col("r")).agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).head()
-      if (prev != null) bpeRelease(prev)
+      if (prev != null) Shared.free(prev)
       val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((it, l, r, cnt))
       prev = vocab
-      vocab = localCheckpointTracked(vocab.withColumn("s",
+      vocab = vocab.withColumn("s",
         replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
-          lit(BpeD + l + r + BpeD))))   // char merge concatenates, no space
+          lit(BpeD + l + r + BpeD)))    // char merge concatenates, no space
+        .localCheckpoint(false)
     }
     vocab.count()
-    if (prev != null) bpeRelease(prev)
+    if (prev != null) Shared.free(prev)
     (merges.result(), vocab)
   }
 
   /** Per-(session, dir) cache of the char-level training result — the
-    * mergeCache move applied to the char twin ops: text_bpe_char_train and
+    * bpeMergesFor move applied to the char twin ops: text_bpe_char_train and
     * text_bpe_char_segment previously EACH ran the full 8-iteration loop.
     * The cached vocab frame stays deliberately resident (vocab-sized,
     * checkpoint-backed — the segment op's display derives from it). */
-  private val charTrainCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (Seq[(Int, String, String, Long)], DataFrame)]
-
   private[ops] def bpeCharTrained(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    charTrainCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    charTrainCache.getOrElseUpdate((s, d),
-      bpeCharTrain(T.documents(s, d), BpeIters))
-  }
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    Shared(s, ("bpeCharTrain", d)) {
+      bpeCharTrain(T.documents(s, d), BpeIters)
+    }
 
   /** DuckDB mirror for the char-level trainer: v0 = word-frequency table
     * with wrapped char symbols (+ </w>), then per iteration a weighted
@@ -376,12 +314,6 @@ object Text {
 
   private val BpeIters = 8
 
-  /** Learned-merge cache per (session, corpus dir): training runs once and
-    * both BPE ops share it (the Tables reader-cache move). The cache holds
-    * only the 8 (it, l, r, cnt) tuples — O(iters) driver memory. */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Seq[(Int, String, String, Long)]]
-
   /** Training corpus = a deterministic 1-in-5 sample. Tokenizers are
     * trained on a corpus SAMPLE and applied to the whole corpus — at 100 TB
     * nobody pays 8 full-corpus bigram shuffles for merge statistics a 20%
@@ -391,15 +323,16 @@ object Text {
   private[ops] def bpeTrainSlice(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 5 === 0)
 
+  /** Learned-merge cache per (session, corpus dir): training runs once and
+    * both BPE ops share it (memoized like the Tables readers). The entry holds
+    * only the 8 (it, l, r, cnt) tuples — O(iters) driver memory. */
   private[ops] def bpeMergesFor(s: org.apache.spark.sql.SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] = {
-    mergeCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    mergeCache.getOrElseUpdate((s, d), {
+      : Seq[(Int, String, String, Long)] =
+    Shared(s, ("bpeMerges", d)) {
       val (merges, corpus) = bpeTrain(bpeTrainSlice(T.documents(s, d)), BpeIters)
-      bpeRelease(corpus)
+      Shared.free(corpus)
       merges
-    })
-  }
+    }
 
   /** Tokenize with an already-trained merge list: ONE map-only projection
     * chaining the greedy replaces in merge order — equivalent to the

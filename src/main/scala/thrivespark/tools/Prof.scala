@@ -7,37 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Verifies the spark.sql.extensions deployment path end to end in a fresh
-  * JVM: a session configured with GraftExtensions must expose the SQL
-  * functions AND the similarity-join rewrite with no install()/Register
-  * call. Usage: tools/run.sh thrivespark.tools.ExtCheck <sfDir> */
-object ExtCheck {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "thrivespark.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val d = spark.sql(
-      """SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)),
-        |               array(cast(3.0 as float), cast(4.0 as float)))""".stripMargin)
-      .collect()(0).getDouble(0)
-    assert(d == 11.0, s"vec_dot via extensions returned $d")
-    spark.read.parquet(s"$sfDir/embeddings.parquet").createOrReplaceTempView("emb")
-    val plan = spark.sql(
-      """SELECT a.vec_id, b.vec_id FROM emb a JOIN emb b
-        |ON vec_dot(a.embedding, b.embedding) > 0.45 AND a.vec_id < b.vec_id"""
-        .stripMargin).queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"rewrite did not fire via extensions:\n$plan")
-    assert(plan.contains("__sim_bucket"), s"bucket key missing:\n$plan")
-    println("[extcheck] OK: functions + optimizer rule active via spark.sql.extensions")
-    spark.stop()
-  }
-}
-
 /** Ad-hoc stage profiler: times each stage of a pipeline op at a given sf.
   * Usage: tools/run.sh thrivespark.tools.Prof <sfDir> <what>  */
 object Prof {

@@ -11,15 +11,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("r22 (r20 item 5): nearDupPairs' pair cache keeps one sf dir per " +
       "session — cycling dirs evicts the stale persisted entry") {
+    def pairDirs = thrivespark.Shared.keys(spark).collect {
+      case ("pairs", dir, _) => dir }
     Dedup.nearDupPairs(spark, sf0001, 0.6).count()
     Dedup.nearDupPairs(spark, sf001, 0.6).count()
-    val mine = Dedup.pairCacheKeys.filter(_._1 eq spark)
-    assert(mine.map(_._2) == Set(sf001),
+    val mine = pairDirs
+    assert(mine == Set(sf001),
       s"stale sf-dir entries survived the cycle: $mine")
     // cycling back re-computes (correctness over reuse) and evicts the other
     Dedup.nearDupPairs(spark, sf0001, 0.6).count()
-    val mine2 = Dedup.pairCacheKeys.filter(_._1 eq spark)
-    assert(mine2.map(_._2) == Set(sf0001), s"$mine2")
+    val mine2 = pairDirs
+    assert(mine2 == Set(sf0001), s"$mine2")
   }
 
   test("dedup_simhash equals brute-force hamming join at sf0.001") {

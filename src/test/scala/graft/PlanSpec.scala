@@ -643,4 +643,56 @@ class PlanSpec extends AnyFunSuite {
         || p.contains("BroadcastExchange"),
       s"expected the 1-row cross join of the two aggregates:\n$p")
   }
+
+  test("fn_xml: the from_xml projection stays above the Sort and its " +
+      "range Exchange (ADVICE r22 item 3)") {
+    // The sort keys on the raw primary key; parsing below the range
+    // exchange would make the sort's sampling pass evaluate the derived
+    // columns a second time. plans/r22/fn_xml_after.txt records the shape.
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val root = Registry.queries("fn_xml")(spark, sf0001).queryExecution
+      .executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def parsesXml(p: SparkPlan) =
+      p.expressions.exists(_.toString.contains("from_xml"))
+    val sort = root.collectFirst { case s: SortExec => s }
+      .getOrElse(fail(s"no Sort in fn_xml:\n$root"))
+    assert(sort.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }, s"the Sort must sit on a range Exchange:\n$root")
+    assert(!sort.exists(parsesXml), s"from_xml evaluated below the Sort:\n$root")
+    assert(root.exists(parsesXml), s"from_xml missing from the plan:\n$root")
+  }
+
+  test("spark.sql.extensions path: a GraftExtensions session has the SQL " +
+      "functions and the similarity-join rewrite with no Register call") {
+    import org.apache.spark.sql.SparkSession
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    val ext = try SparkSession.builder()
+        .withExtensions(new thrivespark.GraftExtensions).create()
+      finally {
+        active.foreach(SparkSession.setActiveSession)
+        default.foreach(SparkSession.setDefaultSession)
+      }
+    assert(!(ext eq spark), "the extension session must be a new session")
+    val d = ext.sql(
+      """SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)),
+        |               array(cast(3.0 as float), cast(4.0 as float)))""".stripMargin)
+      .collect()(0).getDouble(0)
+    assert(d == 11.0, s"vec_dot via extensions returned $d")
+    ext.read.parquet(s"$sf0001/embeddings.parquet").createOrReplaceTempView("emb")
+    val p = ext.sql(
+      """SELECT a.vec_id, b.vec_id FROM emb a JOIN emb b
+        |ON vec_dot(a.embedding, b.embedding) > 0.45 AND a.vec_id < b.vec_id"""
+        .stripMargin).queryExecution.executedPlan.toString
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"rewrite did not fire via extensions:\n$p")
+    assert(p.contains("__sim_bucket"), s"bucket key missing:\n$p")
+  }
 }

@@ -571,13 +571,13 @@ class PropertySpec extends AnyFunSuite {
     assert(segs("ac") == s"${D}a$D${D}c$D$D</w>$D") // untouched
   }
 
-  test("BPE training releases ALL BlockManager storage via bpeRelease " +
+  test("BPE training releases ALL BlockManager storage via Shared.free " +
       "(Dataset.unpersist alone leaks localCheckpoint blocks)") {
     // Dataset.unpersist only uncaches CacheManager entries; the iterative
     // trainers' localCheckpoints persist their internal RDDs directly, so
     // the loops release by RDD handle. This pins that the whole training
     // run — 3 iterations = 1 persist + 3 checkpoints — leaves ZERO extra
-    // persistent RDDs behind once the returned corpus is bpeRelease'd.
+    // persistent RDDs behind once the returned corpus is freed.
     import spark.implicits._
     val docs = Seq((1L, "a b a b c"), (2L, "a b a b")).toDF("doc_id", "text")
     val sc = spark.sparkContext
@@ -585,7 +585,7 @@ class PropertySpec extends AnyFunSuite {
     val (_, corpus) = thrivespark.ops.Text.bpeTrain(docs, 3)
     val during = sc.getPersistentRDDs.keySet -- before
     assert(during.nonEmpty, "training must have persisted something")
-    thrivespark.ops.Text.bpeRelease(corpus)
+    thrivespark.Shared.free(corpus)
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"training leaked persistent RDDs: $leaked")
   }

@@ -807,7 +807,7 @@ class ScaleStressSpec extends AnyFunSuite {
     def trained(d: org.apache.spark.sql.DataFrame) = {
       val t0 = System.nanoTime()
       val (m, vocab) = thrivespark.ops.Text.bpeCharTrain(d, 8)
-      thrivespark.ops.Text.bpeRelease(vocab)
+      thrivespark.Shared.free(vocab)
       (m, (System.nanoTime() - t0) / 1e9)
     }
     val (m1, w1) = trained(docs)
