@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   * kernels honor element nullability (the r18 advisory fix), a call site
   * that KNOWS its arrays are dense wraps them in known_dense to keep the
   * branch-free codegen loop — the per-element null-bit tests measured ~40%
-  * on the broadcast-verify join (sim_join_rewrite, 0.9 → 1.35 s at sf0.1).
+  * of sim_join_rewrite's 64-dim verify join at sf0.1 (r19).
   * Zero runtime cost: eval and codegen are the identity. The declaration
   * is trust, like KnownNotNull: a null element behind it is undefined
   * behavior at the consumer (an Unsafe array reads 0), which is exactly

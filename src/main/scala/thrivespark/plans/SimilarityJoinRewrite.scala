@@ -3,8 +3,9 @@ package thrivespark.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, HintInfo, Join, LogicalPlan, Project, SHUFFLE_MERGE}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
 import thrivespark.functions.VecDot
 
@@ -47,9 +48,15 @@ import thrivespark.functions.VecDot
   * expansion by 3, and paying 27× row fan-out for zero pruning turns the
   * degenerate one-bucket join into a 9× slowdown (measured at τ=0.45,
   * sf0.1: 25 s vs 2 s). In that k = 1 regime the packed key takes ~2
-  * values, so the equi-join would hash the whole pair space into one or
-  * two partitions — r22 spreads it with a deterministic P×Q salt grid
-  * (see saltSide) instead of extra projections.
+  * values, so the verify's parallelism has to come from the plan, not
+  * from the data: the rule always spreads it over a deterministic P×Q
+  * salt grid (see saltSide) and, unless the user's join names a strategy,
+  * pins the join to a shuffle merge.
+  *
+  * The rewritten join condition checks the user's cheap conjuncts (here
+  * `a_id < b_id`) before the vec_dot one, so And's short-circuit skips the
+  * kernel on every pair they reject; with a nondeterministic conjunct the
+  * user's order is kept.
   *
   * Precondition (the Similarity module's standing contract): vectors are
   * L2-normalized, so vec_dot ≡ cosine. The rule leaves joins that already
@@ -77,11 +84,11 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private val PackBase = 1L << 20
   private val PackOffset = PackBase / 2
 
-  /** Grid-salt side length for the degenerate (k = 1) regime — r22, guide
-    * §2.5 skew. Where buckets cannot prune, the packed key takes ~2 values
-    * (|⟨v,u⟩| ≤ 1 and w > 1 force every floor into {-1, 0}), so the
-    * equi-join hash-partitions the ENTIRE pair space into one or two tasks:
-    * a single-key skew no AQE skew split can break (one enormous key), plus
+  /** Grid-salt side length for the degenerate (k = 1) regime. Where
+    * buckets cannot prune, the packed key takes ~2 values (|⟨v,u⟩| ≤ 1 and
+    * w > 1 force every floor into {-1, 0}), so a plain equi-join
+    * hash-partitions the ENTIRE pair space into one or two tasks: a
+    * single-key skew no AQE skew split can break (one enormous key), plus
     * an SMJ that buffers a whole side per key. The fix is a P×Q salt grid:
     * each left row gets a deterministic salt i = pmod(xxhash64(vec), P) and
     * fans out its probe keys × Q (one per j); each right row gets
@@ -90,18 +97,21 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * unchanged while the pair-space work spreads over P·Q·buckets keys —
     * replication is √cells per side (vs ×cells for a one-sided salt).
     * Deterministic salts (hash of the vector, not rand()) keep task retries
-    * consistent (SPARK-38388). Cell count is conf-derived
-    * (thrivespark.simjoin.saltCells, default 4 × shuffle partitions; 0
-    * disables) — scale-adaptive, not a local-mode constant. */
-  val SaltCellsConf = "thrivespark.simjoin.saltCells"
-  private def saltSide(conf: org.apache.spark.sql.internal.SQLConf): Int = {
-    val default = 4 * conf.numShufflePartitions
-    val cells =
-      try conf.getConfString(SaltCellsConf, default.toString).toInt
-      catch { case _: NumberFormatException => default }
-    if (cells <= 1) 0
-    else math.min(1 << 10, math.ceil(math.sqrt(cells.toDouble)).toInt)
-  }
+    * consistent (SPARK-38388). The grid has ~4 × shuffle-partitions cells,
+    * so it scales with the cluster, not with a local-mode constant.
+    *
+    * Invariant: in this regime parallelism comes from the grid, never from
+    * the scan layout. The grid applies at every input size, and the join
+    * gets a shuffle-merge hint unless the user's join carries a strategy
+    * hint of its own. A size-based broadcast would plan the verify as a
+    * BroadcastHashJoin whose parallelism is the probe scan's partition
+    * count — one task when a side is a single row group, running the whole
+    * N² verify on one core. A user's hint is kept as given.
+    *
+    * Left as is: a global sort above the join (sim_join_rewrite's orderBy)
+    * samples its range bounds by running the whole verify a second time. */
+  private def saltSide(conf: SQLConf): Int =
+    math.min(1 << 10, math.ceil(math.sqrt(4.0 * conf.numShufflePartitions)).toInt)
 
   /** Deterministic seeded Gaussian directions, L2-normalized (‖u‖ = 1). */
   val probeVectors: Array[Array[Float]] = {
@@ -160,18 +170,8 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         val (la, rb, tau) = sim.get
         val w = width(tau)
         val k = projectionsFor(tau)
-        // Grid salt only where (a) buckets cannot prune (k = 1 — the packed
-        // key takes ~2 values, so a SHUFFLE join would hash the whole pair
-        // space into one or two partitions) AND (b) the join will actually
-        // shuffle: when either side's stats fit the broadcast threshold the
-        // planner builds a BroadcastHashJoin — no exchange on the probe
-        // side, so there is no skewed partition to split and the fan-out
-        // would be pure overhead (measured at sf0.1: salting the local BHJ
-        // cost 1.5-10×). This mirrors the planner's own broadcast decision.
-        val thr = conf.autoBroadcastJoinThreshold
-        val willBroadcast = thr > 0 &&
-          (right.stats.sizeInBytes <= thr || left.stats.sizeInBytes <= thr)
-        val salt = if (k == 1 && !willBroadcast) saltSide(conf) else 0
+        // grid salt exactly where buckets cannot prune (see saltSide)
+        val salt = if (k == 1) saltSide(conf) else 0
         val saltL = Literal(salt.toLong)
         // right side: one packed key per row; when salting, × P grid rows
         // via an exploded LITERAL index array (constant-folds to one array
@@ -233,8 +233,18 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
               sl.toAttribute), saltL), jAttr), "__sim_bucket_l")()
             (Project(left.output :+ lKey, g2), lKey.toAttribute)
         }
+        val verify =
+          if (conjuncts.forall(_.deterministic)) {
+            val (kernel, cheap) = conjuncts.partition(_.exists(_.isInstanceOf[VecDot]))
+            (cheap ++ kernel).reduceLeft(And)
+          } else cond
+        val userStrategy =
+          (hint.leftHint ++ hint.rightHint).exists(_.strategy.isDefined)
+        val newHint =
+          if (salt == 0 || userStrategy) hint
+          else hint.copy(leftHint = Some(HintInfo(strategy = Some(SHUFFLE_MERGE))))
         val newJoin = Join(leftG, rightB, Inner,
-          Some(And(EqualTo(lKeyAttr, rAttr), cond)), hint)
+          Some(And(EqualTo(lKeyAttr, rAttr), verify)), newHint)
         Project(j.output, newJoin)
       }
   }

@@ -128,23 +128,6 @@ object ProfR22 {
           time(s"above#$i")(noop(above))
         }
 
-      // sim_join_rewrite A/B under autoBroadcastJoinThreshold=-1 (the
-      // 100 TB planner's view, where the join shuffles): toggle the
-      // degenerate-bucket salt via the session conf the rule reads,
-      // same session, interleaved. With the default threshold the local
-      // plan is a BroadcastHashJoin and the salt (correctly) never fires.
-      case "ab_simjoin" =>
-        val key = "sim_join_rewrite"
-        val fn = thrivespark.Registry.queries(key)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        (1 to 4).foreach { i =>
-          spark.conf.set("thrivespark.simjoin.saltCells", "0")
-          time(s"smj-plain#$i")(noop(fn(spark, sfDir)))
-          spark.conf.unset("thrivespark.simjoin.saltCells")
-          time(s"smj-salted#$i")(noop(fn(spark, sfDir)))
-        }
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
       // Streaming decomposition (r21 verdict item 6): per micro-batch
       // durationMs breakdown (addBatch = plan+execute, getBatch/latestOffset
       // = source, walCommit/commitOffsets = checkpoint WAL, stateOperators
@@ -183,34 +166,6 @@ object ProfR22 {
             Thread.sleep(300)
             events.synchronized(events.foreach(println))
           }
-        }
-
-      // Dump sim_join_rewrite's formatted plan under threshold=-1 (the
-      // shuffle-join view where the salt fires), optionally executing
-      // first so the final AQE plan lands. args: explain_simjoin <outDir>
-      // <tag> <salt0|salted> [exec]
-      case "explain_simjoin" =>
-        val outDir = args(2); val tag = args(3)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        if (args(4) == "salt0") spark.conf.set("thrivespark.simjoin.saltCells", "0")
-        val df = thrivespark.Registry.queries("sim_join_rewrite")(spark, sfDir)
-        if (args.length > 5 && args(5) == "exec") { df.collect(): Unit }
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, s"sim_join_rewrite_$tag.txt"),
-          txt.getBytes("UTF-8"))
-        println(s"[explain] wrote $outDir/sim_join_rewrite_$tag.txt")
-
-      case "simjoin_scale" =>
-        val fn = thrivespark.Registry.queries("sim_join_rewrite")
-        (1 to 2).foreach { i =>
-          Seq(0, 4, 16, 64, 144).foreach { cells =>
-            spark.conf.set("thrivespark.simjoin.saltCells", cells.toString)
-            time(s"cells=$cells#$i")(noop(fn(spark, sfDir)))
-          }
-          spark.conf.unset("thrivespark.simjoin.saltCells")
         }
 
       case k =>

@@ -1,6 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThan, LessThan, Literal, Rand}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.functions._
 import thrivespark.Registry
 import thrivespark.ops.{Shingles, UdfSurface}
@@ -12,6 +16,42 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(key: String): String =
     Registry.queries(key)(spark, sf0001).queryExecution.executedPlan.toString
+
+  /** sf0001's (a_id, b_id) pairs with a_id < b_id and dot > τ, computed
+    * in plain Scala so no optimizer rule can touch it. */
+  private def bruteForcePairs(tau: Double): Set[(Long, Long)] = {
+    val vecs = thrivespark.Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    (for {
+      (ia, ea) <- vecs; (ib, eb) <- vecs if ia < ib
+      d = ea.zip(eb).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
+      if d > tau
+    } yield (ia, ib)).toSet
+  }
+
+  /** The naive similarity self-join on sf0001's embeddings, as a user
+    * writes it: `vec_dot(e_a, e_b) > τ AND a_id < b_id`. */
+  private def simSides: (DataFrame, DataFrame) = {
+    thrivespark.functions.Register(spark)
+    thrivespark.plans.SimilarityJoinRewrite.install(spark)
+    val emb = thrivespark.Tables.embeddings(spark, sf0001)
+    (emb.select(col("vec_id").as("a_id"), col("embedding").as("e_a")),
+     emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b")))
+  }
+  private def simCond(tau: Double) =
+    call_function("vec_dot", col("e_a"), col("e_b")) > tau && col("a_id") < col("b_id")
+
+  /** The join SimilarityJoinRewrite produced in df's optimized plan. */
+  private def rewrittenJoin(df: DataFrame): Join =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case j: Join if j.condition.exists(_.references.exists(_.name == "__sim_bucket_l")) => j
+    }.getOrElse(fail(s"no rewritten join in:\n${df.queryExecution.optimizedPlan}"))
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case c => Seq(c)
+  }
 
   test("join_broadcast plans a BroadcastHashJoin (no fact shuffle)") {
     assert(plan("join_broadcast").contains("BroadcastHashJoin"))
@@ -100,63 +140,100 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Generate"), s"probe expansion missing:\n$p")
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"), s"no equi-join:\n$p")
     // and the rewrite is exact: same pairs as a driver-side brute force
-    // (computed outside Spark so no optimizer rule can touch it)
-    val vecs = thrivespark.Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val naive = (for {
-      (ia, ea) <- vecs; (ib, eb) <- vecs if ia < ib
-      d = ea.zip(eb).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
-      if d > 0.45
-    } yield (ia, ib)).toSet
+    val naive = bruteForcePairs(0.45)
     val rewritten = Registry.queries("sim_join_rewrite")(spark, sf0001)
       .select(col("a_id"), col("b_id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rewritten == naive, s"lost=${naive.diff(rewritten)} extra=${rewritten.diff(naive)}")
   }
 
-  test("r22: sim_join_rewrite's degenerate bucket is grid-salted exactly " +
-      "when the join shuffles (threshold=-1), and the salted join is exact") {
-    // With the default broadcast threshold the local plan is a BHJ — no
-    // exchange on the probe side, no skewed partition to split — so the
-    // salt must NOT fire (measured: salting the BHJ cost 1.5-10×).
-    val p0 = plan("sim_join_rewrite")
-    assert(!p0.contains("__sim_salt"),
-      s"salt fired under a broadcastable join:\n$p0")
-    // Under threshold=-1 (the 100 TB planner's view: neither corpus side
-    // broadcasts) the τ=0.45 packed key takes ~2 values — a shuffle join
-    // would hash the whole pair space into 1-2 partitions. The rule must
-    // emit the P×Q salt grid: deterministic per-row salts on both sides,
-    // literal grid-index explodes, join key spread over P·Q·buckets values.
-    val bcast = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(bcast)
-    try {
-      spark.conf.set(bcast, "-1")
+  test("sim_join_rewrite's degenerate bucket is grid-salted into a shuffle join " +
+      "at the default threshold and at -1, and the salted join is exact") {
+    // At τ=0.45 buckets cannot prune (k = 1): the packed key takes ~2
+    // values, so the verify's parallelism must come from the P×Q salt
+    // grid at every input size. A size-based BroadcastHashJoin would run
+    // as many tasks as the probe scan has partitions (one for a
+    // one-row-group side), so the default threshold must give the same
+    // plan as threshold=-1 (the 100 TB planner's view): deterministic
+    // per-row salts on both sides and a shuffle join, never a broadcast.
+    val naive = bruteForcePairs(0.45)
+    def check(label: String): Unit = {
       val p = plan("sim_join_rewrite")
       assert(p.contains("__sim_salt_l") && p.contains("__sim_salt_r"),
-        s"expected the salt grid under threshold=-1:\n$p")
+        s"$label: expected the salt grid:\n$p")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"expected a shuffle join:\n$p")
+        s"$label: expected a shuffle join:\n$p")
+      assert(!p.contains("BroadcastHashJoin"), s"$label: the verify broadcast:\n$p")
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
       // exactness THROUGH the salted plan: same pairs as brute force
-      val vecs = thrivespark.Tables.embeddings(spark, sf0001)
-        .select(col("vec_id"), col("embedding"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      val naive = (for {
-        (ia, ea) <- vecs; (ib, eb) <- vecs if ia < ib
-        d = ea.zip(eb).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
-        if d > 0.45
-      } yield (ia, ib)).toSet
       val salted = Registry.queries("sim_join_rewrite")(spark, sf0001)
         .select(col("a_id"), col("b_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       assert(salted.length == naive.size,
-        s"salted join must emit each pair exactly once: ${salted.length} vs ${naive.size}")
+        s"$label: salted join must emit each pair exactly once: ${salted.length} vs ${naive.size}")
       assert(salted.toSet == naive,
-        s"lost=${naive.diff(salted.toSet)} extra=${salted.toSet.diff(naive)}")
+        s"$label: lost=${naive.diff(salted.toSet)} extra=${salted.toSet.diff(naive)}")
+    }
+    check("default threshold")
+    val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(bcast)
+    try {
+      spark.conf.set(bcast, "-1")
+      check("threshold=-1")
     } finally saved match {
       case Some(v) => spark.conf.set(bcast, v)
       case None    => spark.conf.unset(bcast)
     }
+  }
+
+  test("sim_join_rewrite: the rewritten join checks a_id < b_id before vec_dot") {
+    val j = rewrittenJoin(Registry.queries("sim_join_rewrite")(spark, sf0001))
+    val order = conjuncts(j.condition.get).collect {
+      case c if c.exists(_.isInstanceOf[thrivespark.functions.VecDot]) => "vec_dot"
+      case c: LessThan if c.references.map(_.name).toSet == Set("a_id", "b_id") => "a_id<b_id"
+    }
+    assert(order == Seq("a_id<b_id", "vec_dot"), s"verify order $order in ${j.condition.get}")
+  }
+
+  test("SimilarityJoinRewrite keeps the user's conjunct order when one is nondeterministic") {
+    // the analyzer rejects nondeterministic join conditions from the
+    // DataFrame API, so the rule is applied to a hand-built join
+    val (a, b) = simSides
+    val (la, lb) = (a.queryExecution.analyzed, b.queryExecution.analyzed)
+    def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n).get
+    val userCond = And(And(
+      GreaterThan(thrivespark.functions.VecDot(attr(la, "e_a"), attr(lb, "e_b")), Literal(0.45)),
+      LessThan(Rand(Literal(7L)), Literal(2.0))),
+      LessThan(attr(la, "a_id"), attr(lb, "b_id")))
+    val out = thrivespark.plans.SimilarityJoinRewrite(
+      Join(la, lb, Inner, Some(userCond), JoinHint.NONE))
+    val j = out.collectFirst { case j: Join => j }.get
+    assert(conjuncts(j.condition.get).tail == conjuncts(userCond),
+      s"user order not kept: ${j.condition.get}")
+  }
+
+  test("SimilarityJoinRewrite keeps a user's broadcast hint on the salted join") {
+    val (a, b) = simSides
+    val df = a.join(broadcast(b), simCond(0.45))
+    val j = rewrittenJoin(df)
+    assert(j.hint.rightHint.flatMap(_.strategy).contains(BROADCAST), s"hint lost: ${j.hint}")
+    assert(j.hint.leftHint.flatMap(_.strategy).isEmpty, s"strategy added: ${j.hint}")
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("__sim_salt_l"), s"expected the salt grid:\n$p")
+    assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
+      s"expected the hinted broadcast:\n$p")
+    assert(df.count() == bruteForcePairs(0.45).size)
+  }
+
+  test("SimilarityJoinRewrite: τ=0.99 (k = 3) gets no salt and no added hint") {
+    val (a, b) = simSides
+    val df = a.join(b, simCond(0.99))
+    val j = rewrittenJoin(df)
+    assert(j.hint == JoinHint.NONE, s"hint added: ${j.hint}")
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("__sim_salt"), s"salt fired where buckets prune:\n$p")
+    val pairs = df.select(col("a_id"), col("b_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == bruteForcePairs(0.99))
   }
 
   test("multi-projection blocking: prunes below single-projection in the " +
@@ -694,5 +771,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"rewrite did not fire via extensions:\n$p")
     assert(p.contains("__sim_bucket"), s"bucket key missing:\n$p")
+    // the same degenerate-regime plan as install(): the salt grid
+    assert(p.contains("__sim_salt_l"), s"salt grid missing:\n$p")
   }
 }
