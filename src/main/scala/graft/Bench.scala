@@ -354,12 +354,14 @@ object Bench {
       // checkpoint IO) class-loads on first use — ~5 s that belongs to JVM
       // startup, not to whichever stream_* query happens to run first
       val cp = thrivespark.Scratch.dir("warm_cp")
-      val q = spark.readStream.schema(w.schema).parquet(tmp)
-        .groupBy(col("k")).agg(count(lit(1)))
-        .writeStream.outputMode("update").format("memory")
-        .queryName("graft_warmup_stream")
-        .option("checkpointLocation", cp).start()
-      q.processAllAvailable(); q.stop()
+      thrivespark.streaming.StreamRunner.withStreamConf(spark, cp) {
+        val q = spark.readStream.schema(w.schema).parquet(tmp)
+          .groupBy(col("k")).agg(count(lit(1)))
+          .writeStream.outputMode("update").format("memory")
+          .queryName("graft_warmup_stream")
+          .option("checkpointLocation", cp).start()
+        q.processAllAvailable(); q.stop()
+      }
     }
     // Calibrate AFTER warmup (so the probes measure the box, not JIT) and
     // again after the suite: contamination arriving mid-run is caught too.

@@ -20,12 +20,12 @@ object QueryGuard {
   def timed[A](spark: SparkSession, name: String, timeoutSec: Long)(
       f: => A): Either[String, A] = {
     val group = s"guard_$name"
-    // ops (StreamRunner.withStatePartitions) mutate this session conf with
-    // a worker-thread finally; if the worker is abandoned below, that
+    // ops (StreamRunner.withStreamConf) mutate these session conf keys
+    // with a worker-thread finally; if the worker is abandoned below, that
     // restore may never run (or fire asynchronously mid-flight during a
-    // LATER query) — snapshot here so the caller thread can restore it
-    val shufKey = "spark.sql.shuffle.partitions"
-    val shufPrev = spark.conf.get(shufKey)
+    // LATER query) — snapshot here so the caller thread can restore them
+    val confPrev = thrivespark.streaming.StreamRunner.ScopedConfKeys
+      .map(k => k -> spark.conf.getOption(k))
     @volatile var out: Either[String, A] = Left("did not run")
     @volatile var fatal: Throwable = null
     val th = new Thread(() => {
@@ -55,7 +55,7 @@ object QueryGuard {
       spark.streams.active.foreach(q => scala.util.Try(q.stop()))
       th.interrupt()
       th.join(5000)
-      spark.conf.set(shufKey, shufPrev)
+      thrivespark.streaming.StreamRunner.restoreConf(spark, confPrev)
       Left(s"timed out after ${timeoutSec}s (jobs cancelled)")
     }
   }

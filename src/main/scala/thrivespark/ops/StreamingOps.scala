@@ -635,15 +635,25 @@ object StreamingOps {
   /** Stage events (µs timestamps) once per sf as a multi-file stream source.
     * Files are hash-split, so each spans the full ts range — batch 2 carries
     * events older than batch 1's watermark, which is exactly what
-    * stream_watermark_late needs to exercise late-drop. */
-  private def stageDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    * stream_watermark_late needs to exercise late-drop.
+    *
+    * The two halves (pmod(xxhash64(event_id), 2) = 0, then = 1) are written
+    * by two SEQUENTIAL jobs. The file source replays files in modification
+    * time order; when one parallel job wrote both files, which half became
+    * batch 0 varied from run to run, and with it which rows arrived late
+    * and whether a trailing no-data batch ran (2 vs 3 batches). */
+  def stageDir(s: org.apache.spark.sql.SparkSession, d: String): String = {   // public: StreamingSpec pins it
     val dir = s"/tmp/graft_stream_stage_${tag(d)}"
-    val fp = srcFingerprint(d, "events")
+    // the suffix versions the staging rule: a stage written by an older
+    // rule is rebuilt, not served
+    val fp = srcFingerprint(d, "events") + "|hash2-seq-v1"
     // two files = two micro-batches: enough to exercise cross-batch state
     // while keeping per-batch checkpoint overhead out of the benchmark
     if (!stageFresh(dir, fp)) {
-      thrivespark.Tables.events(s, d).repartition(2)
-        .write.mode("overwrite").parquet(dir)
+      val ev = thrivespark.Tables.events(s, d)
+      val half = pmod(xxhash64(col("event_id")), lit(2))
+      ev.filter(half === 0).coalesce(1).write.mode("overwrite").parquet(dir)
+      ev.filter(half === 1).coalesce(1).write.mode("append").parquet(dir)
       markStaged(dir, fp)
     }
     dir

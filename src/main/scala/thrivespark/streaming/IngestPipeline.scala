@@ -26,7 +26,8 @@ object IngestPipeline {
   /** Start the pipeline; caller awaits/produces via the returned handle. */
   def start(spark: SparkSession, srcDir: String, rawSchema: StructType,
       specs: Seq[ColumnSpec], dateCol: String, sinkDir: String,
-      quarantineDir: String, checkpoint: String): StreamingQuery = {
+      quarantineDir: String, checkpoint: String): StreamingQuery =
+      StreamRunner.withStreamConf(spark, checkpoint) {
     val raw = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
       .json(srcDir)

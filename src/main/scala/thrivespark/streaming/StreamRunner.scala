@@ -13,26 +13,85 @@ import org.apache.spark.sql.functions._
   * shuffle is keyed by the aggregation key exactly as in batch. */
 object StreamRunner {
 
-  /** Streaming state is partitioned by `spark.sql.shuffle.partitions` at the
-    * stream's FIRST start and pinned in the checkpoint thereafter. Size it to
-    * the stream's key cardinality, not the batch-side default: every extra
-    * partition is an extra state-store instance committed per micro-batch
-    * (32 → 32 HDFS-state commits per batch here, dominated by fs overhead).
-    * On a real cluster with millions of keys you would raise it; these demo
-    * streams carry a handful of keys. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+  /** Spark's own key for the class that writes checkpoint files atomically. */
+  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  val LocalCheckpointManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  /** Every session conf key `withStreamConf` may set. QueryGuard snapshots
+    * and restores exactly these when it abandons an op mid-flight. */
+  val ScopedConfKeys: Seq[String] = Seq(ShufflePartitionsKey, CheckpointManagerKey)
+
+  /** A checkpoint is local when its scheme is `file`, or it has none and
+    * the default filesystem is local. */
+  private def isLocalCheckpoint(spark: SparkSession, checkpoint: String): Boolean = {
+    val scheme = Option(new org.apache.hadoop.fs.Path(checkpoint).toUri.getScheme)
+      .getOrElse(org.apache.hadoop.fs.FileSystem
+        .getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    scheme == "file"
   }
+
+  /** Sets each `(key, value)` on the session for the duration of `f` and
+    * puts back what was there before, unsetting keys that were unset. */
+  private def withConf[A](spark: SparkSession, sets: Seq[(String, String)])(f: => A): A = {
+    val prev = sets.map { case (k, _) => k -> spark.conf.getOption(k) }
+    sets.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally restoreConf(spark, prev)
+  }
+
+  /** Puts back a `(key, previous value)` snapshot; `None` unsets the key. */
+  def restoreConf(spark: SparkSession, prev: Seq[(String, Option[String])]): Unit =
+    prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+
+  /** The one scope every streaming query this engine starts runs in.
+    *
+    * Checkpoint manager. For a local checkpoint the scope selects Spark's
+    * `FileSystemBasedCheckpointFileManager` instead of the default
+    * `FileContextBasedCheckpointFileManager`. The default commits each
+    * checkpoint file (offset and commit log entries, state-store deltas
+    * and snapshots) with `AbstractFileSystem.renameInternal`, which calls
+    * `getFileLinkStatus`; without the native Hadoop library, Hadoop 3.4's
+    * `FileUtil.readLink` forks a `readlink` process for that, about 2 ms
+    * per fork and exec. A JFR recording of one `stream_ingest` run
+    * (perfbench, 4 cores) held about 2,500 such forks, all from
+    * `RenameBasedFSDataOutputStream.close`. The FileSystem-based manager
+    * commits with `rename(2)`, which is atomic on a local POSIX
+    * filesystem, still refuses to overwrite an existing metadata-log
+    * batch, and is still wrapped by Spark's `ChecksumCheckpointFileManager`,
+    * so checkpoint checksums stay on. Any other scheme (HDFS, object
+    * stores) keeps Spark's default.
+    *
+    * State partitions. Streaming state is partitioned by
+    * `spark.sql.shuffle.partitions` at the stream's FIRST start and pinned
+    * in the checkpoint thereafter. Size it to the stream's key
+    * cardinality, not the batch-side default: every extra partition is an
+    * extra state-store instance committed per micro-batch (32 → 32
+    * HDFS-state commits per batch here, dominated by fs overhead). On a real
+    * cluster with millions of keys you would raise it; these demo streams
+    * carry a handful of keys. `None` leaves it alone (stateless streams).
+    *
+    * Both keys are session conf. A query fixes its checkpoint manager at
+    * `start()` (its offset and commit logs, opened later on the stream
+    * thread, still get the manager in force then), so a caller that keeps
+    * the handle (IngestPipeline) needs only `start()` inside the scope; the
+    * entry points here drain their query inside it. The previous values
+    * come back on exit, normal or not. */
+  def withStreamConf[A](spark: SparkSession, checkpoint: String,
+      statePartitions: Option[Int] = None)(f: => A): A =
+    withConf(spark,
+      statePartitions.map(n => ShufflePartitionsKey -> n.toString).toSeq ++
+        (if (isLocalCheckpoint(spark, checkpoint))
+          Seq(CheckpointManagerKey -> LocalCheckpointManager) else Nil))(f)
 
   /** #58: 1-hour tumbling counts with a 10-minute watermark; rows later than
     * the watermark are dropped from the aggregate. Returns the materialized
     * result after processing all available files in `srcDir`. */
   def tumblingWithWatermark(spark: SparkSession, srcDir: String,
       checkpoint: String, queryName: String): DataFrame =
-      withStatePartitions(spark, 4) {
+      withStreamConf(spark, checkpoint, Some(4)) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -68,7 +127,7 @@ object StreamRunner {
     * that windowed aggregation can't express. */
   def userStateCounts(spark: SparkSession, srcDir: String,
       checkpoint: String, queryName: String): DataFrame =
-      withStatePartitions(spark, 4) {
+      withStreamConf(spark, checkpoint, Some(4)) {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val schema = spark.read.parquet(srcDir).schema
@@ -132,7 +191,7 @@ object StreamRunner {
       // partition per micro-batch (keyed left/right + key-to-numValues
       // each side), so partition count is 2× the commit lever it is for
       // single-store aggs; 15 users of state don't need more parallelism
-      withStatePartitions(spark, 2) {
+      withStreamConf(spark, checkpoint, Some(2)) {
     val schema = spark.read.parquet(srcDir).schema
     def src() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -177,7 +236,7 @@ object StreamRunner {
     * Returns total input rows consumed by this invocation; a second run on
     * the same checkpoint with no new files must consume 0. */
   def availableNowRun(spark: SparkSession, srcDir: String, checkpoint: String,
-      queryName: String): Long = withStatePartitions(spark, 4) {
+      queryName: String): Long = withStreamConf(spark, checkpoint, Some(4)) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -187,10 +246,7 @@ object StreamRunner {
     // numRecentProgressUpdates (default 100) — with maxFilesPerTrigger=1 a
     // source holding >100 files would silently undercount the
     // rows-consumed contract; raise the cap for this run (restored after)
-    val key = "spark.sql.streaming.numRecentProgressUpdates"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "100000")
-    try {
+    withConf(spark, Seq("spark.sql.streaming.numRecentProgressUpdates" -> "100000")) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -200,7 +256,7 @@ object StreamRunner {
         .start()
       q.awaitTermination()
       q.recentProgress.map(_.numInputRows).sum
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   /** Streaming CDC apply (foreachBatch upsert sink): treat each event as an
@@ -212,7 +268,7 @@ object StreamRunner {
     * stand-in for a transactional MERGE INTO; at scale the state table is
     * key-partitioned and the swap is a table-format commit. */
   def cdcApply(spark: SparkSession, srcDir: String, checkpoint: String,
-      stateDir: String): DataFrame = withStatePartitions(spark, 4) {
+      stateDir: String): DataFrame = withStreamConf(spark, checkpoint, Some(4)) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -269,7 +325,8 @@ object StreamRunner {
     * guarantee independent of batch boundaries, which is what makes this
     * streaming op fully oracleable by text_substring_exact's SQL. */
   def substringIndexStream(spark: SparkSession, srcDir: String,
-      checkpoint: String, indexDir: String, reportDir: String): DataFrame = {
+      checkpoint: String, indexDir: String, reportDir: String): DataFrame =
+      withStreamConf(spark, checkpoint) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -340,7 +397,7 @@ object StreamRunner {
     * centroids — which is the oracle, and StreamingSpec replays the same
     * corpus at different staging splits to pin boundary-independence. */
   def annIngestStream(spark: SparkSession, srcDir: String, checkpoint: String,
-      centDir: String, idxDir: String): DataFrame = {
+      centDir: String, idxDir: String): DataFrame = withStreamConf(spark, checkpoint) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -383,7 +440,8 @@ object StreamRunner {
     * so the union of batch results equals the one-shot probe of every
     * query — sim_ann_ivf's oracle, verbatim. */
   def annQueryStream(spark: SparkSession, srcDir: String, checkpoint: String,
-      centDir: String, idxDir: String, outDir: String): DataFrame = {
+      centDir: String, idxDir: String, outDir: String): DataFrame =
+      withStreamConf(spark, checkpoint) {
     // srcDir IS the request feed (the staged query slice) — each staged
     // file is one micro-batch of retrieval requests
     val schema = spark.read.parquet(srcDir).schema
@@ -436,7 +494,8 @@ object StreamRunner {
     * and deterministic, the sink contents equal the one-shot batch decode
     * exactly, whatever the batch boundaries — which is the oracle. */
   def decodeMediaAvailableNow(spark: SparkSession, srcDir: String,
-      outDir: String, checkpoint: String, queryName: String): DataFrame = {
+      outDir: String, checkpoint: String, queryName: String): DataFrame =
+      withStreamConf(spark, checkpoint) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -457,7 +516,7 @@ object StreamRunner {
   /** #59: stateful streaming dedup on event_id across micro-batches. */
   def dedupWithinWatermark(spark: SparkSession, srcDir: String,
       checkpoint: String, queryName: String): DataFrame =
-      withStatePartitions(spark, 4) {
+      withStreamConf(spark, checkpoint, Some(4)) {
     val schema = spark.read.parquet(srcDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -487,7 +546,8 @@ object StreamRunner {
     * hundred bytes big. priorMicros is the 1-row trained prior, passed as a
     * literal. */
   def scoreDocsStream(spark: SparkSession, srcDir: String, checkpoint: String,
-      weights: DataFrame, priorMicros: Long, queryName: String): DataFrame = {
+      weights: DataFrame, priorMicros: Long, queryName: String): DataFrame =
+      withStreamConf(spark, checkpoint) {
     val schema = spark.read.parquet(srcDir).schema
     // no maxFilesPerTrigger: scoring is stateless per-row work, so batch
     // boundaries cannot affect results — one trigger avoids paying the

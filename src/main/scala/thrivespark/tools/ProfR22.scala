@@ -128,46 +128,6 @@ object ProfR22 {
           time(s"above#$i")(noop(above))
         }
 
-      // Streaming decomposition (r21 verdict item 6): per micro-batch
-      // durationMs breakdown (addBatch = plan+execute, getBatch/latestOffset
-      // = source, walCommit/commitOffsets = checkpoint WAL, stateOperators
-      // commit times) for the named streaming keys, plus the op's total
-      // wall. The readout (memory/parquet sort) is wall − Σ batch work.
-      case "stream_decomp" =>
-        val keys = if (args.length > 2) args.drop(2).toSeq
-          else Seq("stream_substring_index", "stream_stream_join")
-        val events = scala.collection.mutable.ArrayBuffer.empty[String]
-        spark.streams.addListener(
-          new org.apache.spark.sql.streaming.StreamingQueryListener {
-            import org.apache.spark.sql.streaming.StreamingQueryListener._
-            override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-            override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-            override def onQueryProgress(e: QueryProgressEvent): Unit =
-              events.synchronized {
-                val p = e.progress
-                val dur = p.durationMs
-                val st = p.stateOperators.map(s =>
-                  s"${s.operatorName}:commit=${s.allUpdatesTimeMs}+${s.commitTimeMs}ms rows=${s.numRowsTotal}")
-                  .mkString(" | ")
-                events += f"[batch ${p.batchId}%3d ${p.name}] " +
-                  s"trigger=${dur.get("triggerExecution")}ms " +
-                  s"addBatch=${dur.getOrDefault("addBatch", -1L)}ms " +
-                  s"getBatch=${dur.getOrDefault("getBatch", -1L)}ms " +
-                  s"latestOffset=${dur.getOrDefault("latestOffset", -1L)}ms " +
-                  s"walCommit=${dur.getOrDefault("walCommit", -1L)}ms " +
-                  s"commitOffsets=${dur.getOrDefault("commitOffsets", -1L)}ms " +
-                  s"state[$st]"
-              }
-          })
-        keys.foreach { key =>
-          (1 to 2).foreach { i =>
-            events.synchronized(events.clear())
-            time(s"$key#$i")(noop(thrivespark.Registry.queries(key)(spark, sfDir)))
-            Thread.sleep(300)
-            events.synchronized(events.foreach(println))
-          }
-        }
-
       case k =>
         (1 to 3).foreach(i =>
           time(s"$k#$i")(noop(thrivespark.Registry.queries(k)(spark, sfDir))))

@@ -458,4 +458,31 @@ class BenchSpec extends AnyFunSuite {
     assert(waited < 30, s"guard took $waited s to give up")
     assert(spark.range(5).count() == 5, "session unusable after cancellation")
   }
+
+  test("QueryGuard restores every key StreamRunner.withStreamConf sets when " +
+      "it abandons a timed-out op") {
+    import java.util.concurrent.CountDownLatch
+    import thrivespark.streaming.StreamRunner
+    val spark = SparkTestBase.spark
+    def snapshot() = StreamRunner.ScopedConfKeys.map(k => k -> spark.conf.getOption(k))
+    val before = snapshot()
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    try {
+      val r = QueryGuard.timed(spark, "scoped_hang", 1L) {
+        StreamRunner.withStreamConf(spark, "/tmp/graft_guard_cp", Some(3)) {
+          entered.countDown()
+          // deaf to the guard's interrupt, so the wrapper's own finally
+          // cannot be what puts the keys back
+          var done = false
+          while (!done)
+            try { release.await(); done = true }
+            catch { case _: InterruptedException => () }
+        }
+      }
+      assert(entered.getCount == 0, "the op never entered the wrapper")
+      assert(r.swap.exists(_.startsWith("timed out")), s"got $r")
+      assert(snapshot() == before, s"conf after the timeout ${snapshot()} != $before")
+    } finally release.countDown()
+  }
 }

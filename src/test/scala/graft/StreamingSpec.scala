@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import thrivespark.streaming.StreamRunner
 import thrivespark.{Registry, Tables}
 
@@ -445,5 +446,122 @@ class StreamingSpec extends AnyFunSuite {
       assert(StreamingOps.srcFingerprint(root.getPath, "d") != fpDeep1,
         "a depth-capped walk must read always-stale, never trust dir mtime")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(root): Unit
+  }
+
+  test("withStreamConf: a local checkpoint runs on Spark's FileSystem-based " +
+      "manager, a non-local one keeps the default, and the previous values " +
+      "come back on exit and on an exception") {
+    val key = StreamRunner.CheckpointManagerKey
+    val shuf = "spark.sql.shuffle.partitions"
+    val shufBefore = spark.conf.get(shuf)
+    assert(spark.conf.getOption(key).isEmpty, "the suite starts on Spark's default")
+    Seq("/tmp/graft_cp_scope", "file:///tmp/graft_cp_scope").foreach { cp =>
+      StreamRunner.withStreamConf(spark, cp, Some(3)) {
+        assert(spark.conf.getOption(key).contains(StreamRunner.LocalCheckpointManager), cp)
+        assert(spark.conf.get(shuf) == "3")
+      }
+      assert(spark.conf.getOption(key).isEmpty && spark.conf.get(shuf) == shufBefore)
+    }
+    // a conf check only: no query is started against the namenode
+    StreamRunner.withStreamConf(spark, "hdfs://nn/cp") {
+      assert(spark.conf.getOption(key).isEmpty, "hdfs must keep Spark's default")
+      assert(spark.conf.get(shuf) == shufBefore, "no state-partition scope asked for")
+    }
+    // a value the session already had comes back after an exception, and
+    // a non-local checkpoint leaves it in force
+    val pinned =
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    spark.conf.set(key, pinned)
+    try {
+      intercept[IllegalStateException] {
+        StreamRunner.withStreamConf(spark, "/tmp/graft_cp_scope", Some(3)) {
+          assert(spark.conf.getOption(key).contains(StreamRunner.LocalCheckpointManager))
+          throw new IllegalStateException("op failed mid-stream")
+        }
+      }
+      assert(spark.conf.getOption(key).contains(pinned) && spark.conf.get(shuf) == shufBefore)
+      StreamRunner.withStreamConf(spark, "hdfs://nn/cp") {
+        assert(spark.conf.getOption(key).contains(pinned))
+      }
+    } finally spark.conf.unset(key)
+  }
+
+  test("stream_stream_join replay on a local checkpoint keeps checkpoint " +
+      "checksums and equals the batch join; a second availableNowRun on the " +
+      "same checkpoint consumes 0 rows") {
+    import org.apache.commons.io.FileUtils
+    // time-ordered files, written sequentially: no row arrives late
+    val ev = Tables.events(spark, sf0001)
+    val cut = ev.agg(expr("timestamp_micros((min(unix_micros(ts)) + " +
+      "max(unix_micros(ts))) div 2)")).head().getTimestamp(0)
+    val src = Files.createTempDirectory("graft_ssj_cs_src").toString
+    ev.filter(col("ts") < lit(cut)).coalesce(1).write.mode("overwrite").parquet(src)
+    ev.filter(col("ts") >= lit(cut)).coalesce(1).write.mode("append").parquet(src)
+    val cp = Files.createTempDirectory("graft_ssj_cs_cp").toString
+    val streamed = StreamRunner.viewPurchaseJoin(spark, src, cp, "t_ssj_cs")
+    val v = ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("ts").as("vt"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("pu"), col("ts").as("pt"))
+    val batch = v.join(p, expr("user_id = pu AND pt > vt AND pt <= vt + INTERVAL 1 HOUR"))
+      .select(col("user_id"), unix_micros(col("vt")).as("view_us"),
+        unix_micros(col("pt")).as("purchase_us"))
+    assert(batch.count() > 0, "fixture must have view→purchase pairs")
+    assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0,
+      "streamed join differs from the batch interval join")
+    val files = FileUtils.listFiles(new java.io.File(cp), null, true).asScala.toSeq
+    def has(f: java.io.File, name: String) = new java.io.File(f.getParentFile, name).exists()
+    // Spark's ChecksumCheckpointFileManager writes <file>.crc beside every
+    // state-store delta; the offset log keeps the filesystem's .<file>.crc
+    val deltas = files.filter(_.getName.endsWith(".delta"))
+    assert(deltas.nonEmpty, s"no state files under $cp")
+    assert(deltas.forall(f => has(f, f.getName + ".crc")),
+      s"state files without a checkpoint checksum: ${deltas.filterNot(f => has(f, f.getName + ".crc"))}")
+    val offsets = files.filter(f => f.getParentFile.getName == "offsets" &&
+      f.getName.forall(_.isDigit))
+    assert(offsets.size >= 2 && offsets.forall(f => has(f, s".${f.getName}.crc")),
+      s"offset files without a checksum: $offsets")
+    // resume on the same local checkpoint: nothing new, nothing consumed
+    val an = Files.createTempDirectory("graft_an_cs").toString
+    val r1 = StreamRunner.availableNowRun(spark, src, s"$an/cp", "t_an_cs")
+    assert(r1 == ev.count(), s"run 1 consumed $r1")
+    val r2 = StreamRunner.availableNowRun(spark, src, s"$an/cp", "t_an_cs")
+    assert(r2 == 0, s"run 2 consumed $r2 rows from an unchanged source")
+  }
+
+  test("stream_watermark_late: two fresh stagings replay to identical " +
+      "output with the same batch count") {
+    import thrivespark.ops.StreamingOps
+    def replay(i: Int): (Seq[(Long, String, Long)], Int) = {
+      val stage = StreamingOps.stageDir(spark, sf0001)
+      val cp = Files.createTempDirectory("graft_cp_wm_det").toString
+      val rows = StreamRunner.tumblingWithWatermark(spark, stage, cp, s"t_wm_det_$i")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+      val batches = new java.io.File(cp, "commits").list().count(_.forall(_.isDigit))
+      // the next call finds no stage and writes a fresh one
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
+      (rows, batches)
+    }
+    val (rows1, batches1) = replay(1)
+    val (rows2, batches2) = replay(2)
+    assert(rows1.nonEmpty)
+    assert(batches1 == batches2, s"batch count moved: $batches1 vs $batches2")
+    assert(rows1 == rows2, s"replay output moved between stagings " +
+      s"(${rows1.size} vs ${rows2.size} rows)")
+  }
+
+  test("every source file that starts a streaming query does so inside " +
+      "StreamRunner.withStreamConf") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val missing = try {
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter { f =>
+          val text = new String(Files.readAllBytes(f), "UTF-8")
+          text.contains(".writeStream") && !text.contains("withStreamConf(")
+        }.toList
+    } finally walk.close()
+    assert(missing.isEmpty, s"streaming queries started outside withStreamConf: $missing")
   }
 }
