@@ -2,20 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
-  /** Content-addressed staging the ops re-create only when absent
-    * (deterministic data, keyed by sf): deleting these forces every run to
-    * re-stage, paying avoidable write I/O — preserve them. Everything else
-    * under /tmp/graft_* is per-run ephemera (checkpoints, sinks, scratch). */
-  private val DurableStagePrefixes = Seq(
-    // exact current stage-dir families (graft_stream_stage_<sfTag> and
-    // graft_stream_stage_flush_<sfTag>), NOT the bare graft_stream_stage
-    // prefix: r7's broad prefix permanently shielded orphaned dirs of
-    // removed stagings (e.g. the old _ord_ variant) from the sweep
-    "graft_stream_stage_sf", "graft_stream_stage_flush_sf",
-    "graft_stream_stage_docs_sf", "graft_stream_stage_emb_sf",
-    "graft_stream_stage_annidx_sf", "graft_stream_stage_annq_sf",
-    "graft_bucketed", "graft_badcsv_", "graft_dpp_")
-
   /** Stale sink/scratch dirs from earlier runs (r5 judge counted 151) sit on
     * the same disk the benchmark writes to and inflate filesystem listing +
     * overwrite costs. Reclaim them before timing — but only entries that are
@@ -37,7 +23,8 @@ object Bench {
     def staleUnder(dir: java.io.File, nameFilter: String => Boolean) =
       Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(f => nameFilter(f.getName))
-        .filterNot(f => DurableStagePrefixes.exists(f.getName.startsWith))
+        // durable stages are re-created only when stale; keep them
+        .filterNot(_.getName.startsWith(thrivespark.DurableStage.Prefix))
         .filter(f => now - lastActivity(f) > StaleAfterMs)
     // legacy root-level entries + the single ephemeral parent's children
     // (Scratch.dir puts all per-run checkpoints/sinks under graft_eph so

@@ -2,8 +2,7 @@ package thrivespark
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import thrivespark.functions.{KnownDense, LshBandKeys, MinHashSignature, ShingleHashes, SimHash64, VecDot, VecDotLong}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: makes the engine's custom Catalyst
   * expressions first-class SQL functions — and its optimizer rule and
@@ -20,27 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "scala_udf")
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "dot product of two float vectors in double"),
-      (es: Seq[Expression]) => VecDot(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("known_dense"),
-      info("known_dense", "identity re-typing an array as element-non-null (trusted density contract)"),
-      (es: Seq[Expression]) => KnownDense(es.head)))
-    e.injectFunction((FunctionIdentifier("vec_dot_long"),
-      info("vec_dot_long", "exact integer dot product of two bigint vectors"),
-      (es: Seq[Expression]) => VecDotLong(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "32-perm minhash signature of pre-hashed shingles"),
-      (es: Seq[Expression]) => MinHashSignature(es.head, 32)))
-    e.injectFunction((FunctionIdentifier("lsh_band_keys"),
-      info("lsh_band_keys", "fused minhash + LSH banding band keys"),
-      (es: Seq[Expression]) => LshBandKeys(es.head, 16, 2)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "64-bit simhash of pre-hashed tokens"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "distinct word-3-gram shingle hashes of a token array"),
-      (es: Seq[Expression]) => ShingleHashes(es.head, 3)))
+    functions.Register.Functions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name), info(name, usage), build))
+    }
     // whole-plan surface: the naive-similarity-join rewrite and the as-of
     // merge operator, so extension-configured sessions get the same plans
     // as install()-wired ones

@@ -46,9 +46,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * derivation — the contract Spark's own `df.cache()` carries for
   * path-stable rewrites. A long-lived session that mutates its inputs
   * calls `release` between data generations. Bench/Verify sessions read
-  * one static corpus per session; the streaming stagings, which re-read
+  * one static corpus per session; the durable stages, which re-read
   * paths across sessions, carry their own source fingerprint
-  * (StreamingOps.srcFingerprint). */
+  * (DurableStage.srcFingerprint). */
 object Shared {
   private val entries =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, Any), Any]

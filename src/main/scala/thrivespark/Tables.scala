@@ -59,11 +59,10 @@ object Tables {
   // branch-free loop.
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
-  // (r22, ADVICE) the r21 fanOut dead-end helper moved to the ProfR21
-  // scratch profiler — its only caller. The production namespace must not
-  // export a known-loss primitive (and df.rdd.getNumPartitions both forces
-  // a separate physical planning pass and reads a pre-AQE partition count).
-  // The measurement note lives with the helper in ProfR21 and in
+  // (r22, ADVICE) the r21 fanOut dead-end helper is gone: the production
+  // namespace must not export a known-loss primitive (and
+  // df.rdd.getNumPartitions both forces a separate physical planning pass
+  // and reads a pre-AQE partition count). The measurement note lives in
   // OPTIMIZATION_r21.md "Measured dead ends".
 
   // Parsed-props projection, persisted per (session, sf): the JSON parse of

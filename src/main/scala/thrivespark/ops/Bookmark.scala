@@ -1,6 +1,6 @@
 package thrivespark.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,8 +27,7 @@ object Bookmark {
     Files.createDirectories(p.getParent)
     val tmp = Paths.get(path + ".tmp")
     Files.write(tmp, value.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING) // atomic commit, Thrive-style
+    thrivespark.DurableStage.swap(tmp, p) // atomic commit, Thrive-style
   }
 
   /** Incremental load: read `events`-shaped input, keep only partitions

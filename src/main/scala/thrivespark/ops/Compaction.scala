@@ -1,6 +1,6 @@
 package thrivespark.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
@@ -17,13 +17,12 @@ import org.apache.spark.sql.SparkSession
   * the dataset's observed bytes/row).
   *
   * At cluster scale the swap is a metastore location flip or a manifest
-  * commit; the local implementation uses two directory renames with the
-  * same write-then-swap ordering. Each rename is atomic, so readers see
+  * commit; locally it is `DurableStage.swap`'s two directory renames with
+  * the same write-then-swap ordering. Each rename is atomic, so readers see
   * either the old or the new file set — but locally there is an instant
   * between the renames where the path is absent; the metastore flip is what
-  * removes that window in production. Stale .compact_tmp/.compact_old
-  * leftovers from a crashed prior run are removed up front, so the swap is
-  * re-entrant. */
+  * removes that window in production. A stale .compact_tmp left by a
+  * crashed prior run is removed up front, so the swap is re-entrant. */
 object Compaction {
 
   final case class Report(filesBefore: Int, filesAfter: Int, rows: Long)
@@ -33,20 +32,13 @@ object Compaction {
       .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
       .toSeq
 
-  private def deleteIfExists(dir: String): Unit = {
-    val f = new java.io.File(dir)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-  }
-
   def compact(spark: SparkSession, dir: String,
       targetBytesPerFile: Long = 128L * 1024 * 1024,
       partitionBy: Seq[String] = Nil): Report = {
     val root = Paths.get(dir)
     val tmp = dir.stripSuffix("/") + ".compact_tmp"
-    val old = dir.stripSuffix("/") + ".compact_old"
-    // crash-safety: a prior failed run may have left either temp dir behind
-    deleteIfExists(tmp)
-    deleteIfExists(old)
+    // crash-safety: a prior failed run may have left it behind
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     val before = parquetFiles(root)
     val totalBytes = before.map(Files.size).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytesPerFile).toInt)
@@ -65,9 +57,7 @@ object Compaction {
     } else
       df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
 
-    Files.move(root, Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), root, StandardCopyOption.ATOMIC_MOVE)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(old))
+    thrivespark.DurableStage.swap(Paths.get(tmp), root)
 
     Report(before.size, parquetFiles(root).size, rows)
   }

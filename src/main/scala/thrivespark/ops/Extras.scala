@@ -3,7 +3,7 @@ package thrivespark.ops
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{DurableStage, Op, Tables => T}
 import thrivespark.Det._
 
 /** Additional relational + ingestion surface beyond SURVEY.md §2's numbered
@@ -37,34 +37,37 @@ object Extras {
     (s"li_bucketed2_$tag", s"o_bucketed2_$tag")
   }
 
-  /** Create (once per session) lineitem/orders bucketed+sorted on the join
-    * key, stored under /tmp (external tables; in-memory catalog). Only the
-    * columns the co-located join consumes are materialized — at 100 TB the
-    * bucketed copy is a column-pruned projection of the fact table, not a
-    * second full copy (the write cost is the price of every later
-    * exchange-free join, so keep it minimal). */
+  /** Register lineitem/orders bucketed+sorted on the join key as external
+    * tables (in-memory catalog) over one durable stage with a `li` and an
+    * `o` subdir. Only the columns the co-located join consumes are
+    * materialized — at 100 TB the bucketed copy is a column-pruned
+    * projection of the fact table, not a second full copy (the write cost is
+    * the price of every later exchange-free join, so keep it minimal). */
   def bucketedTables(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     // AQE's DisableUnnecessaryBucketedScan heuristic can turn bucketed reads
     // off; pin them on — the whole point here is the exchange-free join.
     s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val (liT, oT) = bucketedNames(d)
-    def ensure(table: String, src: => org.apache.spark.sql.DataFrame, key: String): Unit = {
-      if (s.catalog.tableExists(table)) return
-      val path = s"/tmp/graft_bucketed/$table"
-      if (new java.io.File(s"$path/_SUCCESS").exists()) {
-        // bucket files already on disk (deterministic data) — register only
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING parquet
-                  CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-                  LOCATION '$path'""")
-      } else {
-        src.write.mode("overwrite").option("path", path)
-          .bucketBy(8, key).sortBy(key).saveAsTable(table)
+    val tables = Seq(
+      (liT, "li", "l_orderkey", T.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))),
+      (oT, "o", "o_orderkey", T.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"))))
+    val stage = DurableStage("bucketed", d, Seq("lineitem", "orders"), "v1") { dir =>
+      // bucketBy works only with saveAsTable: write through a throwaway
+      // external table, then drop it (dropping keeps its files)
+      tables.foreach { case (_, sub, key, src) =>
+        val tmpTable = s"${sub}_${new java.io.File(dir).getName}"
+        src.write.option("path", s"$dir/$sub")
+          .bucketBy(8, key).sortBy(key).saveAsTable(tmpTable)
+        s.sql(s"DROP TABLE $tmpTable")
       }
     }
-    ensure(liT, T.lineitem(s, d).select(col("l_orderkey"), col("l_quantity")),
-      "l_orderkey")
-    ensure(oT, T.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-      "o_orderkey")
+    tables.foreach { case (table, sub, key, src) =>
+      // a stage rebuilt since registration has new file names
+      if (s.catalog.tableExists(table)) s.catalog.refreshTable(table)
+      else s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING parquet
+                     CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
+                     LOCATION '$stage/$sub'""")
+    }
   }
 
   /** Sequence packing's exclusive running token sum as the scalable
@@ -521,7 +524,7 @@ object Extras {
     Op("etl_compaction",
       (s, d) => {
         val dir = s"/tmp/graft_compact_${new java.io.File(d).getName}"
-        if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+        if (!DurableStage.committed(dir)) {
           T.events(s, d).select(col("event_id"), col("event_type"), col("value"))
             .repartition(64) // the small-file pathology
             .write.mode("overwrite").parquet(dir)
@@ -1361,11 +1364,8 @@ object Extras {
     Op("source_csv_malformed",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val dir = s"/tmp/graft_badcsv_${new java.io.File(d).getName}"
-        // content-addressed staging: the planted dirty feed is deterministic
-        // per sf, so stage it once and reuse (same pattern as the stream
-        // stages and bucketed tables; Bench preserves these dirs)
-        if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+        // the planted dirty feed is deterministic per sf: a durable stage
+        val dir = DurableStage("badcsv", d, Seq("orders"), "v1") { dir =>
           val sub = T.orders(s, d).filter(col("o_orderkey") % 7 === 0)
           val lines = sub.select(concat_ws(",",
               col("o_orderkey"), col("o_custkey"),
@@ -1464,17 +1464,15 @@ object Extras {
     // partitions and scanning 3 years.
     Op("join_dpp_prune",
       (s, d) => {
-        val fact = s"/tmp/graft_dpp_fact_${new java.io.File(d).getName}"
-        val dimP = s"/tmp/graft_dpp_dim_${new java.io.File(d).getName}"
-        if (!new java.io.File(s"$fact/_SUCCESS").exists()) {
+        val fact = DurableStage("dpp_fact", d, Seq("events"), "v1") { dir =>
           T.events(s, d).withColumn("dt", to_date(col("ts")))
             .repartition(col("dt"))
-            .write.mode("overwrite").partitionBy("dt").parquet(fact)
+            .write.mode("overwrite").partitionBy("dt").parquet(dir)
         }
-        if (!new java.io.File(s"$dimP/_SUCCESS").exists()) {
+        val dimP = DurableStage("dpp_dim", d, Seq("events"), "v1") { dir =>
           T.events(s, d).select(to_date(col("ts")).as("dim_dt")).distinct()
             .withColumn("week", weekofyear(col("dim_dt")))
-            .coalesce(1).write.mode("overwrite").parquet(dimP)
+            .coalesce(1).write.mode("overwrite").parquet(dir)
         }
         val dim = s.read.parquet(dimP).filter(col("week") === 3)
         s.read.parquet(fact)

@@ -1,7 +1,7 @@
 package thrivespark.ops
 
 import org.apache.spark.sql.functions._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{DurableStage, Op, Tables => T}
 import thrivespark.Det._
 
 /** SURVEY.md §2.10 — event-time windowing (#55–#57), batch-equivalence mode.
@@ -486,99 +486,24 @@ object StreamingOps {
 
   private def tag(d: String): String = new java.io.File(d).getName.replace(".", "_")
 
-  /** Source fingerprint for stage invalidation (r13 advisory): the staged
-    * copies were keyed only on _SUCCESS existence, so a REGENERATED corpus
-    * at the same path silently served stale staged rows while the batch
-    * side and the oracle read the live table — a hard-to-trace
-    * cross-engine mismatch. The fingerprint is the sorted
-    * (name, length, mtime) listing of the source parquet dir, md5'd;
-    * staging re-uses a staged copy only while it matches the marker
-    * written at stage time. */
-  def srcFingerprint(d: String, table: String): String = {   // public: StreamingSpec pins it
-    val src = new java.io.File(d, s"$table.parquet")
-    // a single-FILE parquet source used to fall through listFiles() → null
-    // → the CONSTANT empty-listing hash, which matched its own marker
-    // forever and silently disabled stale-stage invalidation (r15 advisory).
-    // The walk is RECURSIVE (r17, closing the r16 advisory): a partitioned
-    // parquet source keeps its part files in key=value subdirectories, so
-    // a top-level-only listing saw zero files and fingerprinted the dir as
-    // unlistable:<nanoTime> — indistinguishable from a failed listing and
-    // re-staged on every access forever. Nested files are keyed by their
-    // RELATIVE path so a row moving between partitions flips the hash.
-    // depth-capped: parquet layouts are ≤ a few partition levels deep, and
-    // the cap keeps a symlink cycle from recursing forever. A cap HIT is an
-    // always-stale marker, like an unlistable source (r18, closing the r17
-    // advisory): the capped dir's own mtime does NOT change when a file
-    // deeper down does, so trusting it could serve a stale staged copy —
-    // perpetual re-staging is the safe failure mode, staleness is not.
-    // Names starting with '_' or '.' (_SUCCESS, _temporary, .crc) are
-    // writer metadata, not data: including them made the hash flip on
-    // transient mid-overwrite litter.
-    def walk(f: java.io.File, rel: String, depth: Int): Seq[String] =
-      if (f.isFile) Seq(s"$rel:${f.length}:${f.lastModified}")
-      else if (depth <= 0) Seq(s"$rel:<depth-capped>:${System.nanoTime()}")
-      else Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
-        .flatMap(c => walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}",
-          depth - 1))
-    val entries: Option[Seq[String]] =
-      if (src.isFile) Some(Seq(s"${src.getName}:${src.length}:${src.lastModified}"))
-      else if (!src.isDirectory) None          // absent or unreadable root
-      else Some(walk(src, "", 8).sorted)
-    entries match {
-      // absent/unreadable source: never match any stored marker (always
-      // stale) so a listing failure re-stages instead of serving stale rows
-      case None => s"unlistable:${System.nanoTime()}"
-      // exists-but-no-files-yet (a not-yet-populated stream source) is a
-      // DETERMINISTIC state, not a failure: a stable marker avoids the
-      // perpetual-re-stage loop, and the hash flips as soon as files arrive
-      case Some(es) if es.isEmpty => "empty-dir"
-      case Some(es) =>
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(es.mkString("\n").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-    }
-  }
-
-  private def stageFresh(dir: String, fp: String): Boolean = {
-    val f = java.nio.file.Paths.get(dir, "_SRC_FP")
-    java.nio.file.Files.exists(f) &&
-      new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim == fp
-  }
-
-  private def markStaged(dir: String, fp: String): Unit = {
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_SRC_FP"),
-      fp.getBytes("UTF-8")): Unit
-  }
-
   /** Stage documents once per sf as a 2-file stream source for the
     * streaming-inference op (scoring is per-row map-side work, so arrival
     * order and batch boundaries are irrelevant — hash-split is fine). */
-  private def stageDocsDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_stream_stage_docs_${tag(d)}"
-    val fp = srcFingerprint(d, "documents")
-    if (!stageFresh(dir, fp)) {
+  private def stageDocsDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    DurableStage("docs", d, Seq("documents"), "v1") { dir =>
       thrivespark.Tables.documents(s, d).repartition(2)
         .write.mode("overwrite").parquet(dir)
-      markStaged(dir, fp)
     }
-    dir
-  }
 
   /** Stage embeddings once per sf as a 3-file stream source for the
     * streaming ANN ingest (assignment is per-row map-side work against a
     * fixed codebook, so arrival order and batch boundaries are
     * irrelevant — hash-split is fine; 3 files = 3 micro-batches). */
-  private def stageEmbDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_stream_stage_emb_${tag(d)}"
-    val fp = srcFingerprint(d, "embeddings")
-    if (!stageFresh(dir, fp)) {
+  private def stageEmbDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    DurableStage("emb", d, Seq("embeddings"), "v1") { dir =>
       thrivespark.Tables.embeddings(s, d).repartition(3)
         .write.mode("overwrite").parquet(dir)
-      markStaged(dir, fp)
     }
-    dir
-  }
 
   /** Stage the retrieval-request feed once per sf: the query slice of the
     * vector stream (vec_id % 50 — the same slice the oracle takes), 2 files
@@ -586,17 +511,12 @@ object StreamingOps {
     * reading the FULL embedding feed and filtering in-stream (the r17
     * shape) paid three full-corpus file reads per run for a 1/50th slice
     * — a feed no real serving deployment would be handed. */
-  private def stageAnnQueryFeed(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_stream_stage_annq_${tag(d)}"
-    val fp = srcFingerprint(d, "embeddings") + "|annq-v1"
-    if (!stageFresh(dir, fp)) {
+  private def stageAnnQueryFeed(s: org.apache.spark.sql.SparkSession, d: String): String =
+    DurableStage("annq", d, Seq("embeddings"), "annq-v1") { dir =>
       thrivespark.Tables.embeddings(s, d)
         .filter(col("vec_id") % 50 === 0).repartition(2)
         .write.mode("overwrite").parquet(dir)
-      markStaged(dir, fp)
     }
-    dir
-  }
 
   /** Stage the STANDING ANN artifacts once per sf: the capped-seed centroid
     * table and the full cell-partitioned assignment index. These are the
@@ -604,30 +524,17 @@ object StreamingOps {
     * probes an index that already exists (building it is stream_ann_ingest's
     * / sim_ann_ivf's declared work, not the query path's), and
     * stream_ann_ingest assigns against standing cells. Same durable staging
-    * discipline as the stream sources above: content-addressed per sf,
-    * freshness-checked against the embeddings fingerprint AND the seed rule
-    * (a rule change must invalidate the staged copy exactly like a corpus
-    * regeneration). Returns (centroidsDir, indexDir). */
+    * discipline as the stream sources above: the seed rule is part of the
+    * spec version, so a rule change rebuilds the stage exactly like a corpus
+    * regeneration. Returns (centroidsDir, indexDir). */
   private def stageAnnDirs(s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    val dir = s"/tmp/graft_stream_stage_annidx_${tag(d)}"
-    val fp = srcFingerprint(d, "embeddings") +
-      "|" + Similarity.IvfSeedSql + "|annidx-v1"
-    if (!stageFresh(dir, fp)) {
-      // Invalidate BEFORE rewriting (r20): the single-dir stagers get this
-      // for free (parquet overwrite deletes the dir, marker included), but
-      // here the marker lives ABOVE the two artifact subdirs — a crash
-      // between the centroid and index writes would otherwise leave a
-      // mixed dir behind the OLD marker, served as fresh if the source
-      // fingerprint ever reverted to the old value.
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "_SRC_FP")): Unit
+    val dir = DurableStage("annidx", d, Seq("embeddings"),
+        Similarity.IvfSeedSql + "|annidx-v1") { dir =>
       val emb = thrivespark.Tables.embeddings(s, d)
       val cent = Similarity.ivfCentroids(emb)
       cent.write.mode("overwrite").parquet(s"$dir/centroids")
       Similarity.ivfAssignTo(emb, cent)
         .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/index")
-      markStaged(dir, fp)
     }
     (s"$dir/centroids", s"$dir/index")
   }
@@ -642,22 +549,15 @@ object StreamingOps {
     * time order; when one parallel job wrote both files, which half became
     * batch 0 varied from run to run, and with it which rows arrived late
     * and whether a trailing no-data batch ran (2 vs 3 batches). */
-  def stageDir(s: org.apache.spark.sql.SparkSession, d: String): String = {   // public: StreamingSpec pins it
-    val dir = s"/tmp/graft_stream_stage_${tag(d)}"
-    // the suffix versions the staging rule: a stage written by an older
-    // rule is rebuilt, not served
-    val fp = srcFingerprint(d, "events") + "|hash2-seq-v1"
+  def stageDir(s: org.apache.spark.sql.SparkSession, d: String): String =   // public: StreamingSpec pins it
     // two files = two micro-batches: enough to exercise cross-batch state
     // while keeping per-batch checkpoint overhead out of the benchmark
-    if (!stageFresh(dir, fp)) {
+    DurableStage("events", d, Seq("events"), "hash2-seq-v1") { dir =>
       val ev = thrivespark.Tables.events(s, d)
       val half = pmod(xxhash64(col("event_id")), lit(2))
       ev.filter(half === 0).coalesce(1).write.mode("overwrite").parquet(dir)
       ev.filter(half === 1).coalesce(1).write.mode("append").parquet(dir)
-      markStaged(dir, fp)
     }
-    dir
-  }
 
   /** Time-ordered staging (file 1 = older half, file 2 = newer half, written
     * sequentially so the source replays them in order) + two trailing
@@ -676,9 +576,7 @@ object StreamingOps {
   private def stageDirOrderedFlush(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import s.implicits._
-    val dir = s"/tmp/graft_stream_stage_flush_${tag(d)}"
-    val fp = srcFingerprint(d, "events")
-    if (!new java.io.File(s"$dir/_ok").exists() || !stageFresh(dir, fp)) {
+    DurableStage("events_flush", d, Seq("events"), "v1") { dir =>
       val ev = thrivespark.Tables.events(s, d)
       val r = ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
       val cut = new java.sql.Timestamp(
@@ -702,10 +600,6 @@ object StreamingOps {
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
         .coalesce(1)
         .write.mode("append").parquet(dir)
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/_ok"))
-      markStaged(dir, fp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/_ok"))
     }
-    dir
   }
 }

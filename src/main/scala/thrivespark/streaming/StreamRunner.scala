@@ -2,6 +2,7 @@ package thrivespark.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import thrivespark.DurableStage
 
 /** Structured Streaming execution paths (SURVEY.md §2.10 #58/#59): the ops
   * whose semantics only exist under streaming — watermark late-drop and
@@ -280,17 +281,15 @@ object StreamRunner {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
-        // crash recovery: the swap below is delete-then-move, so a crash in
-        // between leaves only the complete _next dir — adopt it before
-        // reading, otherwise the state table would silently reset
-        val rootP = java.nio.file.Paths.get(stateDir)
-        val tmpP = java.nio.file.Paths.get(s"${stateDir}_next")
-        if (!java.nio.file.Files.exists(rootP) &&
-            java.nio.file.Files.exists(tmpP.resolve("_SUCCESS")))
-          java.nio.file.Files.move(tmpP, rootP)
+        // crash recovery: a crash between the swap's two renames leaves no
+        // state dir but a complete _next dir — adopt it before reading,
+        // otherwise the state table would silently reset
+        val root = java.nio.file.Paths.get(stateDir)
+        val tmp = s"${stateDir}_next"
+        if (!java.nio.file.Files.exists(root) && DurableStage.committed(tmp))
+          DurableStage.swap(java.nio.file.Paths.get(tmp), root)
         val cur =
-          if (new java.io.File(s"$stateDir/_SUCCESS").exists())
-            s.read.parquet(stateDir)
+          if (DurableStage.committed(stateDir)) s.read.parquet(stateDir)
           else batch.limit(0)
         val merged = cur.unionByName(batch)
           .groupBy(col("user_id"))
@@ -299,12 +298,8 @@ object StreamRunner {
           .select(col("user_id"), col("m.ts").as("ts"),
             col("m.event_id").as("event_id"),
             col("m.event_type").as("event_type"), col("m.value").as("value"))
-        val tmp = s"${stateDir}_next"
         merged.write.mode("overwrite").parquet(tmp)
-        val root = java.nio.file.Paths.get(stateDir)
-        org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-        java.nio.file.Files.move(java.nio.file.Paths.get(tmp), root)
-        ()
+        DurableStage.swap(java.nio.file.Paths.get(tmp), root)
       }
       .start()
     q.processAllAvailable()

@@ -758,6 +758,13 @@ class PlanSpec extends AnyFunSuite {
         default.foreach(SparkSession.setDefaultSession)
       }
     assert(!(ext eq spark), "the extension session must be a new session")
+    // both install paths iterate the one function table
+    thrivespark.functions.Register(spark)
+    thrivespark.functions.Register.Functions.foreach { case (name, usage, _) =>
+      assert(spark.catalog.functionExists(name), s"$name does not resolve after Register")
+      assert(ext.catalog.functionExists(name) && ext.catalog.getFunction(name).description == usage,
+        s"$name does not resolve via extensions")
+    }
     val d = ext.sql(
       """SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)),
         |               array(cast(3.0 as float), cast(4.0 as float)))""".stripMargin)

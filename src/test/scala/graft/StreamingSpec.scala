@@ -365,33 +365,33 @@ class StreamingSpec extends AnyFunSuite {
 
   test("srcFingerprint: single-FILE parquet sources fingerprint their own " +
       "(name, length, mtime); unlistable sources are always stale") {
-    import thrivespark.ops.StreamingOps
+    import thrivespark.DurableStage
     val root = Files.createTempDirectory("graft_fp_test").toFile
     try {
       // directory source: fingerprint tracks member changes
       val dir = new java.io.File(root, "t.parquet"); dir.mkdirs()
       val part = new java.io.File(dir, "part-0.parquet")
       Files.write(part.toPath, Array[Byte](1, 2, 3))
-      val fpDir1 = StreamingOps.srcFingerprint(root.getPath, "t")
+      val fpDir1 = DurableStage.srcFingerprint(root.getPath, "t")
       Files.write(part.toPath, Array[Byte](1, 2, 3, 4))
       part.setLastModified(part.lastModified + 5000): Unit
-      assert(StreamingOps.srcFingerprint(root.getPath, "t") != fpDir1,
+      assert(DurableStage.srcFingerprint(root.getPath, "t") != fpDir1,
         "regenerated member must change the directory fingerprint")
       // single-file source (pre-fix: constant empty-listing hash — staging
       // NEVER invalidated): must fingerprint the file itself and move when
       // the file is rewritten
       val single = new java.io.File(root, "s.parquet")
       Files.write(single.toPath, Array[Byte](9))
-      val fpFile1 = StreamingOps.srcFingerprint(root.getPath, "s")
+      val fpFile1 = DurableStage.srcFingerprint(root.getPath, "s")
       assert(!fpFile1.startsWith("unlistable:"), "a real file must hash")
       Files.write(single.toPath, Array[Byte](9, 9))
       single.setLastModified(single.lastModified + 5000): Unit
-      assert(StreamingOps.srcFingerprint(root.getPath, "s") != fpFile1,
+      assert(DurableStage.srcFingerprint(root.getPath, "s") != fpFile1,
         "rewritten single-file source must change fingerprint")
       // absent/unlistable: two reads never agree → stage marker never
       // matches → always re-staged instead of serving stale rows
-      val a = StreamingOps.srcFingerprint(root.getPath, "missing")
-      val b = StreamingOps.srcFingerprint(root.getPath, "missing")
+      val a = DurableStage.srcFingerprint(root.getPath, "missing")
+      val b = DurableStage.srcFingerprint(root.getPath, "missing")
       assert(a != b, "unlistable source must be always-stale")
       // PARTITIONED source (r17, closing the r16 advisory): part files in
       // key=value subdirectories were invisible to the top-level listing —
@@ -402,36 +402,36 @@ class StreamingSpec extends AnyFunSuite {
       val kdir = new java.io.File(pdir, "k=1"); kdir.mkdirs()
       val npart = new java.io.File(kdir, "part-0.parquet")
       Files.write(npart.toPath, Array[Byte](7, 7))
-      val fpNested = StreamingOps.srcFingerprint(root.getPath, "p")
+      val fpNested = DurableStage.srcFingerprint(root.getPath, "p")
       assert(!fpNested.startsWith("unlistable:"),
         "nested-only dir must fingerprint its nested files, not read as unlistable")
-      assert(StreamingOps.srcFingerprint(root.getPath, "p") == fpNested,
+      assert(DurableStage.srcFingerprint(root.getPath, "p") == fpNested,
         "unchanged partitioned source must be stable across reads")
       Files.write(npart.toPath, Array[Byte](7, 7, 7))
       npart.setLastModified(npart.lastModified + 5000): Unit
-      assert(StreamingOps.srcFingerprint(root.getPath, "p") != fpNested,
+      assert(DurableStage.srcFingerprint(root.getPath, "p") != fpNested,
         "regenerated nested member must change the fingerprint")
       // exists-but-empty: a deterministic state (not-yet-populated stream
       // source), NOT a failure — stable marker, flips when files arrive
       val edir = new java.io.File(root, "e.parquet"); edir.mkdirs()
-      val fpEmpty = StreamingOps.srcFingerprint(root.getPath, "e")
-      assert(fpEmpty == StreamingOps.srcFingerprint(root.getPath, "e") &&
+      val fpEmpty = DurableStage.srcFingerprint(root.getPath, "e")
+      assert(fpEmpty == DurableStage.srcFingerprint(root.getPath, "e") &&
         !fpEmpty.startsWith("unlistable:"),
         "empty-but-existing dir must fingerprint deterministically")
       val efile = new java.io.File(edir, "part-0.parquet")
       Files.write(efile.toPath, Array[Byte](5))
-      assert(StreamingOps.srcFingerprint(root.getPath, "e") != fpEmpty,
+      assert(DurableStage.srcFingerprint(root.getPath, "e") != fpEmpty,
         "files arriving in a previously-empty source must flip the hash")
       // writer metadata (_SUCCESS, _temporary, .crc) is NOT data (r18,
       // closing the r17 advisory): its transient mid-overwrite appearance
       // must not flip the fingerprint
       val mdir = new java.io.File(root, "m.parquet"); mdir.mkdirs()
       Files.write(new java.io.File(mdir, "part-0.parquet").toPath, Array[Byte](3))
-      val fpMeta = StreamingOps.srcFingerprint(root.getPath, "m")
+      val fpMeta = DurableStage.srcFingerprint(root.getPath, "m")
       Files.write(new java.io.File(mdir, "_SUCCESS").toPath, Array.empty[Byte])
       Files.write(new java.io.File(mdir, ".part-0.parquet.crc").toPath, Array[Byte](1))
       new java.io.File(mdir, "_temporary").mkdirs()
-      assert(StreamingOps.srcFingerprint(root.getPath, "m") == fpMeta,
+      assert(DurableStage.srcFingerprint(root.getPath, "m") == fpMeta,
         "writer metadata must be invisible to the fingerprint")
       // a depth-cap hit is an always-stale marker (r18, closing the r17
       // advisory): a file deeper than the cap can change WITHOUT touching
@@ -442,8 +442,8 @@ class StreamingSpec extends AnyFunSuite {
       (1 to 9).foreach { i => deep = new java.io.File(deep, s"k$i=v"); () }
       deep.mkdirs()
       Files.write(new java.io.File(deep, "part-0.parquet").toPath, Array[Byte](8))
-      val fpDeep1 = StreamingOps.srcFingerprint(root.getPath, "d")
-      assert(StreamingOps.srcFingerprint(root.getPath, "d") != fpDeep1,
+      val fpDeep1 = DurableStage.srcFingerprint(root.getPath, "d")
+      assert(DurableStage.srcFingerprint(root.getPath, "d") != fpDeep1,
         "a depth-capped walk must read always-stale, never trust dir mtime")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(root): Unit
   }
