@@ -1,10 +1,13 @@
 package thrivespark.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Registers the engine's custom Catalyst expressions on a session so they
-  * are usable via functions.call_function / SQL. Idempotent. */
+  * are usable via functions.call_function / SQL. Idempotent: ops call it
+  * each time they build a query, so a name the session already resolves
+  * (an earlier call, or `GraftExtensions`) is left as it is. */
 object Register {
   /** Every custom SQL function as (name, usage, builder): this method and
     * `thrivespark.GraftExtensions` both install exactly this table. */
@@ -23,12 +26,15 @@ object Register {
     ("simhash64", "64-bit simhash of pre-hashed tokens",
       es => SimHash64(es.head)),
     ("shingle_hashes", "distinct word-3-gram shingle hashes of a token array",
-      es => ShingleHashes(es.head, 3)))
+      es => ShingleHashes(es.head, 3)),
+    ("hll_distinct", "HLL++ distinct count (rsd 0.01), one-value sketch buffer",
+      es => HllDistinct(es.head)))
 
   def apply(s: SparkSession): Unit = {
     val reg = s.sessionState.functionRegistry
     Functions.foreach { case (name, _, build) =>
-      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "scala_udf")
     }
   }
 }

@@ -181,16 +181,20 @@ object Aggs {
     // #28 — HLL++; sketch outputs are never hash-compared (R5). ScalaTest
     // asserts the estimate is within 2% of exact.
     Op("agg_approx_distinct",
-      // r21: the HLL and the exact distinct are SEPARATE aggregations
-      // joined as 1-row frames. Combined in one agg, Spark's one-distinct
-      // rewrite runs the rsd-0.01 HLL (2^14-register buffer) through all
-      // FOUR aggregate phases of the expand plan — measured 2.2 s vs 1.2 s
-      // split, identical output values either way (same estimate, same
-      // exact count; rows-only key, AggSpec pins the ±2% envelope).
-      (s, d) => T.events(s, d)
-        .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"))
-        .crossJoin(T.events(s, d)
-          .agg(countDistinct(col("user_id")).as("exact_users"))),
+      // The HLL (hll_distinct, one binary sketch buffer) and the exact
+      // distinct are SEPARATE aggregations joined as 1-row frames. Combined
+      // in one agg, Spark's one-distinct rewrite carries the sketch through
+      // all FOUR aggregate phases of the expand plan — measured 0.41 s
+      // combined vs 0.25 s split at sf0.1 on 4 cores, identical output
+      // values either way (same estimate, same exact count; rows-only key,
+      // PropertySpec pins the ±2% envelope).
+      (s, d) => {
+        thrivespark.functions.Register(s)
+        T.events(s, d)
+          .agg(call_function("hll_distinct", col("user_id")).as("approx_users"))
+          .crossJoin(T.events(s, d)
+            .agg(countDistinct(col("user_id")).as("exact_users")))
+      },
       None),
 
     // Bitmap-exact distinct for low-cardinality domains: encode each

@@ -1084,7 +1084,9 @@ object Extras {
     // merging per-shard exact distinct counts over-counts values present
     // in several shards. This op trades shard-mergeability for exactness
     // (and an exact oracle); dq_profile_hll below is the shard-mergeable
-    // variant — HLL sketches merge losslessly, at ±2% error. Numeric
+    // variant — HLL sketches merge losslessly, at ±2% error — and needs no
+    // melt: a sketch is an ordinary aggregate, not a distinct one, so all
+    // five columns' stats fit one aggregation with no Expand. Numeric
     // min/max ride as DOUBLE (exact column values, no arithmetic);
     // distincts count the string rendering, identical across engines for
     // the integer/2-decimal/ASCII domains profiled here.
@@ -1127,36 +1129,48 @@ object Extras {
                      min(v_str) AS min_str, max(v_str) AS max_str
               FROM m GROUP BY col_name ORDER BY col_name""")),
 
-    // The shard-mergeable profile (r17 — the 100 TB path): identical melt
-    // and stats, but n_distinct is approx_count_distinct (HLL++, rsd 1%).
-    // HLL registers merge losslessly across partitions/files/shards, so a
-    // 100 TB table's profile really is a per-file profile merge — the
-    // property the exact variant above documents itself as lacking.
-    // Sketch estimates are engine-specific ⇒ rows-only (R5, like
-    // agg_approx_distinct); ExtrasSpec pins the estimate within ±2% of
-    // the exact profile's n_distinct, per column, plus exact equality on
-    // every mergeable stat.
+    // The shard-mergeable profile (r17 — the 100 TB path): the same stats,
+    // but n_distinct is an HLL++ sketch (rsd 1%) whose registers merge
+    // losslessly across partitions/files/shards, so a 100 TB table's
+    // profile really is a per-file profile merge — the property the exact
+    // variant above documents itself as lacking. No melt: one global
+    // aggregate over the scan computes every column's stats side by side,
+    // and the single result row is unpivoted into one row per column. The
+    // sketch is hll_distinct (functions/HllDistinct.scala): its 2^14
+    // registers are one binary buffer value, not Spark HLL++'s 1,639 long
+    // columns, so the aggregate plans as one ObjectHashAggregate with 27
+    // buffer attributes. Sketch estimates are engine-specific ⇒
+    // rows-only (R5, like agg_approx_distinct); PropertySpec pins the
+    // estimate within ±2% of the exact profile's n_distinct, per column,
+    // plus exact equality on every mergeable stat.
     Op("dq_profile_hll",
       (s, d) => {
-        val ev = T.events(s, d)
-        def m(name: String, num: org.apache.spark.sql.Column,
-            str: org.apache.spark.sql.Column) =
-          struct(lit(name).as("col_name"), num.cast("double").as("v_num"),
-            str.cast("string").as("v_str"))
-        ev.select(explode(array(
-            m("event_id", col("event_id"), col("event_id")),
-            m("user_id", col("user_id"), col("user_id")),
-            m("value", col("value"), col("value")),
-            m("event_type", lit(null), col("event_type")),
-            m("props", lit(null), col("props")))).as("m"))
-          .select(col("m.col_name").as("col_name"), col("m.v_num").as("v_num"),
-            col("m.v_str").as("v_str"))
-          .groupBy(col("col_name"))
-          .agg(count(lit(1)).as("n_rows"),
-            (count(lit(1)) - count(col("v_str"))).as("n_null"),
-            approx_count_distinct(col("v_str"), 0.01).as("n_distinct"),
-            min(col("v_num")).as("min_num"), max(col("v_num")).as("max_num"),
-            min(col("v_str")).as("min_str"), max(col("v_str")).as("max_str"))
+        thrivespark.functions.Register(s)
+        // (column, has a numeric rendering)
+        val cols = Seq("event_id" -> true, "user_id" -> true, "value" -> true,
+          "event_type" -> false, "props" -> false)
+        val stats = cols.flatMap { case (c, numeric) =>
+          val str = col(c).cast("string")
+          val num = col(c).cast("double")
+          Seq(count(str).as(s"${c}_nn"),
+            call_function("hll_distinct", str).as(s"${c}_nd"),
+            min(str).as(s"${c}_min_str"), max(str).as(s"${c}_max_str")) ++
+            (if (numeric) Seq(min(num).as(s"${c}_min_num"), max(num).as(s"${c}_max_num"))
+             else Nil)
+        }
+        val rows = cols.map { case (c, numeric) =>
+          def numStat(st: String) =
+            if (numeric) col(s"${c}_$st") else lit(null).cast("double")
+          struct(lit(c).as("col_name"), col("n_rows"),
+            (col("n_rows") - col(s"${c}_nn")).as("n_null"),
+            col(s"${c}_nd").as("n_distinct"),
+            numStat("min_num").as("min_num"), numStat("max_num").as("max_num"),
+            col(s"${c}_min_str").as("min_str"), col(s"${c}_max_str").as("max_str"))
+        }
+        T.events(s, d)
+          .agg(count(lit(1)).as("n_rows"), stats: _*)
+          .select(explode(array(rows: _*)).as("r"))
+          .select(col("r.*"))
           .orderBy(col("col_name"))
       },
       None),

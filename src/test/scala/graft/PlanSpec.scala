@@ -721,6 +721,34 @@ class PlanSpec extends AnyFunSuite {
       s"expected the 1-row cross join of the two aggregates:\n$p")
   }
 
+  test("dq_profile_hll and agg_approx_distinct: one-value sketch buffers — " +
+      "no SortAggregate and no node wider than 64 attributes; dq_profile_hll " +
+      "aggregates the scan itself (no Generate below the aggregate)") {
+    // approx_count_distinct at rsd 0.01 carries 1,639 long buffer columns;
+    // next to a string min/max that planned a SortAggregate over the 5x
+    // melt with 1,645-attribute rows (plans/r22/all/dq_profile_hll.txt)
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    def root(key: String): SparkPlan =
+      Registry.queries(key)(spark, sf0001).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    Seq("dq_profile_hll", "agg_approx_distinct").foreach { k =>
+      val p = root(k)
+      assert(!p.exists(_.isInstanceOf[SortAggregateExec]), s"$k plans a SortAggregate:\n$p")
+      val wide = p.collect { case n if n.output.size > 64 => s"${n.nodeName}: ${n.output.size}" }
+      assert(wide.isEmpty, s"$k has nodes wider than 64 attributes: $wide\n$p")
+      assert(p.exists(_.isInstanceOf[ObjectHashAggregateExec]),
+        s"$k: the sketch must plan an ObjectHashAggregate:\n$p")
+    }
+    val p = root("dq_profile_hll")
+    val aggs = p.collect { case a: ObjectHashAggregateExec => a }
+    assert(aggs.forall(!_.exists(_.isInstanceOf[GenerateExec])),
+      s"dq_profile_hll fans its rows out below the aggregate:\n$p")
+  }
+
   test("fn_xml: the from_xml projection stays above the Sort and its " +
       "range Exchange (ADVICE r22 item 3)") {
     // The sort keys on the raw primary key; parsing below the range
