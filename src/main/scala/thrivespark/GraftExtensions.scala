@@ -9,9 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * planner strategy first-class plan surface — on any session configured
   * with
   *   spark.sql.extensions=thrivespark.GraftExtensions
-  * (the idiomatic deployment on a shared cluster; `functions.Register` +
-  * the per-op `install` hooks offer the same per-session for driver-owned
-  * sessions like graft.Verify).
+  * (the idiomatic deployment on a shared cluster). `functions.Register`
+  * installs the same functions, rule and strategy per session, and
+  * `Registry` applies it before every op, for driver-owned sessions like
+  * graft.Verify.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
@@ -24,7 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // whole-plan surface: the naive-similarity-join rewrite and the as-of
     // merge operator, so extension-configured sessions get the same plans
-    // as install()-wired ones
+    // as Register-installed ones
     e.injectOptimizerRule(_ => thrivespark.plans.SimilarityJoinRewrite)
     e.injectPlannerStrategy(_ => thrivespark.plans.AsOfJoinStrategy)
   }

@@ -21,8 +21,12 @@ object Registry {
     ops.StreamingOps.ops ++ ops.UdfSurface.ops ++ ops.Extras.ops ++
     ops.Analytics.ops ++ ops.Pipeline.ops
 
+  /** Each op behind the engine install (`functions.Register`), so every
+    * caller of a key (the driver, Verify, Bench, perfbench) gets the same
+    * functions, rule and strategy with no call of its own. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    ListMap(all.map(o => o.key -> o.fn): _*)
+    ListMap(all.map(o => o.key -> { (s: SparkSession, d: String) =>
+      functions.Register(s); o.fn(s, d) }): _*)
 
   lazy val oracles: Map[String, String] =
     ListMap(all.flatMap(o => o.oracle.map(sql => o.key -> sql)): _*)

@@ -3,11 +3,15 @@ package thrivespark.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
+import thrivespark.plans.{AsOfJoinStrategy, SimilarityJoinRewrite}
 
-/** Registers the engine's custom Catalyst expressions on a session so they
-  * are usable via functions.call_function / SQL. Idempotent: ops call it
-  * each time they build a query, so a name the session already resolves
-  * (an earlier call, or `GraftExtensions`) is left as it is. */
+/** The one per-session engine install: the custom Catalyst expressions as
+  * SQL functions (usable via functions.call_function / SQL), the
+  * similarity-join rewrite and the as-of join strategy. `Registry` applies
+  * it before every op, so a key never depends on which key ran earlier in
+  * the session. Idempotent: a function name the session already resolves
+  * (an earlier call, or `GraftExtensions`) and a rule or strategy already
+  * in `spark.experimental` are left as they are. */
 object Register {
   /** Every custom SQL function as (name, usage, builder): this method and
     * `thrivespark.GraftExtensions` both install exactly this table. */
@@ -30,11 +34,16 @@ object Register {
     ("hll_distinct", "HLL++ distinct count (rsd 0.01), one-value sketch buffer",
       es => HllDistinct(es.head)))
 
-  def apply(s: SparkSession): Unit = {
+  def apply(s: SparkSession): Unit = synchronized {
     val reg = s.sessionState.functionRegistry
     Functions.foreach { case (name, _, build) =>
       if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, build, "scala_udf")
     }
+    val x = s.experimental
+    if (!x.extraOptimizations.contains(SimilarityJoinRewrite))
+      x.extraOptimizations :+= SimilarityJoinRewrite
+    if (!x.extraStrategies.contains(AsOfJoinStrategy))
+      x.extraStrategies :+= AsOfJoinStrategy
   }
 }

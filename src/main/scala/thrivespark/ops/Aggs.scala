@@ -189,7 +189,6 @@ object Aggs {
       // values either way (same estimate, same exact count; rows-only key,
       // PropertySpec pins the ±2% envelope).
       (s, d) => {
-        thrivespark.functions.Register(s)
         T.events(s, d)
           .agg(call_function("hll_distinct", col("user_id")).as("approx_users"))
           .crossJoin(T.events(s, d)

@@ -34,7 +34,6 @@ object Dedup {
     * dedup stage. */
   def shingleDocs(s: SparkSession, d: String): DataFrame =
     Shared(s, ("shingles", d)) {
-      thrivespark.functions.Register(s)
       T.documents(s, d).select(col("doc_id"),
           call_function("shingle_hashes", split(col("text"), " ")).as("shl"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -44,14 +43,12 @@ object Dedup {
     * expression (thrivespark.functions.MinHashSignature), registered per
     * session and invoked via call_function (public API). */
   def signatures(docs: DataFrame): DataFrame = {
-    thrivespark.functions.Register(docs.sparkSession)
     docs.select(col("doc_id"), call_function("minhash_signature", col("shl")).as("sig"))
   }
 
   /** One fixed-width row per (doc, band): 64-bit fused band key (custom
     * expression LshBandKeys — minhash + banding in one pass). */
   def bandBuckets(docs: DataFrame): DataFrame = {
-    thrivespark.functions.Register(docs.sparkSession)
     docs.select(col("doc_id"),
         posexplode(call_function("lsh_band_keys", col("shl"))).as(Seq("band", "bkey")))
   }
@@ -104,7 +101,6 @@ object Dedup {
 
   /** doc_id + 64-bit simhash fingerprint over shingle hashes. */
   def simhashDocs(s: SparkSession, d: String): DataFrame = {
-    thrivespark.functions.Register(s)
     shingleDocs(s, d).select(col("doc_id"),
       call_function("simhash64", col("shl")).as("fp"))
   }
@@ -872,7 +868,6 @@ object Dedup {
     // sequential-fold IEEE computation in both engines (VecDot ≡ list_sum).
     Op("dedup_embedding_cosine",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val emb = T.embeddings(s, d)
         val a = emb.select(col("label").as("l_a"), col("vec_id").as("a_id"),
           col("embedding").as("e_a"))
@@ -912,7 +907,6 @@ object Dedup {
     // blow a single task (ScaleStressSpec proves the bound).
     Op("dedup_embedding_lsh",
       (s, d) => {
-        thrivespark.functions.Register(s)
         embeddingLshSurvivors(T.embeddings(s, d), 0.4, LshBucketCap)
       },
       Some("""WITH b AS (

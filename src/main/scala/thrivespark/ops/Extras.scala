@@ -1145,7 +1145,6 @@ object Extras {
     // plus exact equality on every mergeable stat.
     Op("dq_profile_hll",
       (s, d) => {
-        thrivespark.functions.Register(s)
         // (column, has a numeric rendering)
         val cols = Seq("event_id" -> true, "user_id" -> true, "value" -> true,
           "event_type" -> false, "props" -> false)

@@ -81,7 +81,6 @@ object Similarity {
     * index without touching the standing assignments. */
   def ivfAssignTo(emb: org.apache.spark.sql.DataFrame,
       cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(emb.sparkSession)
     // the embedding rides THROUGH the argmax (every row of a vec_id group
     // carries the identical vector), so recovering it needs no second
     // corpus scan + re-join — the aggregation's output IS the assignment
@@ -153,7 +152,6 @@ object Similarity {
 
   def annTopKFrom(emb: org.apache.spark.sql.DataFrame,
       k: Int = 5, nprobe: Int = 2): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(emb.sparkSession)
     val cent = ivfCentroids(emb)
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -175,7 +173,6 @@ object Similarity {
     * everything against the same centroids in one shot. */
   def annIncremental(s: org.apache.spark.sql.SparkSession, d: String,
       k: Int = 5, nprobe: Int = 2): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(s)
     val emb = T.embeddings(s, d)
     val isDelta = col("vec_id") % 7 === 3
     val base = emb.filter(!isDelta)
@@ -240,7 +237,6 @@ object Similarity {
     * (hand-computed planted corpora in DedupSimilaritySpec). */
   def kmeansTrainFrom(emb: org.apache.spark.sql.DataFrame, iters: Int = KmeansIters)
       : (Seq[(Long, Array[Long])], Seq[(Int, Long, Long, Long, Long)]) = {
-    thrivespark.functions.Register(emb.sparkSession)
     // the micro column is DERIVED here (embeddings has only vec_id/
     // embedding/label) — m for the exact integer update, mf for the
     // map-side float dot (micros ≤ 1e6 are exact in float32)
@@ -324,7 +320,6 @@ object Similarity {
     * counterpart of ivfAssignTo. */
   def ivfAssignMicro(emb: org.apache.spark.sql.DataFrame,
       cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding"),
         transform(microArr(col("embedding")), x => x.cast("float")).as("mf"))
       .join(broadcast(cent))
@@ -344,7 +339,6 @@ object Similarity {
     * rank all 5 candidate cells once (crn), checkpoint the ranked candidate
     * set + the exact top-5, then each curve point filters crn <= nprobe. */
   def recallCurve(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(emb.sparkSession)
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
@@ -513,7 +507,6 @@ object Similarity {
     * See the sim_ann_ivfpq Op comment for the full design. */
   def ivfpqTopK(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-      thrivespark.functions.Register(s)
       val M = 8; val SUB = 8; val nprobe = 2
       val emb = T.embeddings(s, d)
       val cent = ivfCentroids(emb)
@@ -627,7 +620,6 @@ object Similarity {
   val ops: Seq[Op] = Seq(
     Op("sim_topk_cosine",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val emb = T.embeddings(s, d)
         val q = emb.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -662,7 +654,6 @@ object Similarity {
     // against. Label inequality also subsumes the self-pair filter.
     Op("sim_hard_negatives",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val emb = T.embeddings(s, d)
         val q = emb.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -788,7 +779,6 @@ object Similarity {
     // the join + count grain is queries × k, i.e. tiny.
     Op("sim_ann_recall",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val emb = T.embeddings(s, d)
         val q = emb.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -917,7 +907,6 @@ object Similarity {
     // DedupSimilaritySpec.
     Op("sim_ann_pq",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val M = 8; val SUB = 8
         val emb = T.embeddings(s, d)
         def subSlices(v: Column): Column = explode(array((0 until M).map(m =>
@@ -1029,7 +1018,6 @@ object Similarity {
     // generated CTE block, so the two keys cannot drift).
     Op("sim_ann_ivfpq_recall",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val emb = T.embeddings(s, d)
         val q = emb.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1087,8 +1075,6 @@ object Similarity {
     // results to the brute-force oracle.
     Op("sim_join_rewrite",
       (s, d) => {
-        thrivespark.functions.Register(s)
-        thrivespark.plans.SimilarityJoinRewrite.install(s)
         val a = T.embeddings(s, d)
           .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
         val b = T.embeddings(s, d)
@@ -1106,7 +1092,6 @@ object Similarity {
 
     Op("sim_threshold_pairs",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val a = T.embeddings(s, d)
           .select(col("label").as("l_a"), col("vec_id").as("a_id"), col("embedding").as("e_a"))
         val b = T.embeddings(s, d)
@@ -1126,7 +1111,6 @@ object Similarity {
 
     Op("multimodal_join",
       (s, d) => {
-        thrivespark.functions.Register(s)
         T.documents(s, d)
         .join(T.embeddings(s, d), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("label"),
@@ -1346,7 +1330,6 @@ object Similarity {
     // only from probed cells (equi-join on cell) — no cartesian.
     Op("multimodal_retrieval",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val q = thumbQueries(s, d)
         val emb = T.embeddings(s, d)
         probeTopK(q, ivfCentroids(emb), ivfAssign(emb), k = 5, nprobe = 2,
@@ -1419,7 +1402,6 @@ object Similarity {
     // the dial-setting measurement a pipeline runs before choosing it.
     Op("multimodal_retrieval_recall",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val q = thumbQueries(s, d)
         val emb = T.embeddings(s, d)
         val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
@@ -1529,7 +1511,6 @@ object Similarity {
     // (sim_ann_recall_curve measures that dial).
     Op("multimodal_retrieval_recall_trained",
       (s, d) => {
-        thrivespark.functions.Register(s)
         val q = thumbQueries(s, d)
         val emb = T.embeddings(s, d)
         val cent = trainedCentroids(s, d)

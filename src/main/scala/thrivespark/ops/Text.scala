@@ -899,7 +899,6 @@ object Text {
     * is Q×64 longs; the pruned-index scale path for LARGE query sets is
     * the IVF ladder (sim_ann_ivf*), measured against this exact baseline. */
   def hashedTopKFrom(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(docs.sparkSession)
     // The corpus-side exchange is PINNED at the session partition count
     // (r21): the broadcast Q×C dot loop — the op's dominant compute — runs
     // in the stage that reads this exchange, and AQE's size-based
@@ -937,7 +936,6 @@ object Text {
     * quantity is integral, so the whole retrieval chain has an exact
     * cross-engine oracle. */
   def ragRetrievalFrom(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    thrivespark.functions.Register(docs.sparkSession)
     val C = 32; val S = 24
     val bucket = (w: Column) =>
       conv(substring(md5(w), 1, 6), 16, 10).cast("long") % 64

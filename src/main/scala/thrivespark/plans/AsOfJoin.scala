@@ -138,18 +138,15 @@ case class AsOfJoinExec(
 }
 
 /** Public-facing API: resolves key/time columns by name against the two
-  * frames, installs the strategy (public `spark.experimental` hook), and
-  * builds the plan. */
+  * frames, installs the engine (`functions.Register`, which adds the
+  * strategy) and builds the plan. */
 object AsOf {
   def backward(leftDf: DataFrame, rightDf: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
       rightTieBreak: String): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    thrivespark.functions.Register(spark)
     val lPlan = leftDf.queryExecution.analyzed
     val rPlan = rightDf.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n).getOrElse(
@@ -163,7 +160,7 @@ object AsOf {
 
 /** Single contained bridge to Dataset.ofRows (public in bytecode, package-
   * private to Scala). Everything else in this file uses public/DeveloperApi
-  * surfaces (Strategy, SparkPlan, experimental.extraStrategies). */
+  * surfaces (Strategy, SparkPlan). */
 object PlanBridge {
   private lazy val (module, method) = {
     val cls = Class.forName("org.apache.spark.sql.classic.Dataset$")

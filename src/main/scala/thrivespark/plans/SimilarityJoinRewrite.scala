@@ -1,6 +1,5 @@
 package thrivespark.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, HintInfo, Join, LogicalPlan, Project, SHUFFLE_MERGE}
@@ -127,13 +126,6 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * probing survives IEEE rounding of the two quotients (a boundary pair
     * must still land ≤ 1 apart). */
   def width(tau: Double): Double = math.sqrt(2.0 - 2.0 * tau) * 1.0000001
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
-  }
 
   private def bucketExpr(e: Expression, u: Array[Float], w: Double): Expression =
     // containsNull=false: probe vectors are dense literals, and since the

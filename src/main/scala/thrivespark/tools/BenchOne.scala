@@ -1,12 +1,15 @@
 package thrivespark.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Same-session per-key A/B timer for optimization work (guide §1): times
   * the named registry keys N times each through the same noop sink the
   * official Bench uses, in ONE warmed session, printing every rep. Repeated
   * in-session reps separate steady-state cost from first-touch cost (shared
   * staging, codegen, page cache), which single-shot suite runs conflate.
+  * After the last rep it prints the key's plan
+  * (`explainString(FormattedMode)`), the capture PLANS.md records.
   * Usage: tools/run.sh thrivespark.tools.BenchOne <sfDir> <reps> <key>...
   * NOT the official record — graft.Bench stays the only bench entrypoint. */
 object BenchOne {
@@ -31,19 +34,23 @@ object BenchOne {
         .write.mode("overwrite").parquet(tmp)
       val w = spark.read.parquet(tmp)
       w.filter(col("k") > 2).groupBy(col("k")).agg(sum(col("v"))).count()
-      thrivespark.functions.Register(spark)
     }
     keys.foreach { name =>
       val fn = thrivespark.Registry.queries.getOrElse(name,
         sys.error(s"unknown key: $name"))
-      val times = (1 to reps).map { i =>
+      val runs = (1 to reps).map { i =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        val df = fn(spark, sfDir)
+        df.write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"[benchone] $name rep$i ${sec}%7.3f s")
-        sec
+        (sec, df)
       }
+      val times = runs.map(_._1)
       println(f"[benchone] $name min=${times.min}%7.3f first=${times.head}%7.3f")
+      runs.lastOption.foreach { case (_, df) =>
+        println(df.queryExecution.explainString(FormattedMode))
+      }
     }
     spark.stop()
   }

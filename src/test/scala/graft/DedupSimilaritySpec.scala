@@ -142,7 +142,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("dedup_embedding_lsh: bucket cap is inert on the real corpus " +
       "(capped output == uncapped output)") {
-    thrivespark.functions.Register(spark)
     val emb = thrivespark.Tables.embeddings(spark, sf001)
     val capped = Dedup.embeddingLshSurvivors(emb, 0.4, Dedup.LshBucketCap)
       .collect().map(_.getLong(0)).toSeq
@@ -156,7 +155,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("sim_ann_incremental: delta assignment against existing cells == " +
       "one-shot assignment of everything (incremental ≡ full rebuild)") {
     import thrivespark.ops.Similarity
-    thrivespark.functions.Register(spark)
     val emb = thrivespark.Tables.embeddings(spark, sf001)
     val isDelta = col("vec_id") % 7 === 3
     val cent = Similarity.ivfCentroids(emb.filter(!isDelta))

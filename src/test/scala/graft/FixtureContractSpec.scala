@@ -129,7 +129,6 @@ class FixtureContractSpec extends AnyFunSuite {
     // LshBucketCap. The two agree only while no fixture bucket reaches the
     // cap — pin 4x headroom so corpus regeneration fails here, at the
     // cause, not as a mysterious hash mismatch in the driver differential.
-    thrivespark.functions.Register(spark)
     import thrivespark.ops.Dedup
     for (d <- Seq(sf0001, sf001)) {
       val maxBucket = Dedup.lshBandedCapped(Tables.embeddings(spark, d), Int.MaxValue)

@@ -11,10 +11,7 @@ import org.apache.spark.sql.functions._
 class HllDistinctSpec extends AnyFunSuite {
   import SparkTestBase._
 
-  private def hll(c: Column): Column = {
-    thrivespark.functions.Register(spark)
-    call_function("hll_distinct", c)
-  }
+  private def hll(c: Column): Column = call_function("hll_distinct", c)
 
   /** (hll_distinct, approx_count_distinct) of `c` over `df`, one job. */
   private def both(df: DataFrame, c: Column): (Long, Long) = {
@@ -93,6 +90,12 @@ class HllDistinctSpec extends AnyFunSuite {
     before.zip(infos).foreach { case ((n, a), (_, b)) =>
       assert(a eq b, s"$n was registered again")
     }
+    // the rule and the strategy are added once, however often it runs
+    val x = spark.experimental
+    assert(x.extraOptimizations.count(_ == thrivespark.plans.SimilarityJoinRewrite) == 1,
+      s"extraOptimizations: ${x.extraOptimizations}")
+    assert(x.extraStrategies.count(_ == thrivespark.plans.AsOfJoinStrategy) == 1,
+      s"extraStrategies: ${x.extraStrategies}")
     thrivespark.Tables.events(spark, sf0001).createOrReplaceTempView("hll_ev")
     val r = spark.sql("SELECT hll_distinct(user_id), " +
       "approx_count_distinct(user_id, 0.01) FROM hll_ev").head()

@@ -33,8 +33,6 @@ class PlanSpec extends AnyFunSuite {
   /** The naive similarity self-join on sf0001's embeddings, as a user
     * writes it: `vec_dot(e_a, e_b) > τ AND a_id < b_id`. */
   private def simSides: (DataFrame, DataFrame) = {
-    thrivespark.functions.Register(spark)
-    thrivespark.plans.SimilarityJoinRewrite.install(spark)
     val emb = thrivespark.Tables.embeddings(spark, sf0001)
     (emb.select(col("vec_id").as("a_id"), col("embedding").as("e_a")),
      emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b")))
@@ -124,7 +122,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("SimilarityJoinRewrite leaves equi-keyed similarity joins untouched") {
-    thrivespark.plans.SimilarityJoinRewrite.install(spark)
     // sim_threshold_pairs blocks on label (an equi conjunct): the rule must
     // not inject probes there — its plan stays a plain equi-join on label
     val p = plan("sim_threshold_pairs")
@@ -239,7 +236,6 @@ class PlanSpec extends AnyFunSuite {
   test("multi-projection blocking: prunes below single-projection in the " +
       "near-dup regime; no recall-1 scheme can prune at mid-τ (measured)") {
     import thrivespark.plans.SimilarityJoinRewrite
-    thrivespark.functions.Register(spark)
     val emb = thrivespark.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"))
     def bucketed(us: Seq[Array[Float]], w: Double): org.apache.spark.sql.DataFrame =
@@ -289,7 +285,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("custom Catalyst functions are callable from SQL") {
-    thrivespark.functions.Register(spark)
     val d = spark.sql(
       """SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)),
         |               array(cast(3.0 as float), cast(4.0 as float))) AS d""".stripMargin)
@@ -778,6 +773,9 @@ class PlanSpec extends AnyFunSuite {
   test("spark.sql.extensions path: a GraftExtensions session has the SQL " +
       "functions and the similarity-join rewrite with no Register call") {
     import org.apache.spark.sql.SparkSession
+    // create() runs on the suite's SparkContext: start it first, so the
+    // test also passes when it runs alone
+    spark.sparkContext
     val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
     val ext = try SparkSession.builder()
         .withExtensions(new thrivespark.GraftExtensions).create()
@@ -806,7 +804,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"rewrite did not fire via extensions:\n$p")
     assert(p.contains("__sim_bucket"), s"bucket key missing:\n$p")
-    // the same degenerate-regime plan as install(): the salt grid
+    // the same degenerate-regime plan as a Register-installed session: the salt grid
     assert(p.contains("__sim_salt_l"), s"salt grid missing:\n$p")
   }
 }

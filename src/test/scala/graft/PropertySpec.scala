@@ -14,7 +14,6 @@ class PropertySpec extends AnyFunSuite {
   test("vec_dot_long == the interpreted HOF formulation on generated long " +
       "vectors; nulls propagate; length = min(len a, len b)") {
     import spark.implicits._
-    thrivespark.functions.Register(spark)
     // generated vectors incl. negatives, zeros, and mismatched lengths
     val gen = Gen.listOfN(40, for {
       n <- Gen.choose(0, 8); m <- Gen.choose(0, 8)
@@ -60,7 +59,6 @@ class PropertySpec extends AnyFunSuite {
   test("known_dense: identity values, element type retyped non-null, " +
       "null array passes through (r19)") {
     import spark.implicits._
-    thrivespark.functions.Register(spark)
     val df = Seq((Seq(1.5f, 2.5f), true), (null.asInstanceOf[Seq[Float]], false))
       .toDF("a", "ok")
       .select(col("a"), call_function("known_dense", col("a")).as("d"))
@@ -108,7 +106,6 @@ class PropertySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("minhash-union UDAF: union of signatures == signature of union (per lang)") {
-    thrivespark.functions.Register(spark)
     val docs = Dedup.shingleDocs(spark, sf001)
       .join(thrivespark.Tables.documents(spark, sf001).select(col("doc_id"), col("lang")), "doc_id")
     // ground truth: re-shingle nothing — hash-set union per lang, then one
@@ -498,7 +495,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("ShingleHashes cardinality == distinct string shingles on random docs") {
     import spark.implicits._
-    thrivespark.functions.Register(spark)
     val vocab = Vector("key", "agg", "row", "scan", "slow", "fast", "table", "value")
     val gen = Gen.chooseNum(3, 40).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(vocab)).map(_.mkString(" ")))

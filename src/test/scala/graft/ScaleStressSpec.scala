@@ -34,7 +34,6 @@ class ScaleStressSpec extends AnyFunSuite {
   test("50x corpus: LSH buckets stay family-bounded, candidates stay " +
       "orders below O(n^2), CC converges in O(log diameter) rounds, " +
       "dedup collapses every family", ScaleStress) {
-    thrivespark.functions.Register(spark)
     val base = T.documents(spark, sf01)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 75)
@@ -335,7 +334,6 @@ class ScaleStressSpec extends AnyFunSuite {
     // the token-budget optimum, and the content-addressed split hits 90/5/5
     // at sequence grain.
     import thrivespark.ops.Pipeline
-    thrivespark.functions.Register(spark)
     val base = T.documents(spark, sf01)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 75)
@@ -478,7 +476,6 @@ class ScaleStressSpec extends AnyFunSuite {
     // for a readout you run on a sample, wrong as a standing 100 TB job.
     // The production lever is a deterministic hash cap to a FIXED batch;
     // this measures it at 10×.
-    thrivespark.functions.Register(spark)
     val emb = T.embeddings(spark, sf01)
     // block-offset growth (id = old + k·2000, NOT old·10+k): each copy
     // block covers the full id space mod 50, so the declared %50 sampler
@@ -538,7 +535,6 @@ class ScaleStressSpec extends AnyFunSuite {
     // set ⇒ the boundary holds the full 13x survivor set — the worst case
     // for the boundary, isolating exactly the cost under comparison).
     import thrivespark.ops.Pipeline
-    thrivespark.functions.Register(spark)
     val base = T.documents(spark, sf01)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 75)
@@ -581,7 +577,6 @@ class ScaleStressSpec extends AnyFunSuite {
   test("adversarial sign-correlated embeddings: the LSH bucket cap bounds " +
       "the worst bucket; uncapped would be one corpus-sized bucket per band",
       ScaleStress) {
-    thrivespark.functions.Register(spark)
     val N = 2000; val cap = 64
     // every coordinate strictly positive ⇒ every band key is "1111" for
     // every vector ⇒ without the cap, each of the 16 bands holds ONE
@@ -658,7 +653,6 @@ class ScaleStressSpec extends AnyFunSuite {
   test("10x corpus, fixed query batch: dense retrieval features stay O(N), " +
       "plan stays broadcast + codegen dot, output stays Q x k", ScaleStress) {
     import spark.implicits._
-    thrivespark.functions.Register(spark)
     val base = T.documents(spark, sf01).select(col("doc_id"), col("text"))
     val big = (0 until 10).map(k =>
         base.select((col("doc_id") * 10 + k).as("doc_id"),

@@ -131,6 +131,9 @@ class SharedCacheSpec extends AnyFunSuite {
 
   test("two live sessions never receive each other's entries") {
     val other = spark.newSession()
+    // the frames below come from library calls, not Registry, so the new
+    // session gets the engine install Registry would apply
+    thrivespark.functions.Register(other)
     val T = thrivespark.Tables
     val D = thrivespark.ops.Dedup
     def frames(s: SparkSession): Seq[(String, DataFrame)] = {

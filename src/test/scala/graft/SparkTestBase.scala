@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared local session for the whole test JVM (Test / fork := true),
+  * with the engine installed once, as `Registry` installs it before every op. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -13,6 +14,7 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    thrivespark.functions.Register(s)
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
