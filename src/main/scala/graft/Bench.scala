@@ -29,10 +29,12 @@ object Bench {
     // legacy root-level entries + the single ephemeral parent's children
     // (Scratch.dir puts all per-run checkpoints/sinks under graft_eph so
     // the /tmp root listing stays small; sweep INSIDE it entry-by-entry —
-    // one live child must not shield its stale siblings)
+    // one live child must not shield its stale siblings). At the root only
+    // directories: every graft_* entry the engine makes there is one, and a
+    // plain file of that name belongs to some other program.
     val stale =
       staleUnder(new java.io.File("/tmp"),
-        n => n.startsWith("graft_") && n != "graft_eph") ++
+        n => n.startsWith("graft_") && n != "graft_eph").filter(_.isDirectory) ++
       staleUnder(new java.io.File("/tmp/graft_eph"), _ => true)
     // commons-io delete: unlike a hand-rolled listFiles recursion it does
     // NOT follow directory symlinks, so a stale scratch entry linking into

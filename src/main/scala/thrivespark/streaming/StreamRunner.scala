@@ -63,16 +63,19 @@ object StreamRunner {
     * filesystem, still refuses to overwrite an existing metadata-log
     * batch, and is still wrapped by Spark's `ChecksumCheckpointFileManager`,
     * so checkpoint checksums stay on. Any other scheme (HDFS, object
-    * stores) keeps Spark's default.
+    * stores) keeps Spark's default. The files either manager creates no
+    * longer fork `chmod`: `file:` runs on `thrivespark.NioLocalFileSystem`,
+    * which sets their permissions through java.nio.
     *
     * State partitions. Streaming state is partitioned by
     * `spark.sql.shuffle.partitions` at the stream's FIRST start and pinned
     * in the checkpoint thereafter. Size it to the stream's key
-    * cardinality, not the batch-side default: every extra partition is an
-    * extra state-store instance committed per micro-batch (32 → 32
-    * HDFS-state commits per batch here, dominated by fs overhead). On a real
-    * cluster with millions of keys you would raise it; these demo streams
-    * carry a handful of keys. `None` leaves it alone (stateless streams).
+    * cardinality, not the batch-side default: every partition is one more
+    * state-store instance committed per micro-batch, so the 32 batch-side
+    * partitions would mean 32 HDFS-backed state commits per batch, each
+    * dominated by filesystem overhead. On a real cluster with millions of
+    * keys you would raise it; these demo streams carry a handful of keys.
+    * `None` leaves it alone (stateless streams).
     *
     * Both keys are session conf. A query fixes its checkpoint manager at
     * `start()` (its offset and commit logs, opened later on the stream

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import thrivespark.Tables
+import thrivespark.{Scratch, Tables}
 import thrivespark.ops.Bookmark
 import thrivespark.sinks.RecordingSink
 
@@ -12,8 +11,8 @@ class BookmarkSinkSpec extends AnyFunSuite {
   import SparkTestBase._
 
   test("incremental_bookmark: second run is a no-op; rollback reprocesses (#60)") {
-    val out = Files.createTempDirectory("graft_bm_out").toString
-    val bm = Files.createTempDirectory("graft_bm").toString + "/bookmark"
+    val out = Scratch.dir("bm_out")
+    val bm = Scratch.dir("bm") + "/bookmark"
     val events = Tables.events(spark, sf0001)
 
     // single-pass contract: the partitioned write must be the ONLY Spark job
@@ -46,8 +45,8 @@ class BookmarkSinkSpec extends AnyFunSuite {
     // can drop under load; incrementalLoad then falls back to recounting the
     // committed sink. The fallback must reproduce EXACTLY what the observe
     // metrics would have said, for both a fresh load and an incremental one.
-    val out = Files.createTempDirectory("graft_bm_rc").toString
-    val bm = Files.createTempDirectory("graft_bm_rc_b").toString + "/bookmark"
+    val out = Scratch.dir("bm_rc")
+    val bm = Scratch.dir("bm_rc_b") + "/bookmark"
     val events = Tables.events(spark, sf0001)
     val r1 = Bookmark.incrementalLoad(spark, events, out, bm)
     val (nAll, maxAll) = Bookmark.recountFromSink(spark, out, None)
@@ -65,13 +64,13 @@ class BookmarkSinkSpec extends AnyFunSuite {
     assert(maxInc.get.toString == parts.max)
 
     // empty/unreadable sink is the empty increment, not an error
-    val emptyDir = Files.createTempDirectory("graft_bm_rc_e").toString
+    val emptyDir = Scratch.dir("bm_rc_e")
     assert(Bookmark.recountFromSink(spark, emptyDir, None) == (0L, None))
   }
 
   test("compaction rewrites many small files into few, preserving rows") {
     import thrivespark.ops.Compaction
-    val dir = Files.createTempDirectory("graft_compact").toString + "/data"
+    val dir = Scratch.dir("compact") + "/data"
     val ev = Tables.events(spark, sf0001)
     ev.repartition(37).write.parquet(dir) // pathological small files
     val n = ev.count()
@@ -83,7 +82,7 @@ class BookmarkSinkSpec extends AnyFunSuite {
   test("partitioned compaction preserves the dt= layout (pruning survives)") {
     import thrivespark.ops.Compaction
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_compact_p").toString + "/data"
+    val dir = Scratch.dir("compact_p") + "/data"
     val ev = Tables.events(spark, sf0001).withColumn("dt", to_date(col("ts")))
     ev.repartition(17).write.partitionBy("dt").parquet(dir) // many files per dt=
     val n = ev.count()

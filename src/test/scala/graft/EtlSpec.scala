@@ -93,8 +93,8 @@ class EtlSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import thrivespark.ops.ZOrder
     val sf = sf001 // enough rows for ~32 distinct files
-    val zDir = s"/tmp/graft_zorder_spec_z"
-    val linDir = s"/tmp/graft_zorder_spec_lin"
+    val zDir = thrivespark.Scratch.dir("zorder_spec_z")
+    val linDir = thrivespark.Scratch.dir("zorder_spec_lin")
     ZOrder.write(spark, sf, zDir)
     // linear baseline: same data, same file count, sorted by l_partkey only
     val coded = ZOrder.coded(spark, sf)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import thrivespark.etl.ColumnMapping
+import thrivespark.Scratch
 import thrivespark.streaming.IngestPipeline
 
 /** End-to-end incremental ingestion: JSON lines → typed mapping →
@@ -21,7 +22,7 @@ class IngestPipelineSpec extends AnyFunSuite {
       |event_time:event_time:timestamp:required""".stripMargin)
 
   test("ingests incrementally, quarantines dirty rows, is exactly-once across restarts") {
-    val base = Files.createTempDirectory("graft_pipeline").toString
+    val base = Scratch.dir("pipeline")
     val src = s"$base/src"; Files.createDirectories(Paths.get(src))
     val sink = s"$base/sink"; val quarantine = s"$base/bad"; val cp = s"$base/cp"
 

@@ -265,5 +265,7 @@ class MultimodalSpec extends AnyFunSuite {
     val again = thrivespark.Registry.queries("source_binary_files")(spark, sf0001)
       .collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(s"/tmp/graft_binsrc_${new java.io.File(sf0001).getName}"))
   }
 }

@@ -319,10 +319,12 @@ class PlanSpec extends AnyFunSuite {
     // O(history) at 100 TB.
     Registry.queries("sink_partitioned")(spark, sf0001).count() // ensure sink
     val sink = s"/tmp/graft_sink_partitioned_${new java.io.File(sf0001).getName}"
-    val p = spark.read.parquet(sink)
-      .filter(col("dt") === "2024-01-15")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [isnotnull(dt"), s"no partition pruning:\n$p")
+    try {
+      val p = spark.read.parquet(sink)
+        .filter(col("dt") === "2024-01-15")
+        .queryExecution.executedPlan.toString
+      assert(p.contains("PartitionFilters: [isnotnull(dt"), s"no partition pruning:\n$p")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sink)): Unit
   }
 
   test("text_lm_score: top-K vocab via TakeOrdered, scored via broadcast join " +
@@ -375,15 +377,21 @@ class PlanSpec extends AnyFunSuite {
   test("sink_hive_table: catalog round-trip, partition listing, pruned read-back") {
     Registry.queries("sink_hive_table")(spark, sf0001).count() // materialize table
     val table = thrivespark.ops.Scans.hiveSinkTable(sf0001)
-    // the catalog knows the table AND its partitions (the Hive load contract)
-    assert(spark.catalog.tableExists(table))
-    val nParts = spark.sql(s"SHOW PARTITIONS $table").count()
-    assert(nParts >= 2, s"expected multiple dt partitions, got $nParts")
-    // a dt filter on the catalog read-back must prune partitions, not scan all
-    val p = spark.table(table)
-      .filter(col("dt") === "2024-01-15")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [isnotnull(dt"), s"no partition pruning:\n$p")
+    try {
+      // the catalog knows the table AND its partitions (the Hive load contract)
+      assert(spark.catalog.tableExists(table))
+      val nParts = spark.sql(s"SHOW PARTITIONS $table").count()
+      assert(nParts >= 2, s"expected multiple dt partitions, got $nParts")
+      // a dt filter on the catalog read-back must prune partitions, not scan all
+      val p = spark.table(table)
+        .filter(col("dt") === "2024-01-15")
+        .queryExecution.executedPlan.toString
+      assert(p.contains("PartitionFilters: [isnotnull(dt"), s"no partition pruning:\n$p")
+    } finally {
+      // external table: dropping it leaves the files, so remove them too
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp", table))
+    }
   }
 
   test("text_substring_dedup: shared-window join is size-chosen, not hint-forced " +

@@ -555,7 +555,7 @@ class ScaleStressSpec extends AnyFunSuite {
       s.unpersist(); n
     }
     // durable parquet boundary
-    val dir = s"/tmp/graft_boundary_13x"
+    val dir = thrivespark.Scratch.dir("boundary_13x")
     val (nDisk, tDisk) = timed {
       val s = Pipeline.survivorsOfDisk(bigDocs, noPairs, dir)
       Pipeline.gatedSurvivorsOf(s).count()
@@ -701,7 +701,7 @@ class ScaleStressSpec extends AnyFunSuite {
     val hours = 48
     val perHour = 400
     val totalRows = hours.toLong * perHour
-    val root = java.nio.file.Files.createTempDirectory("graft_state_stress").toString
+    val root = thrivespark.Scratch.dir("state_stress")
     val src = s"$root/src"
     val baseUs = 1700000000L * 1000000L
     // one parquet file per hour, written in event-time order so the file
@@ -837,8 +837,8 @@ class ScaleStressSpec extends AnyFunSuite {
         .agg(sum("n_paras"), sum("n_kept")).head()
       ((out.getLong(0), out.getLong(1)), (System.nanoTime() - t0) / 1e9)
     }
-    val ((paras1, kept1), w1) = run(docs, "/tmp/graft_paradedup_1x")
-    val ((paras13, kept13), w13) = run(rep13, "/tmp/graft_paradedup_13x")
+    val ((paras1, kept1), w1) = run(docs, thrivespark.Scratch.dir("paradedup_1x"))
+    val ((paras13, kept13), w13) = run(rep13, thrivespark.Scratch.dir("paradedup_13x"))
     assert(paras13 == 13 * paras1, "paragraph mass must replicate exactly")
     assert(kept13 == kept1,
       s"replication must add zero new winners: kept $kept13 != 1x $kept1")
@@ -952,13 +952,13 @@ class ScaleStressSpec extends AnyFunSuite {
       val body = (if (d % 40 == 0) common else Seq.empty[String]) ++ own ++ fill
       (d.toLong, body.mkString(" "))
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssi20_src").toString
+    val dir = thrivespark.Scratch.dir("ssi20_src")
     (0 until 20).foreach { b =>
       docs.filter(col("doc_id") >= b * 10 && col("doc_id") < (b + 1) * 10)
         .coalesce(1).write.mode("append").parquet(dir)
     }
-    val cp = java.nio.file.Files.createTempDirectory("graft_ssi20_cp").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_ssi20_st").toString
+    val cp = thrivespark.Scratch.dir("ssi20_cp")
+    val root = thrivespark.Scratch.dir("ssi20_st")
     val streamed = thrivespark.streaming.StreamRunner
       .substringIndexStream(spark, dir, cp, s"$root/index", s"$root/report")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->

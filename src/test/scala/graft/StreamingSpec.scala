@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import thrivespark.streaming.StreamRunner
-import thrivespark.{Registry, Tables}
+import thrivespark.{Registry, Scratch, Tables}
 
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -22,7 +22,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream_tumbling: streaming execution equals batch result (#55)") {
     // stage events (µs timestamps) into a stream-source dir, several files
-    val dir = Files.createTempDirectory("graft_stream_src").toString
+    val dir = Scratch.dir("stream_src")
     Tables.events(spark, sf0001).repartition(4).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val in = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
@@ -39,7 +39,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_sliding + stream_session: streaming execution equals batch (#56/#57)") {
-    val dir = Files.createTempDirectory("graft_stream_src3").toString
+    val dir = Scratch.dir("stream_src3")
     Tables.events(spark, sf0001).repartition(3).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
 
@@ -122,10 +122,10 @@ class StreamingSpec extends AnyFunSuite {
   test("stream_custom_state: mapGroupsWithState carries state across batches") {
     // two batches touching the same user: the final state must be the union,
     // proving the state store round-trip (not per-batch aggregation)
-    val dir = Files.createTempDirectory("graft_stream_src3").toString
+    val dir = Scratch.dir("stream_src3")
     val ev = Tables.events(spark, sf0001).limit(100)
     ev.repartition(2).write.mode("overwrite").parquet(dir)
-    val cp = Files.createTempDirectory("graft_cp_st_t").toString
+    val cp = Scratch.dir("cp_st_t")
     val got = thrivespark.streaming.StreamRunner
       .userStateCounts(spark, dir, cp, "t_user_state")
     val want = ev.groupBy(org.apache.spark.sql.functions.col("user_id"))
@@ -143,21 +143,21 @@ class StreamingSpec extends AnyFunSuite {
     // batch 1 (file written first => replayed first) holds user 1's LATEST
     // event; batch 2 carries an older one. Last-write-wins would keep the
     // batch-2 row; latest-wins must keep batch 1's.
-    val dir = Files.createTempDirectory("graft_cdc_src").toString
+    val dir = Scratch.dir("cdc_src")
     Seq(Ev(10, ts("2024-01-01 12:00:00"), 1, "late", 5.0),
         Ev(11, ts("2024-01-01 09:00:00"), 2, "x", 1.0))
       .toDF().coalesce(1).write.mode("overwrite").parquet(s"$dir/f1")
     Seq(Ev(12, ts("2024-01-01 10:00:00"), 1, "early", 2.0),
         Ev(13, ts("2024-01-01 11:00:00"), 2, "y", 3.0))
       .toDF().coalesce(1).write.mode("overwrite").parquet(s"$dir/f2")
-    val stage = Files.createTempDirectory("graft_cdc_stage").toString
+    val stage = Scratch.dir("cdc_stage")
     // one file per batch, staged in a deterministic order
     val s1 = spark.read.parquet(s"$dir/f1"); val s2 = spark.read.parquet(s"$dir/f2")
     s1.coalesce(1).write.mode("append").parquet(stage)
     Thread.sleep(1100) // FileStreamSource orders by modification time
     s2.coalesce(1).write.mode("append").parquet(stage)
-    val cp = Files.createTempDirectory("graft_cdc_cp").toString
-    val st = Files.createTempDirectory("graft_cdc_st").toString + "/state"
+    val cp = Scratch.dir("cdc_cp")
+    val st = Scratch.dir("cdc_st") + "/state"
     val got = StreamRunner.cdcApply(spark, stage, cp, st)
       .select("user_id", "event_id", "event_type")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
@@ -168,11 +168,11 @@ class StreamingSpec extends AnyFunSuite {
     // not silently reset the state table
     java.nio.file.Files.move(java.nio.file.Paths.get(st),
       java.nio.file.Paths.get(s"${st}_next"))
-    val stage2 = Files.createTempDirectory("graft_cdc_stage2").toString
+    val stage2 = Scratch.dir("cdc_stage2")
     Seq(Ev(20, ts("2024-01-02 09:00:00"), 3, "z", 9.0))
       .toDF().coalesce(1).write.mode("overwrite").parquet(stage2)
     val got2 = StreamRunner.cdcApply(spark,
-        stage2, Files.createTempDirectory("graft_cdc_cp2").toString, st)
+        stage2, Scratch.dir("cdc_cp2"), st)
       .select("user_id", "event_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == Map(1L -> 10L, 2L -> 13L, 3L -> 20L),
@@ -181,11 +181,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream_available_now: resumes from the checkpoint and consumes " +
       "ONLY newly arrived files") {
-    val src = Files.createTempDirectory("graft_an_src").toString
+    val src = Scratch.dir("an_src")
     val ev = Tables.events(spark, sf0001)
     val half = ev.count() / 2
     ev.limit(half.toInt).coalesce(1).write.mode("append").parquet(src)
-    val base = Files.createTempDirectory("graft_an_cp").toString
+    val base = Scratch.dir("an_cp")
     val r1 = StreamRunner.availableNowRun(spark, src, s"$base/cp", "t_an")
     assert(r1 == half, s"run 1 must consume the staged half: $r1 != $half")
     // nothing new → nothing consumed
@@ -231,13 +231,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("StreamRunner file-replay paths run end to end (#58/#59 plumbing)") {
-    val dir = Files.createTempDirectory("graft_stream_src2").toString
+    val dir = Scratch.dir("stream_src2")
     Tables.events(spark, sf0001).limit(200).repartition(2)
       .write.mode("overwrite").parquet(dir)
-    val cp1 = Files.createTempDirectory("graft_cp1").toString
+    val cp1 = Scratch.dir("cp1")
     val t = StreamRunner.tumblingWithWatermark(spark, dir, cp1, "sr_tumble")
     assert(t.columns.toSeq == Seq("ws", "event_type", "n"))
-    val cp2 = Files.createTempDirectory("graft_cp2").toString
+    val cp2 = Scratch.dir("cp2")
     val d = StreamRunner.dedupWithinWatermark(spark, dir, cp2, "sr_dedup")
     assert(d.count() == 200) // event_id unique in source → nothing dropped
   }
@@ -257,7 +257,7 @@ class StreamingSpec extends AnyFunSuite {
       (12L, fill(12, 25).mkString(" ")),
       (21L, (fill(21, 5) ++ toks(0 until 12, "w")).mkString(" "))
     ).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_ssi_src").toString
+    val dir = Scratch.dir("ssi_src")
     // three sequentially-written single files => three ordered micro-batches
     docs.filter(col("doc_id") < 10).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -265,8 +265,8 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("append").parquet(dir)
     docs.filter(col("doc_id") >= 20).coalesce(1)
       .write.mode("append").parquet(dir)
-    val cp = Files.createTempDirectory("graft_ssi_cp").toString
-    val root = Files.createTempDirectory("graft_ssi_state").toString
+    val cp = Scratch.dir("ssi_cp")
+    val root = Scratch.dir("ssi_state")
     val streamed = StreamRunner.substringIndexStream(spark, dir, cp,
         s"$root/index", s"$root/report")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -307,7 +307,7 @@ class StreamingSpec extends AnyFunSuite {
       "cell; crash-replay of a batch is a no-op") {
     import thrivespark.ops.Similarity
     val emb = Tables.embeddings(spark, sf0001)
-    val root = Files.createTempDirectory("graft_annig_test").toString
+    val root = Scratch.dir("annig_test")
     val centDir = s"$root/centroids"
     Similarity.ivfCentroids(emb).write.mode("overwrite").parquet(centDir)
     val oneShot = Similarity.ivfAssignTo(emb, spark.read.parquet(centDir))
@@ -350,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
     // so a batch reads only its probed cells' partitions
     import thrivespark.ops.Similarity
     val emb = Tables.embeddings(spark, sf0001)
-    val idx = Files.createTempDirectory("graft_annq_idx").toString
+    val idx = Scratch.dir("annq_idx")
     val cent = Similarity.ivfCentroids(emb)
     Similarity.ivfAssignTo(emb, cent)
       .write.partitionBy("cell").mode("overwrite").parquet(idx)
@@ -366,7 +366,7 @@ class StreamingSpec extends AnyFunSuite {
   test("srcFingerprint: single-FILE parquet sources fingerprint their own " +
       "(name, length, mtime); unlistable sources are always stale") {
     import thrivespark.DurableStage
-    val root = Files.createTempDirectory("graft_fp_test").toFile
+    val root = new java.io.File(Scratch.dir("fp_test"))
     try {
       // directory source: fingerprint tracks member changes
       val dir = new java.io.File(root, "t.parquet"); dir.mkdirs()
@@ -494,10 +494,10 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Tables.events(spark, sf0001)
     val cut = ev.agg(expr("timestamp_micros((min(unix_micros(ts)) + " +
       "max(unix_micros(ts))) div 2)")).head().getTimestamp(0)
-    val src = Files.createTempDirectory("graft_ssj_cs_src").toString
+    val src = Scratch.dir("ssj_cs_src")
     ev.filter(col("ts") < lit(cut)).coalesce(1).write.mode("overwrite").parquet(src)
     ev.filter(col("ts") >= lit(cut)).coalesce(1).write.mode("append").parquet(src)
-    val cp = Files.createTempDirectory("graft_ssj_cs_cp").toString
+    val cp = Scratch.dir("ssj_cs_cp")
     val streamed = StreamRunner.viewPurchaseJoin(spark, src, cp, "t_ssj_cs")
     val v = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("vt"))
@@ -522,7 +522,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(offsets.size >= 2 && offsets.forall(f => has(f, s".${f.getName}.crc")),
       s"offset files without a checksum: $offsets")
     // resume on the same local checkpoint: nothing new, nothing consumed
-    val an = Files.createTempDirectory("graft_an_cs").toString
+    val an = Scratch.dir("an_cs")
     val r1 = StreamRunner.availableNowRun(spark, src, s"$an/cp", "t_an_cs")
     assert(r1 == ev.count(), s"run 1 consumed $r1")
     val r2 = StreamRunner.availableNowRun(spark, src, s"$an/cp", "t_an_cs")
@@ -534,7 +534,7 @@ class StreamingSpec extends AnyFunSuite {
     import thrivespark.ops.StreamingOps
     def replay(i: Int): (Seq[(Long, String, Long)], Int) = {
       val stage = StreamingOps.stageDir(spark, sf0001)
-      val cp = Files.createTempDirectory("graft_cp_wm_det").toString
+      val cp = Scratch.dir("cp_wm_det")
       val rows = StreamRunner.tumblingWithWatermark(spark, stage, cp, s"t_wm_det_$i")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
       val batches = new java.io.File(cp, "commits").list().count(_.forall(_.isDigit))

@@ -22,7 +22,7 @@ class TrainingMixSpec extends AnyFunSuite {
 
   test("paragraph dedup: first doc keeps, later docs lose, order preserved") {
     val b1 = para("b1"); val b2 = para("b2"); val b3 = para("b3"); val b4 = para("b4")
-    val dir = "/tmp/graft_paradedup_fixture"
+    val dir = thrivespark.Scratch.dir("paradedup_fixture")
     import spark.implicits._
     Seq(
       (1L, s"$b1 $b2"),       // first holder of b1 and b2
