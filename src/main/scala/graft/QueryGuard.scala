@@ -20,7 +20,7 @@ object QueryGuard {
   def timed[A](spark: SparkSession, name: String, timeoutSec: Long)(
       f: => A): Either[String, A] = {
     val group = s"guard_$name"
-    // ops (StreamRunner.withStreamConf) mutate these session conf keys
+    // ops (StreamRunner.withStatePartitions) mutate these session conf keys
     // with a worker-thread finally; if the worker is abandoned below, that
     // restore may never run (or fire asynchronously mid-flight during a
     // LATER query) — snapshot here so the caller thread can restore them

@@ -9,7 +9,8 @@ package thrivespark
   * age-sweeps inside it (entries idle >10 min) so concurrent live runs keep
   * their state while completed runs' litter is reclaimed. */
 object Scratch {
-  private val Root = java.nio.file.Paths.get("/tmp/graft_eph")
+  /** The one ephemeral parent; fixed-name per-run dirs nest here too. */
+  val Root = java.nio.file.Paths.get("/tmp/graft_eph")
 
   /** A fresh unique dir under the ephemeral parent, e.g. dir("cp_wm"). */
   def dir(prefix: String): String = {

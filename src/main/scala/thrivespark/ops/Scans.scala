@@ -1,7 +1,7 @@
 package thrivespark.ops
 
 import org.apache.spark.sql.functions._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{Op, Scratch, Tables => T}
 import thrivespark.Det._
 
 /** SURVEY.md §2.1 — scans, sources, sinks (#1–#4; #5 JDBC is in
@@ -67,7 +67,7 @@ object Scans {
     // through spark.table (catalog resolution, partition-aware scan —
     // partition pruning on dt is asserted in PlanSpec), and the audit
     // aggregation is oracle-checked against the source. The table is
-    // external at a /tmp location so the repo tree stays clean; the name
+    // external under /tmp/graft_eph so the repo tree stays clean; the name
     // and path are dataset-scoped and the write is an idempotent
     // overwrite. At scale this is exactly the Hive-metastore pattern —
     // same API, the catalog just points at HMS instead.
@@ -78,7 +78,7 @@ object Scans {
         T.events(s, d).withColumn("dt", to_date($c("ts")))
           .repartition($c("dt"))
           .write.mode("overwrite").partitionBy("dt")
-          .option("path", s"/tmp/$table")
+          .option("path", hiveSinkDir(d))
           .saveAsTable(table)
         s.table(table)
           .groupBy($c("dt")).agg(count(lit(1)).as("cnt"))
@@ -168,7 +168,7 @@ object Scans {
               ORDER BY s.media_id""")),
   )
 
-  /** Catalog name (and /tmp leaf) for the sink_hive_table external table.
+  /** Catalog name (and directory name) for the sink_hive_table external table.
     * The tag makes it unique PER JVM: two concurrent runs over the same
     * dataset (a test suite alongside a bench) get disjoint directories and
     * catalog entries, so neither can clobber the other's live table —
@@ -177,11 +177,14 @@ object Scans {
     * Within one JVM reruns reuse the table (sequential, Overwrite-safe);
     * cleanup is deliberately NOT here — the returned plan reads the table
     * lazily after this function exits — the stale dirs are reaped by
-    * Bench's age-guarded scratch cleanup. */
+    * Bench's age-guarded sweep of Scratch's parent. */
   private lazy val runTag =
     java.lang.Long.toHexString(ProcessHandle.current.pid ^ System.nanoTime())
   def hiveSinkTable(d: String): String =
     s"graft_hivetbl_${new java.io.File(d).getName.replace('.', '_')}_$runTag"
+  /** The table's location: a fixed per-JVM child of Scratch's parent, so
+    * repeated JVMs add no entry at the /tmp root. */
+  def hiveSinkDir(d: String): String = Scratch.Root.resolve(hiveSinkTable(d)).toString
 
   private def $c(n: String) = col(n)
 }

@@ -459,8 +459,8 @@ class BenchSpec extends AnyFunSuite {
     assert(spark.range(5).count() == 5, "session unusable after cancellation")
   }
 
-  test("QueryGuard restores every key StreamRunner.withStreamConf sets when " +
-      "it abandons a timed-out op") {
+  test("QueryGuard restores the state-partition count StreamRunner.withStatePartitions " +
+      "sets when it abandons a timed-out op") {
     import java.util.concurrent.CountDownLatch
     import thrivespark.streaming.StreamRunner
     val spark = SparkTestBase.spark
@@ -470,7 +470,7 @@ class BenchSpec extends AnyFunSuite {
     val release = new CountDownLatch(1)
     try {
       val r = QueryGuard.timed(spark, "scoped_hang", 1L) {
-        StreamRunner.withStreamConf(spark, "/tmp/graft_guard_cp", Some(3)) {
+        StreamRunner.withStatePartitions(spark, 3) {
           entered.countDown()
           // deaf to the guard's interrupt, so the wrapper's own finally
           // cannot be what puts the keys back

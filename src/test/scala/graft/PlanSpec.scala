@@ -390,7 +390,26 @@ class PlanSpec extends AnyFunSuite {
     } finally {
       // external table: dropping it leaves the files, so remove them too
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp", table))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(thrivespark.ops.Scans.hiveSinkDir(sf0001)))
+    }
+  }
+
+  test("sink_hive_table adds no entry at the /tmp root") {
+    // graft_eph is the one shared parent the engine's ephemera nest under
+    def roots() = Option(new java.io.File("/tmp").list()).toSet.flatten
+      .filter(n => n.startsWith("graft_") && n != "graft_eph")
+    val before = roots()
+    val table = thrivespark.ops.Scans.hiveSinkTable(sf0001)
+    try {
+      assert(Registry.queries("sink_hive_table")(spark, sf0001).count() > 0)
+      val added = roots() -- before
+      assert(added.isEmpty, s"new /tmp root entries: $added")
+      assert(new java.io.File(thrivespark.ops.Scans.hiveSinkDir(sf0001)).isDirectory)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(thrivespark.ops.Scans.hiveSinkDir(sf0001)))
     }
   }
 

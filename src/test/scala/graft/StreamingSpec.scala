@@ -448,42 +448,33 @@ class StreamingSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(root): Unit
   }
 
-  test("withStreamConf: a local checkpoint runs on Spark's FileSystem-based " +
-      "manager, a non-local one keeps the default, and the previous values " +
-      "come back on exit and on an exception") {
-    val key = StreamRunner.CheckpointManagerKey
+  test("withStatePartitions sets the state-partition count inside, restores it " +
+      "on exit and on an exception, and leaves checkpointFileManagerClass untouched") {
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
     val shuf = "spark.sql.shuffle.partitions"
     val shufBefore = spark.conf.get(shuf)
-    assert(spark.conf.getOption(key).isEmpty, "the suite starts on Spark's default")
-    Seq("/tmp/graft_cp_scope", "file:///tmp/graft_cp_scope").foreach { cp =>
-      StreamRunner.withStreamConf(spark, cp, Some(3)) {
-        assert(spark.conf.getOption(key).contains(StreamRunner.LocalCheckpointManager), cp)
-        assert(spark.conf.get(shuf) == "3")
+    assert(spark.conf.getOption(manager).isEmpty, "the suite starts on Spark's default")
+    StreamRunner.withStatePartitions(spark, 3) {
+      assert(spark.conf.get(shuf) == "3")
+      assert(spark.conf.getOption(manager).isEmpty, "the scope must not pick a manager")
+    }
+    assert(spark.conf.get(shuf) == shufBefore)
+    intercept[IllegalStateException] {
+      StreamRunner.withStatePartitions(spark, 3) {
+        throw new IllegalStateException("op failed mid-stream")
       }
-      assert(spark.conf.getOption(key).isEmpty && spark.conf.get(shuf) == shufBefore)
     }
-    // a conf check only: no query is started against the namenode
-    StreamRunner.withStreamConf(spark, "hdfs://nn/cp") {
-      assert(spark.conf.getOption(key).isEmpty, "hdfs must keep Spark's default")
-      assert(spark.conf.get(shuf) == shufBefore, "no state-partition scope asked for")
-    }
-    // a value the session already had comes back after an exception, and
-    // a non-local checkpoint leaves it in force
+    assert(spark.conf.get(shuf) == shufBefore)
+    // a manager the session already has stays in force inside and after
     val pinned =
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
-    spark.conf.set(key, pinned)
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    spark.conf.set(manager, pinned)
     try {
-      intercept[IllegalStateException] {
-        StreamRunner.withStreamConf(spark, "/tmp/graft_cp_scope", Some(3)) {
-          assert(spark.conf.getOption(key).contains(StreamRunner.LocalCheckpointManager))
-          throw new IllegalStateException("op failed mid-stream")
-        }
+      StreamRunner.withStatePartitions(spark, 3) {
+        assert(spark.conf.getOption(manager).contains(pinned))
       }
-      assert(spark.conf.getOption(key).contains(pinned) && spark.conf.get(shuf) == shufBefore)
-      StreamRunner.withStreamConf(spark, "hdfs://nn/cp") {
-        assert(spark.conf.getOption(key).contains(pinned))
-      }
-    } finally spark.conf.unset(key)
+      assert(spark.conf.getOption(manager).contains(pinned))
+    } finally spark.conf.unset(manager)
   }
 
   test("stream_stream_join replay on a local checkpoint keeps checkpoint " +
@@ -548,20 +539,5 @@ class StreamingSpec extends AnyFunSuite {
     assert(batches1 == batches2, s"batch count moved: $batches1 vs $batches2")
     assert(rows1 == rows2, s"replay output moved between stagings " +
       s"(${rows1.size} vs ${rows2.size} rows)")
-  }
-
-  test("every source file that starts a streaming query does so inside " +
-      "StreamRunner.withStreamConf") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
-    val missing = try {
-      walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filter { f =>
-          val text = new String(Files.readAllBytes(f), "UTF-8")
-          text.contains(".writeStream") && !text.contains("withStreamConf(")
-        }.toList
-    } finally walk.close()
-    assert(missing.isEmpty, s"streaming queries started outside withStreamConf: $missing")
   }
 }
