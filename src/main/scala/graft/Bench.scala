@@ -299,57 +299,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val cleaned = cleanScratch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // 167 fast queries flood the shared listener queue (task + AQE + SQL
-      // events); at the default 10k capacity the bus can drop the
-      // SQLExecutionEnd events that observation metrics and QueryExecution
-      // listeners ride on (a dropped one hung incremental_bookmark's
-      // Observation.get for 15+ min mid-bench). Bookmark now bounds that
-      // wait library-side; this keeps the events from dropping at all.
-      .config("spark.scheduler.listenerbus.eventqueue.capacity", "50000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Steady-state measurement: pay JVM classloading + whole-stage-codegen
-    // compiler warmup on a throwaway dataset (NOT the benchmark data), so the
-    // first timed query measures the engine, not JIT startup. The JSON
-    // expressions are warmed explicitly: first use of the Jackson parse path
-    // costs ~5 s of classloading that otherwise lands on whichever query
-    // happens to parse JSON first (fn_json in r2, fn_map in r3).
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types._
-      val tmp = "/tmp/graft_bench_warmup"
-      spark.range(1000).select(col("id"), (col("id") % 7).as("k"),
-          col("id").cast("double").as("v"),
-          concat(lit("{\"k\":"), col("id") % 10, lit("}")).as("js"))
-        .write.mode("overwrite").parquet(tmp)
-      val w = spark.read.parquet(tmp)
-      w.filter(col("k") > 2).groupBy(col("k")).agg(sum(col("v"))).count()
-      w.join(w.select(col("k").as("k2")).distinct(), col("k") === col("k2"))
-        .count()
-      val js = StructType(Seq(StructField("k", IntegerType)))
-      w.select(from_json(col("js"), js).as("j"),
-          get_json_object(col("js"), "$.k").as("g"),
-          to_json(struct(col("k"))).as("t"))
-        .filter(col("j.k").isNotNull).count()
-      // custom codegen'd expressions (vec_dot & co.) compile per-session
-      thrivespark.functions.Register(spark)
-      val fv = array(col("v"), col("v")).cast("array<float>")
-      w.select(call_function("vec_dot", fv, fv)).count()
-      // structured-streaming machinery (micro-batch planner, state store,
-      // checkpoint IO) class-loads on first use — ~5 s that belongs to JVM
-      // startup, not to whichever stream_* query happens to run first
-      val cp = thrivespark.Scratch.dir("warm_cp")
-      val q = spark.readStream.schema(w.schema).parquet(tmp)
-        .groupBy(col("k")).agg(count(lit(1)))
-        .writeStream.outputMode("update").format("memory")
-        .queryName("graft_warmup_stream")
-        .option("checkpointLocation", cp).start()
-      q.processAllAvailable(); q.stop()
-    }
+    val spark = session(cpus)
+    warmUp(spark)
     // Calibrate AFTER warmup (so the probes measure the box, not JIT) and
     // again after the suite: contamination arriving mid-run is caught too.
     // CPU and I/O are probed independently — r5's contention was CPU, r6's
@@ -480,6 +431,68 @@ object Bench {
     // a fixed char budget and summarize the omitted fast tail.
     println(finalLine(total, results, calib, sfDir, retriedStr.length))
     spark.stop()
+  }
+
+  /** The session Bench, Verify and BenchOne run in: `local[cpus]`, one
+    * shuffle partition per core, no UI, WARN logging. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // 167 fast queries flood the shared listener queue (task + AQE + SQL
+      // events); at the default 10k capacity the bus can drop the
+      // SQLExecutionEnd events that observation metrics and QueryExecution
+      // listeners ride on (a dropped one hung incremental_bookmark's
+      // Observation.get for 15+ min mid-bench). Bookmark now bounds that
+      // wait library-side; this keeps the events from dropping at all.
+      .config("spark.scheduler.listenerbus.eventqueue.capacity", "50000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Steady-state measurement: pay JVM classloading + whole-stage-codegen
+    * compiler warmup on a throwaway dataset (NOT the benchmark data), so the
+    * first timed query measures the engine, not JIT startup. Covers parquet,
+    * aggregation, a join, the JSON expressions (first use of the Jackson
+    * parse path costs ~5 s of classloading that otherwise lands on whichever
+    * query happens to parse JSON first: fn_json in r2, fn_map in r3), the
+    * custom expressions and one streaming query. */
+  def warmUp(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val tmp = thrivespark.Scratch.dir("warmup")
+    val cp = thrivespark.Scratch.dir("warm_cp")
+    try {
+      spark.range(1000).select(col("id"), (col("id") % 7).as("k"),
+          col("id").cast("double").as("v"),
+          concat(lit("{\"k\":"), col("id") % 10, lit("}")).as("js"))
+        .write.mode("overwrite").parquet(tmp)
+      val w = spark.read.parquet(tmp)
+      w.filter(col("k") > 2).groupBy(col("k")).agg(sum(col("v"))).count()
+      w.join(w.select(col("k").as("k2")).distinct(), col("k") === col("k2"))
+        .count()
+      val js = StructType(Seq(StructField("k", IntegerType)))
+      w.select(from_json(col("js"), js).as("j"),
+          get_json_object(col("js"), "$.k").as("g"),
+          to_json(struct(col("k"))).as("t"))
+        .filter(col("j.k").isNotNull).count()
+      // custom codegen'd expressions (vec_dot & co.) compile per-session
+      thrivespark.functions.Register(spark)
+      val fv = array(col("v"), col("v")).cast("array<float>")
+      w.select(call_function("vec_dot", fv, fv)).count()
+      // structured-streaming machinery (micro-batch planner, state store,
+      // checkpoint IO) class-loads on first use — ~5 s that belongs to JVM
+      // startup, not to whichever stream_* query happens to run first
+      val q = spark.readStream.schema(w.schema).parquet(tmp)
+        .groupBy(col("k")).agg(count(lit(1)))
+        .writeStream.outputMode("update").format("memory")
+        .queryName("graft_warmup_stream")
+        .option("checkpointLocation", cp).start()
+      q.processAllAvailable(); q.stop()
+    } finally Seq(tmp, cp).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)): Unit)
   }
 
   /** The length-budgeted official final line (the driver captures only the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,9 @@ object Verify {
     // optional trailing keys: re-dump just those queries (iteration speed);
     // oracle_sql.json is always rewritten in full
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same defense as Bench: 167 fast queries can overflow the shared
-      // listener queue and drop the events observation metrics ride on
-      // (Bookmark bounds the wait library-side; this avoids the drop)
-      .config("spark.scheduler.listenerbus.eventqueue.capacity", "50000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    Bench.warmUp(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {

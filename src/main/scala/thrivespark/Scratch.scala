@@ -17,4 +17,18 @@ object Scratch {
     java.nio.file.Files.createDirectories(Root)
     java.nio.file.Files.createTempDirectory(Root, prefix + "_").toString
   }
+
+  private lazy val runTag =
+    java.lang.Long.toHexString(ProcessHandle.current.pid ^ System.nanoTime())
+
+  /** The sink `name` of fixture dir `sfDir` for this JVM, e.g.
+    * sink("jsonl", d) = `/tmp/graft_eph/graft_jsonl_sf0_01_<tag>`. Every
+    * call in one JVM returns the same path, so reruns overwrite it; the tag
+    * differs per JVM, so two concurrent runs over the same fixture (a test
+    * suite next to a bench) never write each other's sink. The op's result
+    * reads the sink lazily, so nothing here deletes it: graft.Bench's age
+    * sweep of `Root` does. The leaf is a valid table identifier. */
+  def sink(name: String, sfDir: String): String =
+    Root.resolve(s"graft_${name}_${new java.io.File(sfDir).getName.replace('.', '_')}_$runTag")
+      .toString
 }

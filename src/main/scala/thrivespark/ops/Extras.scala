@@ -3,7 +3,7 @@ package thrivespark.ops
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import thrivespark.{DurableStage, Op, Tables => T}
+import thrivespark.{DurableStage, Op, Scratch, Tables => T}
 import thrivespark.Det._
 
 /** Additional relational + ingestion surface beyond SURVEY.md §2's numbered
@@ -309,7 +309,7 @@ object Extras {
     // at scale prefer many moderate files over few huge ones.
     Op("source_jsonl_roundtrip",
       (s, d) => {
-        val dir = s"/tmp/graft_jsonl_${new java.io.File(d).getName}"
+        val dir = Scratch.sink("jsonl", d)
         T.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"), col("props"))
@@ -473,7 +473,7 @@ object Extras {
     // aggregate is over the multiset of lines, duplicates preserved.
     Op("source_text_roundtrip",
       (s, d) => {
-        val dir = s"/tmp/graft_txt_${new java.io.File(d).getName}"
+        val dir = Scratch.sink("txt", d)
         T.documents(s, d).select(col("text"))
           .write.mode("overwrite").text(dir)
         s.read.text(dir)
@@ -495,7 +495,7 @@ object Extras {
 
     Op("source_csv_roundtrip",
       (s, d) => {
-        val dir = s"/tmp/graft_csv_${new java.io.File(d).getName}"
+        val dir = Scratch.sink("csv", d)
         T.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderdate").cast("date").as("o_date"))
@@ -941,7 +941,7 @@ object Extras {
     // Oracle checks content invariance against the parquet source.
     Op("source_orc_roundtrip",
       (s, d) => {
-        val dir = s"/tmp/graft_orc_${new java.io.File(d).getName}"
+        val dir = Scratch.sink("orc", d)
         T.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice"), col("o_orderdate").cast("date").as("o_date"))
@@ -1548,7 +1548,7 @@ object Extras {
       (s, d) => {
         import s.implicits._
         val keepDays = 7
-        val base = s"/tmp/graft_vacuum_${new java.io.File(d).getName}"
+        val base = Scratch.sink("vacuum", d)
         T.events(s, d).withColumn("dt", to_date(col("ts")))
           .repartition(col("dt"))
           .write.mode("overwrite").partitionBy("dt").parquet(base)
@@ -1632,7 +1632,7 @@ object Extras {
     // partition-prunable and the merged read is still one scan.
     Op("source_schema_evolution",
       (s, d) => {
-        val dir = s"/tmp/graft_evo_${new java.io.File(d).getName}"
+        val dir = Scratch.sink("evo", d)
         val ev = T.events(s, d)
         ev.filter(col("event_type") === "view")
           .select(col("event_id"), col("user_id"), col("event_type"))
@@ -1666,7 +1666,7 @@ object Extras {
     // layout pipeline is content-preserving and the z-code deterministic.
     Op("sink_zorder_layout",
       (s, d) => {
-        val dir = s"/tmp/graft_zorder_${new java.io.File(d).getName}"
+        val dir = Scratch.sink("zorder", d)
         ZOrder.write(s, d, dir)
         s.read.parquet(dir)
           .groupBy((col("z") / 256).cast("int").as("z_bucket"))

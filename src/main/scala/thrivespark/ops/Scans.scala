@@ -46,7 +46,7 @@ object Scans {
 
     Op("sink_partitioned",
       (s, d) => {
-        val sink = s"/tmp/graft_sink_partitioned_${new java.io.File(d).getName}"
+        val sink = Scratch.sink("sink_partitioned", d)
         // repartition by the partition column first: one file per partition
         // instead of (tasks × partitions) small files — the pattern that
         // keeps a Hive-style sink healthy at scale.
@@ -78,7 +78,7 @@ object Scans {
         T.events(s, d).withColumn("dt", to_date($c("ts")))
           .repartition($c("dt"))
           .write.mode("overwrite").partitionBy("dt")
-          .option("path", hiveSinkDir(d))
+          .option("path", Scratch.sink("hivetbl", d))
           .saveAsTable(table)
         s.table(table)
           .groupBy($c("dt")).agg(count(lit(1)).as("cnt"))
@@ -101,8 +101,7 @@ object Scans {
     Op("source_binary_files",
       (s, d) => {
         val mm = thrivespark.multimodal.Multimodal
-        val dir = java.nio.file.Paths.get(
-          s"/tmp/graft_binsrc_${new java.io.File(d).getName}")
+        val dir = java.nio.file.Paths.get(Scratch.sink("binsrc", d))
         java.nio.file.Files.createDirectories(dir)
         // hermetic fixture: clear stale .ppm files first — a previous
         // dataset sharing the leaf name must not leak rows into this read.
@@ -168,23 +167,12 @@ object Scans {
               ORDER BY s.media_id""")),
   )
 
-  /** Catalog name (and directory name) for the sink_hive_table external table.
-    * The tag makes it unique PER JVM: two concurrent runs over the same
-    * dataset (a test suite alongside a bench) get disjoint directories and
-    * catalog entries, so neither can clobber the other's live table —
-    * DROP TABLE on an external table does not remove files, so a shared
-    * fixed path would otherwise race on saveAsTable's Overwrite clearing.
-    * Within one JVM reruns reuse the table (sequential, Overwrite-safe);
-    * cleanup is deliberately NOT here — the returned plan reads the table
-    * lazily after this function exits — the stale dirs are reaped by
-    * Bench's age-guarded sweep of Scratch's parent. */
-  private lazy val runTag =
-    java.lang.Long.toHexString(ProcessHandle.current.pid ^ System.nanoTime())
-  def hiveSinkTable(d: String): String =
-    s"graft_hivetbl_${new java.io.File(d).getName.replace('.', '_')}_$runTag"
-  /** The table's location: a fixed per-JVM child of Scratch's parent, so
-    * repeated JVMs add no entry at the /tmp root. */
-  def hiveSinkDir(d: String): String = Scratch.Root.resolve(hiveSinkTable(d)).toString
+  /** Catalog name of the sink_hive_table external table: the leaf of its
+    * per-JVM location `Scratch.sink("hivetbl", d)`. Two concurrent runs over
+    * the same dataset get disjoint tables and directories — DROP TABLE on
+    * an external table does not remove files, so a shared path would race
+    * on saveAsTable's Overwrite clearing. */
+  def hiveSinkTable(d: String): String = new java.io.File(Scratch.sink("hivetbl", d)).getName
 
   private def $c(n: String) = col(n)
 }

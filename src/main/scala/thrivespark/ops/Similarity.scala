@@ -179,7 +179,7 @@ object Similarity {
     val delta = emb.filter(isDelta)
     // build phase (runs once per index lifetime): centroids from the BASE
     // only + base assignments, persisted as the standing index tables
-    val idx = s"/tmp/graft_annidx_${new java.io.File(d).getName}"
+    val idx = thrivespark.Scratch.sink("annidx", d)
     val baseCent = ivfCentroids(base)       // one frame for both build steps
     baseCent.write.mode("overwrite").parquet(s"$idx/centroids")
     ivfAssignTo(base, baseCent)
@@ -1684,11 +1684,10 @@ object Similarity {
         val mm = thrivespark.multimodal.Multimodal
         val base = thrivespark.Scratch.dir("mmdec")
         val stage = s"$base/stage"
-        mm.mediaPpmFromDocuments(T.documents(s, d))
-          .repartition(4)
-          .write.mode("overwrite").parquet(stage)
+        val media = mm.mediaPpmFromDocuments(T.documents(s, d)).repartition(4)
+        media.write.mode("overwrite").parquet(stage)
         thrivespark.streaming.StreamRunner.decodeMediaAvailableNow(
-            s, stage, s"$base/out", s"$base/cp",
+            s, stage, media.schema, s"$base/out", s"$base/cp",
             "q_mmdec_" + new java.io.File(d).getName)
           .select(col("media_id"), col("width"), col("height"),
             col("n_pixel_bytes"), col("r_mean_micros"), col("g_mean_micros"),

@@ -71,7 +71,7 @@ object StreamingOps {
         val stage = stageDir(s, d)
         val cp = thrivespark.Scratch.dir("cp_wm")
         thrivespark.streaming.StreamRunner.tumblingWithWatermark(
-          s, stage, cp, s"q_wm_late_${tag(d)}")
+          s, stage, T.events(s, d).schema, cp, s"q_wm_late_${tag(d)}")
       },
       None),
 
@@ -80,7 +80,7 @@ object StreamingOps {
         val stage = stageDirOrderedFlush(s, d)
         val cp = thrivespark.Scratch.dir("cp_dd")
         thrivespark.streaming.StreamRunner.dedupWithinWatermark(
-          s, stage, cp, s"q_dedup_state_${tag(d)}")
+          s, stage, T.events(s, d).schema, cp, s"q_dedup_state_${tag(d)}")
           .filter(col("event_id") >= 0) // drop the shared stage's sentinels
           .orderBy(col("event_id"))
       },
@@ -100,7 +100,7 @@ object StreamingOps {
         val stage = stageDirOrderedFlush(s, d)
         val cp = thrivespark.Scratch.dir("cp_ssj")
         thrivespark.streaming.StreamRunner.viewPurchaseJoin(
-          s, stage, cp, s"q_ssj_${tag(d)}")
+          s, stage, T.events(s, d).schema, cp, s"q_ssj_${tag(d)}")
           // the shared stage's two sentinels (view@far, purchase@far+1s,
           // both user -1) join each other — filter the pair out
           .filter(col("user_id") >= 0)
@@ -123,7 +123,7 @@ object StreamingOps {
         val stage = stageDirOrderedFlush(s, d)
         val cp = thrivespark.Scratch.dir("cp_soj")
         thrivespark.streaming.StreamRunner.viewPurchaseLeftJoin(
-          s, stage, cp, s"q_soj_${tag(d)}")
+          s, stage, T.events(s, d).schema, cp, s"q_soj_${tag(d)}")
           .filter(col("user_id") >= 0)
           .orderBy(col("user_id"), col("view_us"), col("purchase_us").asc_nulls_first)
       },
@@ -149,8 +149,10 @@ object StreamingOps {
         val stage = stageDir(s, d)
         val base = thrivespark.Scratch.dir("an")
         val qn = s"q_an_${tag(d)}"
-        val r1 = thrivespark.streaming.StreamRunner.availableNowRun(s, stage, s"$base/cp", qn)
-        val r2 = thrivespark.streaming.StreamRunner.availableNowRun(s, stage, s"$base/cp", qn)
+        def run() = thrivespark.streaming.StreamRunner
+          .availableNowRun(s, stage, T.events(s, d).schema, s"$base/cp", qn)
+        val r1 = run()
+        val r2 = run()
         Seq((1, r1), (2, r2)).toDF("run", "n_input_rows").orderBy(col("run"))
       },
       Some("""SELECT 1 AS run, (SELECT count(*) FROM events) AS n_input_rows
@@ -166,7 +168,7 @@ object StreamingOps {
         val stage = stageDirOrderedFlush(s, d)
         val cp = thrivespark.Scratch.dir("cp_cdc")
         val st = thrivespark.Scratch.dir("cdc") + "/state"
-        thrivespark.streaming.StreamRunner.cdcApply(s, stage, cp, st)
+        thrivespark.streaming.StreamRunner.cdcApply(s, stage, T.events(s, d).schema, cp, st)
           .filter(col("user_id") >= 0) // drop the shared stage's sentinels
           .select(col("user_id"), unix_micros(col("ts")).as("last_us"),
             col("event_id").as("last_event_id"),
@@ -189,7 +191,7 @@ object StreamingOps {
         val stage = stageDir(s, d)
         val cp = thrivespark.Scratch.dir("cp_st")
         thrivespark.streaming.StreamRunner.userStateCounts(
-          s, stage, cp, s"q_user_state_${tag(d)}")
+          s, stage, T.events(s, d).schema, cp, s"q_user_state_${tag(d)}")
           .orderBy(col("user_id"))
       },
       Some("""SELECT user_id, count(*) AS n_events,
@@ -221,7 +223,8 @@ object StreamingOps {
         val cp = thrivespark.Scratch.dir("cp_ssi")
         val root = thrivespark.Scratch.dir("ssi")
         thrivespark.streaming.StreamRunner
-          .substringIndexStream(s, stage, cp, s"$root/index", s"$root/report")
+          .substringIndexStream(s, stage, T.documents(s, d).schema, cp,
+            s"$root/index", s"$root/report")
           .orderBy(col("a_id"), col("b_id"))
       },
       Some("""WITH toks AS (
@@ -265,7 +268,8 @@ object StreamingOps {
         // the stream sources); the op's work is the per-batch assignment
         val (centDir, _) = stageAnnDirs(s, d)
         thrivespark.streaming.StreamRunner
-          .annIngestStream(s, stage, cp, centDir, s"$root/index")
+          .annIngestStream(s, stage, T.embeddings(s, d).schema, cp, centDir,
+            s"$root/index")
       },
       Some(s"""WITH cent AS (
                 SELECT vec_id AS cent_id, embedding AS cent_emb
@@ -297,8 +301,8 @@ object StreamingOps {
         // input (the serving side probes an index that already exists —
         // building it is the ingest op's work), staged once per sf
         val (centDir, idxDir) = stageAnnDirs(s, d)
-        thrivespark.streaming.StreamRunner.annQueryStream(s, stage, cp,
-          centDir, idxDir, s"$root/results")
+        thrivespark.streaming.StreamRunner.annQueryStream(s, stage,
+          T.embeddings(s, d).schema, cp, centDir, idxDir, s"$root/results")
       },
       Some(s"""WITH cent AS (
                 SELECT vec_id AS cent_id, embedding AS cent_emb
@@ -338,11 +342,12 @@ object StreamingOps {
     Op("stream_score_model",
       (s, d) => {
         val stage = stageDocsDir(s, d)
-        val (w, prior) = Text.qualityModelTrain(thrivespark.Tables.documents(s, d))
+        val (w, prior) = Text.qualityModelTrain(T.documents(s, d))
         val pm = prior.head().getLong(0) // 1-row trained prior (constant-size)
         val cp = thrivespark.Scratch.dir("cp_score")
         thrivespark.streaming.StreamRunner
-          .scoreDocsStream(s, stage, cp, w, pm, s"q_score_${tag(d)}")
+          .scoreDocsStream(s, stage, T.documents(s, d).schema, cp, w, pm,
+            s"q_score_${tag(d)}")
           .select(col("doc_id"),
             round6(col("score_micros").cast("double") / 1e6).as("log_odds"),
             (col("score_micros") > 0).cast("int").as("model_keep"))
@@ -486,37 +491,36 @@ object StreamingOps {
 
   private def tag(d: String): String = new java.io.File(d).getName.replace(".", "_")
 
-  /** Stage documents once per sf as a 2-file stream source for the
-    * streaming-inference op (scoring is per-row map-side work, so arrival
-    * order and batch boundaries are irrelevant — hash-split is fine). */
-  private def stageDocsDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    DurableStage("docs", d, Seq("documents"), "v1") { dir =>
-      thrivespark.Tables.documents(s, d).repartition(2)
-        .write.mode("overwrite").parquet(dir)
+  /** Stage `rows` of the fixture table `table` once per sf as an `n`-file
+    * stream source, one micro-batch per file. The files are hash-split, so
+    * this is only for ops whose results depend on neither arrival order nor
+    * batch boundaries. */
+  private def stageSplit(name: String, d: String, table: String, version: String,
+      n: Int)(rows: => org.apache.spark.sql.DataFrame): String =
+    DurableStage(name, d, Seq(table), version) { dir =>
+      rows.repartition(n).write.mode("overwrite").parquet(dir)
     }
 
-  /** Stage embeddings once per sf as a 3-file stream source for the
-    * streaming ANN ingest (assignment is per-row map-side work against a
-    * fixed codebook, so arrival order and batch boundaries are
-    * irrelevant — hash-split is fine; 3 files = 3 micro-batches). */
-  private def stageEmbDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    DurableStage("emb", d, Seq("embeddings"), "v1") { dir =>
-      thrivespark.Tables.embeddings(s, d).repartition(3)
-        .write.mode("overwrite").parquet(dir)
-    }
+  /** Documents as a 2-file stream source for the streaming-inference and
+    * substring-index ops (scoring and span reports are boundary-invariant). */
+  def stageDocsDir(s: org.apache.spark.sql.SparkSession, d: String): String =   // public: StreamingSpec pins it
+    stageSplit("docs", d, "documents", "v1", 2)(T.documents(s, d))
 
-  /** Stage the retrieval-request feed once per sf: the query slice of the
-    * vector stream (vec_id % 50 — the same slice the oracle takes), 2 files
-    * = 2 micro-batches. The request stream is the op's declared input;
+  /** Embeddings as a 3-file stream source for the streaming ANN ingest
+    * (assignment is per-row work against a fixed codebook; 3 files = 3
+    * micro-batches). */
+  def stageEmbDir(s: org.apache.spark.sql.SparkSession, d: String): String =   // public: StreamingSpec pins it
+    stageSplit("emb", d, "embeddings", "v1", 3)(T.embeddings(s, d))
+
+  /** The retrieval-request feed: the query slice of the vector stream
+    * (vec_id % 50 — the same slice the oracle takes), 2 files = 2
+    * micro-batches. The request stream is the op's declared input;
     * reading the FULL embedding feed and filtering in-stream (the r17
     * shape) paid three full-corpus file reads per run for a 1/50th slice
     * — a feed no real serving deployment would be handed. */
-  private def stageAnnQueryFeed(s: org.apache.spark.sql.SparkSession, d: String): String =
-    DurableStage("annq", d, Seq("embeddings"), "annq-v1") { dir =>
-      thrivespark.Tables.embeddings(s, d)
-        .filter(col("vec_id") % 50 === 0).repartition(2)
-        .write.mode("overwrite").parquet(dir)
-    }
+  def stageAnnQueryFeed(s: org.apache.spark.sql.SparkSession, d: String): String =   // public: StreamingSpec pins it
+    stageSplit("annq", d, "embeddings", "annq-v1", 2)(
+      T.embeddings(s, d).filter(col("vec_id") % 50 === 0))
 
   /** Stage the STANDING ANN artifacts once per sf: the capped-seed centroid
     * table and the full cell-partitioned assignment index. These are the
@@ -573,7 +577,7 @@ object StreamingOps {
     * second staged copy of the corpus on disk (the sentinels' watermark
     * advance is otherwise inert: eviction runs after emission, so no real
     * row is affected). */
-  private def stageDirOrderedFlush(s: org.apache.spark.sql.SparkSession,
+  def stageDirOrderedFlush(s: org.apache.spark.sql.SparkSession,   // public: StreamingSpec pins it
       d: String): String = {
     import s.implicits._
     DurableStage("events_flush", d, Seq("events"), "v1") { dir =>

@@ -82,26 +82,72 @@ object Text {
       concat(lit(BpeD), concat_ws(BpeD + BpeD, split(col("text"), " ")),
         lit(BpeD)).as("s"))
 
-  /** Adjacent symbol pairs of the wrapped string `s` (exploded). Two
-    * hard-won shapes here: (1) the token array is MATERIALIZED by its own
-    * projection before the pair transform — inlining the split() into the
-    * lambda re-evaluates the O(n) tokenization per element_at, turning
-    * pair extraction O(n²) per document (the text_repetition r5 bug class;
-    * measured 65 s vs ~2 s for the whole 8-iteration training at sf0.1).
-    * (2) the single-symbol guard matters: Spark's sequence(1, 0) is
-    * DESCENDING ([1, 0] — not empty like DuckDB's generate_series), and
-    * element_at with index 0 throws. */
-  private def bpePairs(corpus: DataFrame): DataFrame = {
+  /** Adjacent symbol pairs (l, r) of the wrapped string `s` (exploded),
+    * each row carrying the `carry` columns along. Two hard-won shapes here:
+    * (1) the token array is MATERIALIZED by its own projection before the
+    * pair transform — inlining the split() into the lambda re-evaluates the
+    * O(n) tokenization per element_at, turning pair extraction O(n²) per
+    * document (the text_repetition r5 bug class; measured 65 s vs ~2 s for
+    * the whole 8-iteration training at sf0.1). (2) the single-symbol guard
+    * matters: Spark's sequence(1, 0) is DESCENDING ([1, 0] — not empty like
+    * DuckDB's generate_series), and element_at with index 0 throws. */
+  private def bpePairs(symbols: DataFrame, carry: Seq[Column]): DataFrame = {
     val t = split(expr("substring(s, 2, length(s) - 2)"), BpeD + BpeD)
-    corpus
-      .select(t.as("t"))
-      .select(explode(when(size(col("t")) >= 2,
+    symbols
+      .select(carry :+ t.as("t"): _*)
+      .select(carry :+ explode(when(size(col("t")) >= 2,
         transform(sequence(lit(1), size(col("t")) - 1),
           i => struct(element_at(col("t"), i).as("l"),
             element_at(col("t"), i + 1).as("r"))))
         .otherwise(array().cast("array<struct<l:string,r:string>>")))
-        .as("p"))
-      .select(col("p.l").as("l"), col("p.r").as("r"))
+        .as("p"): _*)
+      .select(Seq(col("p.l").as("l"), col("p.r").as("r")) ++ carry: _*)
+  }
+
+  /** The BPE training loop over `start`, a frame of wrapped symbol strings
+    * `s`: `iters` times, count adjacent pairs (`weight` None counts rows,
+    * Some(w) sums w), take the top pair by (count desc, l, r) and rewrite
+    * it in every `s` as one symbol, its halves joined by `joiner`. Returns
+    * (iteration, left, right, count) and the final rewritten frame.
+    *
+    * One job per iteration: the pair-count argmax is the only action, and
+    * it materializes the lazily-persisted rewritten frame as a side effect;
+    * the previous iteration's storage is released one-behind (after its
+    * child has been built from it) instead of via an eager count() per
+    * iteration — halving the job count, which at 8 iterations is the
+    * dominant cost of the loop, not the data. Callers release the RETURNED
+    * frame with `Shared.free`, not unpersist(), which leaves a checkpoint's
+    * blocks resident. */
+  private def bpeLoop(start: DataFrame, iters: Int, weight: Option[Column], joiner: String)
+      : (Seq[(Int, String, String, Long)], DataFrame) = {
+    var cur = start.persist()
+    var prev: DataFrame = null
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    for (it <- 0 until iters) {
+      val top = bpePairs(cur, weight.toSeq)
+        .groupBy(col("l"), col("r"))
+        .agg(weight.fold(count(lit(1)))(sum(_)).as("cnt"))
+        .orderBy(col("cnt").desc, col("l"), col("r"))
+        .limit(1).head()
+      // `cur` is now materialized in storage; its parent can go
+      if (prev != null) Shared.free(prev)
+      val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
+      merges += ((it, l, r, cnt))
+      prev = cur
+      // localCheckpoint (lazy), not persist: it TRUNCATES the lineage, so
+      // every iteration analyzes/compiles the same constant-size plan
+      // instead of a chain growing one replace per round — the growing
+      // chain's re-analysis + fresh codegen was ~1.3 s/iteration of pure
+      // planning overhead (measured: 10.6 s → ~3 s for the 8-round loop).
+      // On a cluster the equivalent lineage cut is the per-round corpus
+      // write the doc comment above describes.
+      cur = cur.withColumn("s",
+        replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
+          lit(BpeD + l + joiner + r + BpeD))).localCheckpoint(false)
+    }
+    cur.count()                       // materialize the final rewrite …
+    if (prev != null) Shared.free(prev) // … then release its parent
+    (merges.result(), cur)
   }
 
   // -------------------------------------- shared-derivation cache ---
@@ -169,45 +215,11 @@ object Text {
       .select(col("doc_id"), col("i"),
         md5(array_join(slice(col("ts"), col("i"), lit(K)), " ")).as("h"))
 
-  /** Train `iters` merges; returns (iteration, left, right, pair_count) and
-    * the final rewritten corpus. One job per iteration: the pair-count
-    * argmax is the only action, and it materializes the lazily-persisted
-    * rewritten corpus as a side effect; the previous iteration's storage is
-    * released one-behind (after its child has been built from it) instead
-    * of via an eager count() per iteration — halving the job count, which
-    * at 8 iterations is the dominant cost of the loop, not the data.
-    * Callers release the RETURNED corpus with `Shared.free`, not
-    * unpersist(), which leaves a checkpoint's blocks resident. */
+  /** Train `iters` word-level merges; returns (iteration, left, right,
+    * pair_count) and the final rewritten corpus (see bpeLoop). */
   def bpeTrain(docs: DataFrame, iters: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var corpus = bpeCorpus(docs).persist()
-    var prev: DataFrame = null
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (it <- 0 until iters) {
-      val top = bpePairs(corpus)
-        .groupBy(col("l"), col("r")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).head()
-      // `corpus` is now materialized in storage; its parent can go
-      if (prev != null) Shared.free(prev)
-      val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
-      merges += ((it, l, r, cnt))
-      prev = corpus
-      // localCheckpoint (lazy), not persist: it TRUNCATES the lineage, so
-      // every iteration analyzes/compiles the same constant-size plan
-      // instead of a chain growing one replace per round — the growing
-      // chain's re-analysis + fresh codegen was ~1.3 s/iteration of pure
-      // planning overhead (measured: 10.6 s → ~3 s for the 8-round loop).
-      // On a cluster the equivalent lineage cut is the per-round corpus
-      // write the doc comment above describes.
-      corpus = corpus.withColumn("s",
-        replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
-          lit(BpeD + l + " " + r + BpeD))).localCheckpoint(false)
-    }
-    corpus.count()                    // materialize the final rewrite …
-    if (prev != null) Shared.free(prev) // … then release its parent
-    (merges.result(), corpus)
-  }
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    bpeLoop(bpeCorpus(docs), iters, weight = None, joiner = " ")
 
   // -------------------------------------------------- char-level BPE ---
 
@@ -229,47 +241,13 @@ object Text {
             concat(array_remove(split(col("w"), ""), ""), array(lit("</w>")))),
           lit(BpeD)).as("s"))
 
-  /** Frequency-weighted adjacent pairs over the vocab's symbol strings
-    * (same materialize-the-array discipline as bpePairs). */
-  private def bpeCharPairs(vocab: DataFrame): DataFrame = {
-    val t = split(expr("substring(s, 2, length(s) - 2)"), BpeD + BpeD)
-    vocab
-      .select(col("freq"), t.as("t"))
-      .select(col("freq"), explode(when(size(col("t")) >= 2,
-        transform(sequence(lit(1), size(col("t")) - 1),
-          i => struct(element_at(col("t"), i).as("l"),
-            element_at(col("t"), i + 1).as("r"))))
-        .otherwise(array().cast("array<struct<l:string,r:string>>")))
-        .as("p"))
-      .select(col("p.l").as("l"), col("p.r").as("r"), col("freq"))
-  }
-
   /** Train `iters` char-level merges on the frequency table; returns
     * (iteration, left, right, weighted_count) and the final vocab with
-    * rewritten symbol strings. Same loop shape as bpeTrain. */
+    * rewritten symbol strings. Pairs are frequency-weighted, and a char
+    * merge concatenates its halves with no space. */
   def bpeCharTrain(docs: DataFrame, iters: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var vocab = bpeCharVocab(docs).persist()
-    var prev: DataFrame = null
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (it <- 0 until iters) {
-      val top = bpeCharPairs(vocab)
-        .groupBy(col("l"), col("r")).agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).head()
-      if (prev != null) Shared.free(prev)
-      val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
-      merges += ((it, l, r, cnt))
-      prev = vocab
-      vocab = vocab.withColumn("s",
-        replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
-          lit(BpeD + l + r + BpeD)))    // char merge concatenates, no space
-        .localCheckpoint(false)
-    }
-    vocab.count()
-    if (prev != null) Shared.free(prev)
-    (merges.result(), vocab)
-  }
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    bpeLoop(bpeCharVocab(docs), iters, weight = Some(col("freq")), joiner = "")
 
   /** Per-(session, dir) cache of the char-level training result — the
     * bpeMergesFor move applied to the char twin ops: text_bpe_char_train and

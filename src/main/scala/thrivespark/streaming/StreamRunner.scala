@@ -2,12 +2,21 @@ package thrivespark.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import thrivespark.DurableStage
 
 /** Structured Streaming execution paths (SURVEY.md §2.10 #58/#59): the ops
   * whose semantics only exist under streaming — watermark late-drop and
   * stateful dedup. Exercised by StreamingSpec via deterministic file replay
   * (one micro-batch per input file, maxFilesPerTrigger=1).
+  *
+  * Every entry point reads its staged directory through `replay`, with the
+  * schema of the staged table passed in by the caller, who already holds
+  * it: reading it from the parquet footers would cost one Spark job per
+  * stream start. Results leave through one of two drains: `drainToMemory`
+  * for the memory-sink queries, `drainEachBatch` for the foreachBatch
+  * sinks.
   *
   * At scale these are the standard Structured Streaming patterns: watermark
   * bounds state, dropDuplicatesWithinWatermark bounds the dedup map, and the
@@ -52,30 +61,55 @@ object StreamRunner {
   def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
     withConf(spark, Seq(ShufflePartitionsKey -> n.toString))(f)
 
-  /** #58: 1-hour tumbling counts with a 10-minute watermark; rows later than
-    * the watermark are dropped from the aggregate. Returns the materialized
-    * result after processing all available files in `srcDir`. */
-  def tumblingWithWatermark(spark: SparkSession, srcDir: String,
-      checkpoint: String, queryName: String): DataFrame =
-      withStatePartitions(spark, 4) {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val agg = in
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros(col("window.start")).as("ws"), col("event_type"), col("n"))
-    val q = agg.writeStream
-      .outputMode("update")
+  /** The file replay: one micro-batch per staged file, in the files'
+    * modification-time order. */
+  private def replay(spark: SparkSession, srcDir: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
+
+  /** Runs `out` into the memory table `queryName` on the default trigger
+    * until every available file is processed, and returns the table.
+    * `processAllAvailable` also waits for the trailing no-data batch in
+    * which a watermark query evicts its state. */
+  private def drainToMemory(out: DataFrame, outputMode: String, checkpoint: String,
+      queryName: String): DataFrame = {
+    val q = out.writeStream
+      .outputMode(outputMode)
       .format("memory")
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .start()
     q.processAllAvailable()
     q.stop()
-    spark.table(queryName)
+    out.sparkSession.table(queryName)
+  }
+
+  /** Hands each micro-batch of `in` to `sink` under Trigger.AvailableNow:
+    * every file available at the start, one batch per file, then the query
+    * stops. Its callers hold no watermark and no state store, so they need
+    * no trailing no-data batch, and the batch boundaries are the staged
+    * files. */
+  private def drainEachBatch(in: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    in.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(sink)
+      .start()
+      .awaitTermination()
+
+  /** #58: 1-hour tumbling counts with a 10-minute watermark; rows later than
+    * the watermark are dropped from the aggregate. Returns the materialized
+    * result after processing all available files in `srcDir`. */
+  def tumblingWithWatermark(spark: SparkSession, srcDir: String, schema: StructType,
+      checkpoint: String, queryName: String): DataFrame =
+      withStatePartitions(spark, 4) {
+    val agg = replay(spark, srcDir, schema)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(unix_micros(col("window.start")).as("ws"), col("event_type"), col("n"))
+    drainToMemory(agg, "update", checkpoint, queryName)
   }
 
   /** Custom-state element for mapGroupsWithState: exact fixed-point sum as
@@ -91,15 +125,12 @@ object StreamRunner {
     * per key with max_by on the monotone count. At scale this is the
     * arbitrary-stateful-processing path (timeouts, eviction, custom types)
     * that windowed aggregation can't express. */
-  def userStateCounts(spark: SparkSession, srcDir: String,
+  def userStateCounts(spark: SparkSession, srcDir: String, schema: StructType,
       checkpoint: String, queryName: String): DataFrame =
       withStatePartitions(spark, 4) {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val in = replay(spark, srcDir, schema)
       .select(col("user_id").cast("long"), col("value").cast("double"))
       .as[(Long, Double)]
     // exact: BigDecimal.valueOf goes through Double.toString (the shortest
@@ -121,15 +152,7 @@ object StreamRunner {
           (user, n, s)
       }
       .toDF("user_id", "n_events", "sum_micros")
-    val q = updated.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainToMemory(updated, "update", checkpoint, queryName)
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         (max_by(col("sum_micros"), col("n_events")) / 1e6).as("sum_value"))
@@ -144,28 +167,24 @@ object StreamRunner {
     * for joining two unbounded streams with bounded state: both sides
     * shuffle on user_id, state size is O(events within the watermark
     * horizon), not O(history). */
-  def viewPurchaseJoin(spark: SparkSession, srcDir: String,
+  def viewPurchaseJoin(spark: SparkSession, srcDir: String, schema: StructType,
       checkpoint: String, queryName: String): DataFrame =
-    viewPurchaseJoinOf(spark, srcDir, checkpoint, queryName, "inner")
+    viewPurchaseJoinOf(spark, srcDir, schema, checkpoint, queryName, "inner")
 
   /** Shared body of the inner and left-outer stream-stream joins — the two
     * ops differ ONLY in join type, so one helper keeps their sources,
     * watermarks and join condition from drifting apart. */
-  private def viewPurchaseJoinOf(spark: SparkSession, srcDir: String,
+  private def viewPurchaseJoinOf(spark: SparkSession, srcDir: String, schema: StructType,
       checkpoint: String, queryName: String, joinType: String): DataFrame =
       // 2, not 4: a stream-stream join commits FOUR state stores per
       // partition per micro-batch (keyed left/right + key-to-numValues
       // each side), so partition count is 2× the commit lever it is for
       // single-store aggs; 15 users of state don't need more parallelism
       withStatePartitions(spark, 2) {
-    val schema = spark.read.parquet(srcDir).schema
-    def src() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val views = src().filter(col("event_type") === "view")
+    val views = replay(spark, srcDir, schema).filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
+    val purchases = replay(spark, srcDir, schema).filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", "1 hour")
     val joined = views.join(purchases,
@@ -174,15 +193,7 @@ object StreamRunner {
               purchase_ts <= view_ts + INTERVAL 1 HOUR"""), joinType)
       .select(col("user_id"), unix_micros(col("view_ts")).as("view_us"),
         unix_micros(col("purchase_ts")).as("purchase_us"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainToMemory(joined, "append", checkpoint, queryName)
   }
 
   /** Stream-stream LEFT OUTER join: views with no purchase inside the
@@ -193,21 +204,18 @@ object StreamRunner {
     * (callers filter it); without it the final windows' unmatched rows sit
     * in state forever awaiting data that never comes — the defining
     * operational detail of streaming outer joins. */
-  def viewPurchaseLeftJoin(spark: SparkSession, srcDir: String,
+  def viewPurchaseLeftJoin(spark: SparkSession, srcDir: String, schema: StructType,
       checkpoint: String, queryName: String): DataFrame =
-    viewPurchaseJoinOf(spark, srcDir, checkpoint, queryName, "leftOuter")
+    viewPurchaseJoinOf(spark, srcDir, schema, checkpoint, queryName, "leftOuter")
 
   /** Incremental batch-style streaming (Trigger.AvailableNow): process
     * everything available, then self-terminate — the scheduled-job pattern.
     * Returns total input rows consumed by this invocation; a second run on
     * the same checkpoint with no new files must consume 0. */
-  def availableNowRun(spark: SparkSession, srcDir: String, checkpoint: String,
-      queryName: String): Long = withStatePartitions(spark, 4) {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val agg = in.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+  def availableNowRun(spark: SparkSession, srcDir: String, schema: StructType,
+      checkpoint: String, queryName: String): Long = withStatePartitions(spark, 4) {
+    val agg = replay(spark, srcDir, schema)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     // q.recentProgress is a ring buffer capped at
     // numRecentProgressUpdates (default 100) — with maxFilesPerTrigger=1 a
     // source holding >100 files would silently undercount the
@@ -218,7 +226,7 @@ object StreamRunner {
         .format("memory")
         .queryName(queryName)
         .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       q.recentProgress.map(_.numInputRows).sum
@@ -233,42 +241,33 @@ object StreamRunner {
     * to one row per key, and commits via write-then-swap — the file-system
     * stand-in for a transactional MERGE INTO; at scale the state table is
     * key-partitioned and the swap is a table-format commit. */
-  def cdcApply(spark: SparkSession, srcDir: String, checkpoint: String,
+  def cdcApply(spark: SparkSession, srcDir: String, schema: StructType, checkpoint: String,
       stateDir: String): DataFrame = withStatePartitions(spark, 4) {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val in = replay(spark, srcDir, schema)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
-    val q = in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // crash recovery: a crash between the swap's two renames leaves no
-        // state dir but a complete _next dir — adopt it before reading,
-        // otherwise the state table would silently reset
-        val root = java.nio.file.Paths.get(stateDir)
-        val tmp = s"${stateDir}_next"
-        if (!java.nio.file.Files.exists(root) && DurableStage.committed(tmp))
-          DurableStage.swap(java.nio.file.Paths.get(tmp), root)
-        val cur =
-          if (DurableStage.committed(stateDir)) s.read.parquet(stateDir)
-          else batch.limit(0)
-        val merged = cur.unionByName(batch)
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-            col("value"))).as("m"))
-          .select(col("user_id"), col("m.ts").as("ts"),
-            col("m.event_id").as("event_id"),
-            col("m.event_type").as("event_type"), col("m.value").as("value"))
-        merged.write.mode("overwrite").parquet(tmp)
+    drainEachBatch(in, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      // crash recovery: a crash between the swap's two renames leaves no
+      // state dir but a complete _next dir — adopt it before reading,
+      // otherwise the state table would silently reset
+      val root = java.nio.file.Paths.get(stateDir)
+      val tmp = s"${stateDir}_next"
+      if (!java.nio.file.Files.exists(root) && DurableStage.committed(tmp))
         DurableStage.swap(java.nio.file.Paths.get(tmp), root)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      val cur =
+        if (DurableStage.committed(stateDir)) s.read.parquet(stateDir)
+        else batch.limit(0)
+      val merged = cur.unionByName(batch)
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
+          col("value"))).as("m"))
+        .select(col("user_id"), col("m.ts").as("ts"),
+          col("m.event_id").as("event_id"),
+          col("m.event_type").as("event_type"), col("m.value").as("value"))
+      merged.write.mode("overwrite").parquet(tmp)
+      DurableStage.swap(java.nio.file.Paths.get(tmp), root)
+    }
     spark.read.parquet(stateDir)
   }
 
@@ -284,56 +283,46 @@ object StreamRunner {
     * one-shot sharedSpanRuns over the full corpus — an exactness
     * guarantee independent of batch boundaries, which is what makes this
     * streaming op fully oracleable by text_substring_exact's SQL. */
-  def substringIndexStream(spark: SparkSession, srcDir: String,
+  def substringIndexStream(spark: SparkSession, srcDir: String, schema: StructType,
       checkpoint: String, indexDir: String, reportDir: String): DataFrame = {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .select(col("doc_id"), col("text"))
+    val in = replay(spark, srcDir, schema).select(col("doc_id"), col("text"))
     val K = 8
-    val q = in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // this batch's windows: consumed by the report (both join sides)
-        // and the index append — persist for the batch, release after
-        val occB = thrivespark.ops.Text.windowOcc(batch, K)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // standing = every PRIOR batch's partition. Reading the root with
-        // partition discovery would also pick up a half-written current
-        // partition on crash-replay — enumerate committed prior batches
-        // explicitly instead.
-        val prior = Option(new java.io.File(indexDir).listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-            f.getName.stripPrefix("batch=").toLong < batchId)
-          .map(_.getPath)
-        val standing =
-          if (prior.nonEmpty)
-            s.read.parquet(prior.toIndexedSeq: _*)
-              .select(col("doc_id"), col("i"), col("h"))
-          else occB.limit(0)
-        // IDEMPOTENT per-batch sinks: foreachBatch re-runs a batch after a
-        // crash, so plain appends would double-write it — each batch owns
-        // a batch=<id> partition written with overwrite, making replays
-        // no-ops. Writes are compacted to 4 files per batch (repartition
-        // for the aggregate-sized report so join parallelism is untouched;
-        // coalesce for the cached occB read).
-        thrivespark.ops.Text.spanReportFromOcc(occB, standing, K)
-          .repartition(4).write.mode("overwrite")
-          .parquet(s"$reportDir/batch=$batchId")
-        // index write AFTER the report: the standing read above is lazy,
-        // but the report action has already consumed it by this point
-        occB.coalesce(4).write.mode("overwrite")
-          .parquet(s"$indexDir/batch=$batchId")
-        occB.unpersist()
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEachBatch(in, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // this batch's windows: consumed by the report (both join sides)
+      // and the index append — persist for the batch, release after
+      val occB = thrivespark.ops.Text.windowOcc(batch, K)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // standing = every PRIOR batch's partition. Reading the root with
+      // partition discovery would also pick up a half-written current
+      // partition on crash-replay — enumerate committed prior batches
+      // explicitly instead.
+      val prior = Option(new java.io.File(indexDir).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
+          f.getName.stripPrefix("batch=").toLong < batchId)
+        .map(_.getPath)
+      val standing =
+        if (prior.nonEmpty)
+          s.read.parquet(prior.toIndexedSeq: _*)
+            .select(col("doc_id"), col("i"), col("h"))
+        else occB.limit(0)
+      // IDEMPOTENT per-batch sinks: foreachBatch re-runs a batch after a
+      // crash, so plain appends would double-write it — each batch owns
+      // a batch=<id> partition written with overwrite, making replays
+      // no-ops. Writes are compacted to 4 files per batch (repartition
+      // for the aggregate-sized report so join parallelism is untouched;
+      // coalesce for the cached occB read).
+      thrivespark.ops.Text.spanReportFromOcc(occB, standing, K)
+        .repartition(4).write.mode("overwrite")
+        .parquet(s"$reportDir/batch=$batchId")
+      // index write AFTER the report: the standing read above is lazy,
+      // but the report action has already consumed it by this point
+      occB.coalesce(4).write.mode("overwrite")
+        .parquet(s"$indexDir/batch=$batchId")
+      occB.unpersist()
+      ()
+    }
     spark.read.parquet(reportDir)
       .select(col("a_id"), col("b_id"), col("n_runs"), col("max_shared_tokens"))
   }
@@ -355,28 +344,16 @@ object StreamRunner {
     * index equals the one-shot assignment of everything against the same
     * centroids — which is the oracle, and StreamingSpec replays the same
     * corpus at different staging splits to pin boundary-independence. */
-  def annIngestStream(spark: SparkSession, srcDir: String, checkpoint: String,
-      centDir: String, idxDir: String): DataFrame = {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .select(col("vec_id"), col("embedding"))
-    val q = in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val cent = s.read.parquet(centDir)   // standing cells, never rebuilt
-        thrivespark.ops.Similarity.ivfAssignTo(batch, cent)
-          .select(col("c_id"), col("cell"))
-          .coalesce(2).write.mode("overwrite")
-          .parquet(s"$idxDir/batch=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+  def annIngestStream(spark: SparkSession, srcDir: String, schema: StructType,
+      checkpoint: String, centDir: String, idxDir: String): DataFrame = {
+    val in = replay(spark, srcDir, schema).select(col("vec_id"), col("embedding"))
+    drainEachBatch(in, checkpoint) { (batch, batchId) =>
+      val cent = batch.sparkSession.read.parquet(centDir)   // standing cells, never rebuilt
+      thrivespark.ops.Similarity.ivfAssignTo(batch, cent)
+        .select(col("c_id"), col("cell"))
+        .coalesce(2).write.mode("overwrite")
+        .parquet(s"$idxDir/batch=$batchId")
+    }
     // read AFTER the stream drains: every batch=<id> partition is committed
     spark.read.parquet(idxDir)
       .select(col("c_id"), col("cell"))
@@ -398,44 +375,34 @@ object StreamRunner {
     * in exactly one batch and scoring is stateless against a fixed index,
     * so the union of batch results equals the one-shot probe of every
     * query — sim_ann_ivf's oracle, verbatim. */
-  def annQueryStream(spark: SparkSession, srcDir: String, checkpoint: String,
-      centDir: String, idxDir: String, outDir: String): DataFrame = {
+  def annQueryStream(spark: SparkSession, srcDir: String, schema: StructType,
+      checkpoint: String, centDir: String, idxDir: String, outDir: String): DataFrame = {
     // srcDir IS the request feed (the staged query slice) — each staged
     // file is one micro-batch of retrieval requests
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val in = replay(spark, srcDir, schema)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val q = in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val cent = s.read.parquet(centDir)
-        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val wCell = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))
-          // ≤ IvfK distinct cells whatever the batch size — codebook-bounded
-          val cells = b.join(broadcast(cent))
-            .withColumn("csim", thrivespark.ops.Similarity.dot(col("q_emb"), col("cent_emb")))
-            .withColumn("crn", row_number().over(wCell))
-            .filter(col("crn") <= 2)
-            .select(col("cent_id")).distinct()
-            .collect().map(_.getLong(0)).toSeq
-          val assigned = s.read.parquet(idxDir)
-            .filter(col("cell").isin(cells: _*))   // partition pruning
-            .select(col("c_id"), col("cell").cast("long").as("cell"), col("c_emb"))
-          thrivespark.ops.Similarity.probeTopK(b, cent, assigned, k = 5, nprobe = 2)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$batchId")
-        } finally b.unpersist(): Unit
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drainEachBatch(in, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val cent = s.read.parquet(centDir)
+      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val wCell = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))
+        // ≤ IvfK distinct cells whatever the batch size — codebook-bounded
+        val cells = b.join(broadcast(cent))
+          .withColumn("csim", thrivespark.ops.Similarity.dot(col("q_emb"), col("cent_emb")))
+          .withColumn("crn", row_number().over(wCell))
+          .filter(col("crn") <= 2)
+          .select(col("cent_id")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        val assigned = s.read.parquet(idxDir)
+          .filter(col("cell").isin(cells: _*))   // partition pruning
+          .select(col("c_id"), col("cell").cast("long").as("cell"), col("c_emb"))
+        thrivespark.ops.Similarity.probeTopK(b, cent, assigned, k = 5, nprobe = 2)
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/batch=$batchId")
+      } finally b.unpersist(): Unit
+    }
     spark.read.parquet(outDir)
       .select(col("q_id"), col("c_id"), col("cos"), col("rn"))
       .orderBy(col("q_id"), col("rn"))
@@ -451,46 +418,31 @@ object StreamRunner {
     * bookmark contract for payload columns). Because the stage is stateless
     * and deterministic, the sink contents equal the one-shot batch decode
     * exactly, whatever the batch boundaries — which is the oracle. */
-  def decodeMediaAvailableNow(spark: SparkSession, srcDir: String,
+  def decodeMediaAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
       outDir: String, checkpoint: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val feats = thrivespark.multimodal.Multimodal.extractPpmFeatures(in)
+    val feats = thrivespark.multimodal.Multimodal.extractPpmFeatures(
+      replay(spark, srcDir, schema))
     val q = feats.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
       .queryName(queryName)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     spark.read.parquet(outDir)
   }
 
   /** #59: stateful streaming dedup on event_id across micro-batches. */
-  def dedupWithinWatermark(spark: SparkSession, srcDir: String,
+  def dedupWithinWatermark(spark: SparkSession, srcDir: String, schema: StructType,
       checkpoint: String, queryName: String): DataFrame =
       withStatePartitions(spark, 4) {
-    val schema = spark.read.parquet(srcDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val deduped = in
+    val deduped = replay(spark, srcDir, schema)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("event_type"))
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainToMemory(deduped, "append", checkpoint, queryName)
   }
 
   /** Streaming model inference (train offline, score the firehose): apply a
@@ -502,9 +454,9 @@ object StreamRunner {
     * the shape that scores an ingest firehose with a model artifact a few
     * hundred bytes big. priorMicros is the 1-row trained prior, passed as a
     * literal. */
-  def scoreDocsStream(spark: SparkSession, srcDir: String, checkpoint: String,
-      weights: DataFrame, priorMicros: Long, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(srcDir).schema
+  def scoreDocsStream(spark: SparkSession, srcDir: String, schema: StructType,
+      checkpoint: String, weights: DataFrame, priorMicros: Long,
+      queryName: String): DataFrame = {
     // no maxFilesPerTrigger: scoring is stateless per-row work, so batch
     // boundaries cannot affect results — one trigger avoids paying the
     // ~1 s micro-batch overhead per staged file (multi-batch replay
@@ -520,14 +472,6 @@ object StreamRunner {
       .select(col("doc_id"), col("f_len"), col("f_stop"), col("f_wlen"),
         (lit(priorMicros) + col("w_f_len") + col("w_f_stop") + col("w_f_wlen"))
           .as("score_micros"))
-    val q = scored.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainToMemory(scored, "append", checkpoint, queryName)
   }
 }

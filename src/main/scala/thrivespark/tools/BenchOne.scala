@@ -1,6 +1,5 @@
 package thrivespark.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Same-session per-key A/B timer for optimization work (guide §1): times
@@ -17,24 +16,9 @@ object BenchOne {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
     val keys = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.listenerbus.eventqueue.capacity", "50000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same engine warmup as graft.Bench so rep 1 ≈ the suite's conditions
-    locally {
-      import org.apache.spark.sql.functions._
-      val tmp = "/tmp/graft_benchone_warmup"
-      spark.range(1000).select(col("id"), (col("id") % 7).as("k"),
-          col("id").cast("double").as("v"))
-        .write.mode("overwrite").parquet(tmp)
-      val w = spark.read.parquet(tmp)
-      w.filter(col("k") > 2).groupBy(col("k")).agg(sum(col("v"))).count()
-    }
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    // graft.Bench's session and warm-up, so rep 1 ≈ the suite's conditions
+    graft.Bench.warmUp(spark)
     keys.foreach { name =>
       val fn = thrivespark.Registry.queries.getOrElse(name,
         sys.error(s"unknown key: $name"))

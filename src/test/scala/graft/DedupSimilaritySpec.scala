@@ -171,9 +171,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // and the op's queries are exactly the delta slice, k-bounded
     val out = thrivespark.Registry.queries("sim_ann_incremental")(spark, sf001)
       .collect()
-    // the op's standing index, a fixed per-fixture path
+    // the op's standing index, its per-JVM sink
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/tmp/graft_annidx_${new java.io.File(sf001).getName}"))
+      new java.io.File(thrivespark.Scratch.sink("annidx", sf001)))
     assert(out.nonEmpty)
     assert(out.forall(r => r.getLong(0) % 7 == 3 && r.getLong(0) % 3 == 0),
       "queries must come from the delta batch")

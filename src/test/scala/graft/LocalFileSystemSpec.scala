@@ -146,7 +146,8 @@ class LocalFileSystemSpec extends AnyFunSuite {
       val src = s"$base/src"
       ev.filter(col("ts") < lit(cut)).coalesce(1).write.parquet(src)
       ev.filter(col("ts") >= lit(cut)).coalesce(1).write.mode("append").parquet(src)
-      assert(StreamRunner.viewPurchaseJoin(spark, src, s"$base/cp", "t_fs_nofork").count() > 0)
+      assert(StreamRunner.viewPurchaseJoin(spark, src, spark.read.parquet(src).schema,
+        s"$base/cp", "t_fs_nofork").count() > 0)
       val fc = FileContext.getFileContext(spark.sparkContext.hadoopConfiguration)
       val (tmp, dst) = (new Path(s"file://$base/fc/.tmp"), new Path(s"file://$base/fc/final"))
       for (i <- 1 to 2) {  // the second rename replaces an existing file

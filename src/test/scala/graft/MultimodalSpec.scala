@@ -266,6 +266,6 @@ class MultimodalSpec extends AnyFunSuite {
       .collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/tmp/graft_binsrc_${new java.io.File(sf0001).getName}"))
+      new java.io.File(thrivespark.Scratch.sink("binsrc", sf0001)))
   }
 }

@@ -318,7 +318,7 @@ class PlanSpec extends AnyFunSuite {
     // full scan — THE property that makes incremental reads O(day) not
     // O(history) at 100 TB.
     Registry.queries("sink_partitioned")(spark, sf0001).count() // ensure sink
-    val sink = s"/tmp/graft_sink_partitioned_${new java.io.File(sf0001).getName}"
+    val sink = thrivespark.Scratch.sink("sink_partitioned", sf0001)
     try {
       val p = spark.read.parquet(sink)
         .filter(col("dt") === "2024-01-15")
@@ -391,25 +391,45 @@ class PlanSpec extends AnyFunSuite {
       // external table: dropping it leaves the files, so remove them too
       spark.sql(s"DROP TABLE IF EXISTS $table")
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(thrivespark.ops.Scans.hiveSinkDir(sf0001)))
+        new java.io.File(thrivespark.Scratch.sink("hivetbl", sf0001)))
     }
   }
 
+  // graft_eph is the one shared parent the engine's ephemera nest under
+  private def graftRoots(): Set[String] = Option(new java.io.File("/tmp").list()).toSet.flatten
+    .filter(n => n.startsWith("graft_") && n != "graft_eph")
+
   test("sink_hive_table adds no entry at the /tmp root") {
-    // graft_eph is the one shared parent the engine's ephemera nest under
-    def roots() = Option(new java.io.File("/tmp").list()).toSet.flatten
-      .filter(n => n.startsWith("graft_") && n != "graft_eph")
-    val before = roots()
+    val before = graftRoots()
     val table = thrivespark.ops.Scans.hiveSinkTable(sf0001)
     try {
       assert(Registry.queries("sink_hive_table")(spark, sf0001).count() > 0)
-      val added = roots() -- before
+      val added = graftRoots() -- before
       assert(added.isEmpty, s"new /tmp root entries: $added")
-      assert(new java.io.File(thrivespark.ops.Scans.hiveSinkDir(sf0001)).isDirectory)
+      assert(new java.io.File(thrivespark.Scratch.sink("hivetbl", sf0001)).isDirectory)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(thrivespark.ops.Scans.hiveSinkDir(sf0001)))
+        new java.io.File(thrivespark.Scratch.sink("hivetbl", sf0001)))
+    }
+  }
+
+  test("the other per-run sink ops add no entry at the /tmp root") {
+    // op -> its per-JVM Scratch.sink name
+    val sinks = Seq("source_jsonl_roundtrip" -> "jsonl", "source_text_roundtrip" -> "txt",
+      "source_csv_roundtrip" -> "csv", "source_orc_roundtrip" -> "orc",
+      "etl_retention_vacuum" -> "vacuum", "source_schema_evolution" -> "evo",
+      "sink_zorder_layout" -> "zorder", "sink_partitioned" -> "sink_partitioned",
+      "source_binary_files" -> "binsrc", "sim_ann_incremental" -> "annidx")
+    val before = graftRoots()
+    try sinks.foreach { case (op, sink) =>
+      assert(Registry.queries(op)(spark, sf0001).count() > 0, op)
+      val added = graftRoots() -- before
+      assert(added.isEmpty, s"$op: new /tmp root entries: $added")
+      assert(new java.io.File(thrivespark.Scratch.sink(sink, sf0001)).isDirectory, op)
+    } finally sinks.foreach { case (_, sink) =>
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(thrivespark.Scratch.sink(sink, sf0001)))
     }
   }
 

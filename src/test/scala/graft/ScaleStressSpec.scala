@@ -960,7 +960,8 @@ class ScaleStressSpec extends AnyFunSuite {
     val cp = thrivespark.Scratch.dir("ssi20_cp")
     val root = thrivespark.Scratch.dir("ssi20_st")
     val streamed = thrivespark.streaming.StreamRunner
-      .substringIndexStream(spark, dir, cp, s"$root/index", s"$root/report")
+      .substringIndexStream(spark, dir, spark.read.parquet(dir).schema, cp,
+        s"$root/index", s"$root/report")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3))).toMap
     val oneShot = thrivespark.ops.Text.sharedSpanRuns(docs)

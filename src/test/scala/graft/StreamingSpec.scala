@@ -127,7 +127,7 @@ class StreamingSpec extends AnyFunSuite {
     ev.repartition(2).write.mode("overwrite").parquet(dir)
     val cp = Scratch.dir("cp_st_t")
     val got = thrivespark.streaming.StreamRunner
-      .userStateCounts(spark, dir, cp, "t_user_state")
+      .userStateCounts(spark, dir, spark.read.parquet(dir).schema, cp, "t_user_state")
     val want = ev.groupBy(org.apache.spark.sql.functions.col("user_id"))
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
@@ -158,7 +158,7 @@ class StreamingSpec extends AnyFunSuite {
     s2.coalesce(1).write.mode("append").parquet(stage)
     val cp = Scratch.dir("cdc_cp")
     val st = Scratch.dir("cdc_st") + "/state"
-    val got = StreamRunner.cdcApply(spark, stage, cp, st)
+    val got = StreamRunner.cdcApply(spark, stage, spark.read.parquet(stage).schema, cp, st)
       .select("user_id", "event_id", "event_type")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
     assert(got == Map(1L -> ((10L, "late")), 2L -> ((13L, "y"))),
@@ -172,7 +172,7 @@ class StreamingSpec extends AnyFunSuite {
     Seq(Ev(20, ts("2024-01-02 09:00:00"), 3, "z", 9.0))
       .toDF().coalesce(1).write.mode("overwrite").parquet(stage2)
     val got2 = StreamRunner.cdcApply(spark,
-        stage2, Scratch.dir("cdc_cp2"), st)
+        stage2, spark.read.parquet(stage2).schema, Scratch.dir("cdc_cp2"), st)
       .select("user_id", "event_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == Map(1L -> 10L, 2L -> 13L, 3L -> 20L),
@@ -186,15 +186,16 @@ class StreamingSpec extends AnyFunSuite {
     val half = ev.count() / 2
     ev.limit(half.toInt).coalesce(1).write.mode("append").parquet(src)
     val base = Scratch.dir("an_cp")
-    val r1 = StreamRunner.availableNowRun(spark, src, s"$base/cp", "t_an")
+    val schema = spark.read.parquet(src).schema
+    val r1 = StreamRunner.availableNowRun(spark, src, schema, s"$base/cp", "t_an")
     assert(r1 == half, s"run 1 must consume the staged half: $r1 != $half")
     // nothing new → nothing consumed
-    val r2 = StreamRunner.availableNowRun(spark, src, s"$base/cp", "t_an")
+    val r2 = StreamRunner.availableNowRun(spark, src, schema, s"$base/cp", "t_an")
     assert(r2 == 0, s"run 2 consumed $r2 rows from an unchanged source")
     // a new file lands → ONLY its rows are consumed
     Thread.sleep(1100)
     ev.limit(100).coalesce(1).write.mode("append").parquet(src)
-    val r3 = StreamRunner.availableNowRun(spark, src, s"$base/cp", "t_an")
+    val r3 = StreamRunner.availableNowRun(spark, src, schema, s"$base/cp", "t_an")
     assert(r3 == 100, s"run 3 must consume exactly the new file: $r3")
   }
 
@@ -234,11 +235,12 @@ class StreamingSpec extends AnyFunSuite {
     val dir = Scratch.dir("stream_src2")
     Tables.events(spark, sf0001).limit(200).repartition(2)
       .write.mode("overwrite").parquet(dir)
+    val schema = spark.read.parquet(dir).schema
     val cp1 = Scratch.dir("cp1")
-    val t = StreamRunner.tumblingWithWatermark(spark, dir, cp1, "sr_tumble")
+    val t = StreamRunner.tumblingWithWatermark(spark, dir, schema, cp1, "sr_tumble")
     assert(t.columns.toSeq == Seq("ws", "event_type", "n"))
     val cp2 = Scratch.dir("cp2")
-    val d = StreamRunner.dedupWithinWatermark(spark, dir, cp2, "sr_dedup")
+    val d = StreamRunner.dedupWithinWatermark(spark, dir, schema, cp2, "sr_dedup")
     assert(d.count() == 200) // event_id unique in source → nothing dropped
   }
 
@@ -267,8 +269,8 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("append").parquet(dir)
     val cp = Scratch.dir("ssi_cp")
     val root = Scratch.dir("ssi_state")
-    val streamed = StreamRunner.substringIndexStream(spark, dir, cp,
-        s"$root/index", s"$root/report")
+    val streamed = StreamRunner.substringIndexStream(spark, dir,
+        spark.read.parquet(dir).schema, cp, s"$root/index", s"$root/report")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3))).toMap
     val oneShot = thrivespark.ops.Text.sharedSpanRuns(docs)
@@ -317,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
     Seq(1, 5).foreach { nFiles =>
       val stage = s"$root/stage$nFiles"
       emb.repartition(nFiles).write.mode("overwrite").parquet(stage)
-      val out = StreamRunner.annIngestStream(spark, stage,
+      val out = StreamRunner.annIngestStream(spark, stage, spark.read.parquet(stage).schema,
           s"$root/cp$nFiles", centDir, s"$root/idx$nFiles")
         .collect().toSeq
       assert(out == oneShot,
@@ -489,7 +491,8 @@ class StreamingSpec extends AnyFunSuite {
     ev.filter(col("ts") < lit(cut)).coalesce(1).write.mode("overwrite").parquet(src)
     ev.filter(col("ts") >= lit(cut)).coalesce(1).write.mode("append").parquet(src)
     val cp = Scratch.dir("ssj_cs_cp")
-    val streamed = StreamRunner.viewPurchaseJoin(spark, src, cp, "t_ssj_cs")
+    val schema = spark.read.parquet(src).schema
+    val streamed = StreamRunner.viewPurchaseJoin(spark, src, schema, cp, "t_ssj_cs")
     val v = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("vt"))
     val p = ev.filter(col("event_type") === "purchase")
@@ -514,9 +517,9 @@ class StreamingSpec extends AnyFunSuite {
       s"offset files without a checksum: $offsets")
     // resume on the same local checkpoint: nothing new, nothing consumed
     val an = Scratch.dir("an_cs")
-    val r1 = StreamRunner.availableNowRun(spark, src, s"$an/cp", "t_an_cs")
+    val r1 = StreamRunner.availableNowRun(spark, src, schema, s"$an/cp", "t_an_cs")
     assert(r1 == ev.count(), s"run 1 consumed $r1")
-    val r2 = StreamRunner.availableNowRun(spark, src, s"$an/cp", "t_an_cs")
+    val r2 = StreamRunner.availableNowRun(spark, src, schema, s"$an/cp", "t_an_cs")
     assert(r2 == 0, s"run 2 consumed $r2 rows from an unchanged source")
   }
 
@@ -526,7 +529,8 @@ class StreamingSpec extends AnyFunSuite {
     def replay(i: Int): (Seq[(Long, String, Long)], Int) = {
       val stage = StreamingOps.stageDir(spark, sf0001)
       val cp = Scratch.dir("cp_wm_det")
-      val rows = StreamRunner.tumblingWithWatermark(spark, stage, cp, s"t_wm_det_$i")
+      val rows = StreamRunner.tumblingWithWatermark(spark, stage,
+          spark.read.parquet(stage).schema, cp, s"t_wm_det_$i")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
       val batches = new java.io.File(cp, "commits").list().count(_.forall(_.isDigit))
       // the next call finds no stage and writes a fresh one
@@ -539,5 +543,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(batches1 == batches2, s"batch count moved: $batches1 vs $batches2")
     assert(rows1 == rows2, s"replay output moved between stagings " +
       s"(${rows1.size} vs ${rows2.size} rows)")
+  }
+
+  test("each staged stream source reads back with the schema its op replays it with") {
+    // the ops pass the staged table's schema instead of reading the stage's
+    // footers; a stage whose columns drift from its table must fail here
+    import thrivespark.ops.StreamingOps
+    val events = Tables.events(spark, sf0001).schema
+    val emb = Tables.embeddings(spark, sf0001).schema
+    Seq(
+      "events" -> (StreamingOps.stageDir(spark, sf0001) -> events),
+      "events_flush" -> (StreamingOps.stageDirOrderedFlush(spark, sf0001) -> events),
+      "docs" -> (StreamingOps.stageDocsDir(spark, sf0001) ->
+        Tables.documents(spark, sf0001).schema),
+      "emb" -> (StreamingOps.stageEmbDir(spark, sf0001) -> emb),
+      "annq" -> (StreamingOps.stageAnnQueryFeed(spark, sf0001) -> emb)
+    ).foreach { case (name, (stage, passed)) =>
+      val staged = spark.read.parquet(stage).schema
+      assert(staged == passed, s"stage $name reads back as $staged, replayed as $passed")
+    }
+  }
+
+  test("StreamRunner: one replay source, no schema read per stream start") {
+    val file = new java.io.File("src/main/scala/thrivespark/streaming/StreamRunner.scala")
+    assert(file.isFile, s"run from the repo root: ${file.getAbsolutePath}")
+    val src = scala.io.Source.fromFile(file, "UTF-8")
+    val lines = try src.getLines().toList finally src.close()
+    val schemaReads = lines.filter(l => "read\\.parquet\\([^)]*\\)\\.schema".r.findFirstIn(l).isDefined)
+    assert(schemaReads.isEmpty, s"schema read from the files:\n${schemaReads.mkString("\n")}")
+    // the def each readStream sits in: the replay helper, and scoreDocsStream,
+    // which reads all staged files in one trigger
+    val readers = lines.indices.filter(i => lines(i).contains("readStream")).map { i =>
+      lines.take(i + 1).reverse.find(_.trim.matches("(private )?def \\w+.*"))
+        .map(_.trim.stripPrefix("private ").stripPrefix("def ").takeWhile(_ != '(')).getOrElse("?")
+    }
+    assert(readers == Seq("replay", "scoreDocsStream"), s"readStream in: $readers")
   }
 }
