@@ -7,9 +7,12 @@ object Verify {
     require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [key ...]")
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing keys: re-dump just those queries (iteration speed);
-    // oracle_sql.json is always rewritten in full
+    // oracle_sql.json is always rewritten in full. A mistyped key would
+    // otherwise dump nothing and still exit 0.
     val only = args.drop(2).toSet
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
+    val spark = Bench.session()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     Bench.warmUp(spark)
     new java.io.File(outDir).mkdirs()

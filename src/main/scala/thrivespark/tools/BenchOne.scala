@@ -16,7 +16,7 @@ object BenchOne {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
     val keys = args.drop(2).toSeq
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Bench.session()
     // graft.Bench's session and warm-up, so rep 1 ≈ the suite's conditions
     graft.Bench.warmUp(spark)
     keys.foreach { name =>
