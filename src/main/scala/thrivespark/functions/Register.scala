@@ -3,6 +3,7 @@ package thrivespark.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.internal.SQLConf
 import thrivespark.plans.{AsOfJoinStrategy, SimilarityJoinRewrite}
 
 /** The one per-session engine install: the custom Catalyst expressions as
@@ -11,7 +12,17 @@ import thrivespark.plans.{AsOfJoinStrategy, SimilarityJoinRewrite}
   * it before every op, so a key never depends on which key ran earlier in
   * the session. Idempotent: a function name the session already resolves
   * (an earlier call, or `GraftExtensions`) and a rule or strategy already
-  * in `spark.experimental` are left as they are. */
+  * in `spark.experimental` are left as they are.
+  *
+  * It also turns session artifact isolation off unless the caller set it.
+  * Spark 4.1 isolates by default: each session gets its own executor
+  * classloader, keyed by the session's UUID, and every streaming query runs
+  * on a clone of its session with a new UUID. `CodeGenerator` caches a
+  * compiled class per (classloader, code), so every stream start compiled
+  * again, on its executor threads, each class an earlier start had built.
+  * The engine adds no session artifacts, so isolation bought it nothing.
+  * A session reads the setting at its first query, and a streaming clone
+  * at its start, so the runners call this before their first query. */
 object Register {
   /** Every custom SQL function as (name, usage, builder): this method and
     * `thrivespark.GraftExtensions` both install exactly this table. */
@@ -34,7 +45,11 @@ object Register {
     ("hll_distinct", "HLL++ distinct count (rsd 0.01), one-value sketch buffer",
       es => HllDistinct(es.head)))
 
+  /** spark.sql.artifact.isolation.enabled */
+  private val ArtifactIsolation = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+
   def apply(s: SparkSession): Unit = synchronized {
+    if (!s.sessionState.conf.contains(ArtifactIsolation)) s.conf.set(ArtifactIsolation, "false")
     val reg = s.sessionState.functionRegistry
     Functions.foreach { case (name, _, build) =>
       if (!reg.functionExists(FunctionIdentifier(name)))

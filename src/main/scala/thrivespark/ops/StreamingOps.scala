@@ -554,8 +554,8 @@ object StreamingOps {
     * batch 0 varied from run to run, and with it which rows arrived late
     * and whether a trailing no-data batch ran (2 vs 3 batches). */
   def stageDir(s: org.apache.spark.sql.SparkSession, d: String): String =   // public: StreamingSpec pins it
-    // two files = two micro-batches: enough to exercise cross-batch state
-    // while keeping per-batch checkpoint overhead out of the benchmark
+    // two files = two micro-batches: enough to exercise cross-batch state;
+    // each further file would add one more batch's fixed cost
     DurableStage("events", d, Seq("events"), "hash2-seq-v1") { dir =>
       val ev = thrivespark.Tables.events(s, d)
       val half = pmod(xxhash64(col("event_id")), lit(2))
@@ -593,7 +593,8 @@ object StreamingOps {
       // unmatched views stuck in state (observed: 8 rows short at sf0.01).
       // Sentinels ride in the SECOND data file (watermark advances at batch
       // end, eviction runs in the no-data batch after) — a third trigger
-      // would add ~1.2 s of pure micro-batch overhead for nothing.
+      // would add one more batch's fixed cost for nothing (perfbench
+      // stream_ingest on 4 cores: stream.batch_p50_ms.warm 330–350 ms).
       val sentinels = Seq(
         (-1L, far, -1L, "view", 0.0, "{}"),
         (-2L, new java.sql.Timestamp(far.getTime + 1000), -1L, "purchase", 0.0, "{}"))

@@ -458,8 +458,9 @@ object StreamRunner {
       checkpoint: String, weights: DataFrame, priorMicros: Long,
       queryName: String): DataFrame = {
     // no maxFilesPerTrigger: scoring is stateless per-row work, so batch
-    // boundaries cannot affect results — one trigger avoids paying the
-    // ~1 s micro-batch overhead per staged file (multi-batch replay
+    // boundaries cannot affect results — one trigger avoids paying a
+    // micro-batch's fixed cost per staged file (perfbench stream_ingest on
+    // 4 cores: stream.batch_p50_ms.warm 330–350 ms; multi-batch replay
     // mechanics are exercised by the stateful stream ops)
     val in = spark.readStream.schema(schema).parquet(srcDir)
     def wSide(f: String) = broadcast(

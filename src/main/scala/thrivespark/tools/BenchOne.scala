@@ -1,5 +1,7 @@
 package thrivespark.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Same-session per-key A/B timer for optimization work (guide §1): times
@@ -7,6 +9,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * official Bench uses, in ONE warmed session, printing every rep. Repeated
   * in-session reps separate steady-state cost from first-touch cost (shared
   * staging, codegen, page cache), which single-shot suite runs conflate.
+  * Each rep's line also gives the classes it compiled and their compile
+  * seconds (JVM-wide deltas, driver and executor threads alike), so a key
+  * whose reps after the first compile 0 shows its classes are reused.
   * After the last rep it prints the key's plan
   * (`explainString(FormattedMode)`), the capture PLANS.md records.
   * Usage: tools/run.sh thrivespark.tools.BenchOne <sfDir> <reps> <key>...
@@ -23,11 +28,15 @@ object BenchOne {
       val fn = thrivespark.Registry.queries.getOrElse(name,
         sys.error(s"unknown key: $name"))
       val runs = (1 to reps).map { i =>
+        val (compiles0, compileNs0) =
+          (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         df.write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[benchone] $name rep$i ${sec}%7.3f s")
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
+        println(f"[benchone] $name rep$i ${sec}%7.3f s compiles=$compiles compile_s=$compileSec%.3f")
         (sec, df)
       }
       val times = runs.map(_._1)

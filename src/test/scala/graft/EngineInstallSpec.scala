@@ -13,6 +13,13 @@ class EngineInstallSpec extends AnyFunSuite {
   private def rows(s: org.apache.spark.sql.SparkSession): Seq[String] =
     Registry.queries("stream_ann_query")(s, sf0001).collect().map(_.toString).toSeq.sorted
 
+  private val root = new File("src/main/scala")
+  private def files(f: File): Seq[File] =
+    if (f.isDirectory) f.listFiles.toSeq.flatMap(files)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+  private def canon(p: String) = new File(root, p).getCanonicalFile
+  private val isolation = "spark.sql.artifact.isolation.enabled"
+
   test("a key runs in a session that never called Register: stream_ann_query " +
       "with its stage reused, the similarity-join rewrite and the as-of strategy") {
     // the first run builds (or reuses) the annidx stage; the second, in
@@ -32,12 +39,7 @@ class EngineInstallSpec extends AnyFunSuite {
   test("one install path: Register is called only by Registry, AsOf and " +
       "Bench's warm-up, and only Register touches spark.experimental or " +
       "registers a function") {
-    val root = new File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    def canon(p: String) = new File(root, p).getCanonicalFile
     val callers = Set("thrivespark/Op.scala", "thrivespark/plans/AsOfJoin.scala",
       "graft/Bench.scala").map(canon)
     val owner = canon("thrivespark/functions/Register.scala")
@@ -51,5 +53,32 @@ class EngineInstallSpec extends AnyFunSuite {
       }.toList finally src.close()
     }
     assert(hits.isEmpty, s"a second install path under src/main/scala:\n${hits.mkString("\n")}")
+  }
+
+  test("Register turns session artifact isolation off in a new session, and " +
+      "keeps a value the caller set") {
+    // isolation gives each session, and each streaming clone of it, its own
+    // executor classloader, and so its own codegen cache entries
+    val fresh = spark.newSession()
+    Registry.queries("stream_watermark_late")(fresh, sf0001).count()
+    assert(fresh.conf.get(isolation) == "false", s"$isolation after a key ran")
+    val pinned = spark.newSession()
+    pinned.conf.set(isolation, "true")
+    Registry.queries("scan_full")(pinned, sf0001).count()
+    assert(pinned.conf.get(isolation) == "true", s"Register overrode the caller's $isolation")
+  }
+
+  test("the artifact-isolation setting lives only in Register") {
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    val owner = canon("thrivespark/functions/Register.scala")
+    val hits = (files(root) ++ files(new File("perfbench/harness/src"))).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (l, i) if f.getCanonicalFile != owner &&
+            (l.contains("artifact.isolation") || l.contains("ARTIFACTS_SESSION_ISOLATION")) =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      }.toList finally src.close()
+    }
+    assert(hits.isEmpty, s"$isolation set outside Register:\n${hits.mkString("\n")}")
   }
 }

@@ -579,4 +579,18 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(readers == Seq("replay", "scoreDocsStream"), s"readStream in: $readers")
   }
+
+  test("a stream key replayed in the same session compiles no class again") {
+    // each stream start runs on a clone of the session; with Spark 4.1's
+    // default artifact isolation every clone had its own executor
+    // classloader and recompiled the previous start's classes
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def replay(): Unit = Registry.queries("stream_watermark_late")(spark, sf0001)
+      .write.mode("overwrite").format("noop").save()
+    replay()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    replay()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second replay compiled $compiled classes")
+  }
 }
