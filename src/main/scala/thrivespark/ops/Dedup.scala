@@ -881,13 +881,12 @@ object Dedup {
           .select(col("vec_id"), col("label"))
           .orderBy(col("vec_id"))
       },
-      Some("""SELECT vec_id, label FROM embeddings
+      Some(s"""SELECT vec_id, label FROM embeddings
               WHERE vec_id NOT IN (
                 SELECT b.vec_id
                 FROM embeddings a JOIN embeddings b
                   ON a.label = b.label AND a.vec_id < b.vec_id
-                WHERE list_sum(list_transform(generate_series(1, 64),
-                        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) > 0.4)
+                WHERE ${Similarity.duckDot("a.embedding", "b.embedding")} > 0.4)
               ORDER BY vec_id""")),
 
     // The LSH-bucketed scale path for embedding near-dup removal: candidates
@@ -909,7 +908,7 @@ object Dedup {
       (s, d) => {
         embeddingLshSurvivors(T.embeddings(s, d), 0.4, LshBucketCap)
       },
-      Some("""WITH b AS (
+      Some(s"""WITH b AS (
                 SELECT vec_id, label, j,
                        list_aggregate(list_transform(generate_series(1 + j*4, 4 + j*4),
                          i -> CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END),
@@ -925,8 +924,7 @@ object Dedup {
                 FROM cand c
                 JOIN embeddings a ON a.vec_id = c.a_id
                 JOIN embeddings e ON e.vec_id = c.b_id
-                WHERE list_sum(list_transform(generate_series(1, 64),
-                        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) > 0.4)
+                WHERE ${Similarity.duckDot("a.embedding", "e.embedding")} > 0.4)
               SELECT vec_id, label FROM embeddings
               WHERE vec_id NOT IN (SELECT b_id FROM drops)
               ORDER BY vec_id""")),

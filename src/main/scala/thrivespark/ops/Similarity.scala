@@ -1,6 +1,6 @@
 package thrivespark.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import thrivespark.{Op, Shared, Tables => T}
@@ -20,10 +20,9 @@ import thrivespark.Det._
   */
 object Similarity {
   /** dot(a, b) in double, sequential left fold — deterministic across
-    * engines. Custom codegen'd expression (thrivespark.functions.VecDot);
+    * engines. Custom codegen'd expression (thrivespark.functions.VecDot):
     * bit-identical to aggregate(zip_with(...)) but stays in whole-stage
-    * codegen instead of interpreted lambdas. */
-  /** Exact float dot in the codegen kernel. Args are declared element-dense
+    * codegen instead of interpreted lambdas. Args are declared element-dense
     * (known_dense — the fixture/production embedding contract: no null
     * slots) because parquet list columns always surface containsNull=true
     * and the null-aware loop measured ~40% slower on the verify joins
@@ -59,33 +58,73 @@ object Similarity {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val duckDot =
-    "list_sum(list_transform(generate_series(1, 64), " +
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
+  // ------------------------------------------------------ the ANN ladder ---
+  // Every ANN key (brute force → IVF → PQ → IVFADC, and the recall
+  // readouts) is composed from the steps below: one Spark function each,
+  // and one generated DuckDB CTE each in the oracle section after them.
+  // The ladder's total orders — assignment and probe by max sim, tie →
+  // lowest cent_id; every top-k by score, tie → lowest c_id — are stated
+  // once per engine, so no two keys can drift apart.
 
-  /** IVF-style ANN: coarse-quantize the corpus into cells (centroids = a
-    * deterministic sample), probe only the query's nprobe nearest cells.
-    * The scale path for similarity search: the corpus is shuffled once by
-    * cell, and each query touches nprobe/k of the data instead of all of it.
-    * Approximate ⇒ no SQL oracle (rule R5); SimilaritySpec measures recall
-    * against the brute-force sim_topk_cosine. */
-  def annTopK(s: org.apache.spark.sql.SparkSession, d: String,
-      k: Int = 5, nprobe: Int = 2): org.apache.spark.sql.DataFrame =
-    annTopKFrom(T.embeddings(s, d), k, nprobe)
+  /** k of every top-k in the ladder; read by the Spark functions and the
+    * oracle generator alike. */
+  val TopK = 5
+  /** Cells each query probes, except on the recall curve's own sweep. */
+  val Nprobe = 2
+
+  /** Self-exclusion: query and corpus share the vec_id space. */
+  private def notSelf: Column = col("q_id") =!= col("c_id")
+
+  /** Keep each query's TopK best rows by `score` (tie → lowest c_id),
+    * ranked 1..TopK in rn. */
+  private def topK(cand: DataFrame, score: String): DataFrame =
+    cand.withColumn("rn", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("c_id"))))
+      .filter(col("rn") <= TopK)
+
+  /** Every 50th vector (or those matching `pred`) as the (q_id, q_emb)
+    * query set. */
+  private def embQueries(emb: DataFrame, pred: Column = col("vec_id") % 50 === 0): DataFrame =
+    emb.filter(pred).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** The corpus as (c_id, c_emb) candidates. */
+  private def corpus(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+
+  /** Exact top-k: the broadcast query block against every corpus row that
+    * satisfies `on` (None = all pairs, for query sets that share no id
+    * space with the corpus), scored by cos — a map-side plan linear in the
+    * corpus. */
+  private def exactTopK(q: DataFrame, c: DataFrame, on: Option[Column]): DataFrame = {
+    val pairs = on.fold(broadcast(q).join(c))(broadcast(q).join(c, _))
+    topK(pairs.withColumn("cos", dot(col("q_emb"), col("c_emb"))), "cos")
+  }
+
+  /** Cell probe: each query scores every centroid (csim), ranks them (crn:
+    * max csim, tie → lowest cent_id) and keeps its nprobe nearest. The
+    * centroids are a constant-size broadcast. */
+  def probeCells(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
+    q.join(broadcast(cent))
+      .withColumn("csim", dot(col("q_emb"), col("cent_emb")))
+      .withColumn("crn", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))))
+      .filter(col("crn") <= nprobe)
 
   /** IVF coarse assignment of `emb` against an explicit centroid frame
     * (cent_id, cent_emb): one (c_id, cell, c_emb) row per vector, cell =
-    * nearest centroid (max sim, tie → lowest cent_id). max_by keeps the
-    * shuffle at one row per vector; broadcast keeps assignment map-side —
-    * the shape that lets a DELTA batch be ingested against a persisted
-    * index without touching the standing assignments. */
-  def ivfAssignTo(emb: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * nearest centroid (max by·cent_emb, tie → lowest cent_id); `by` is the
+    * vector dotted (the raw embedding, or its micro-space copy for trained
+    * centroids). max_by keeps the shuffle at one row per vector; broadcast
+    * keeps assignment map-side — the shape that lets a DELTA batch be
+    * ingested against a persisted index without touching the standing
+    * assignments. */
+  def ivfAssignTo(emb: DataFrame, cent: DataFrame,
+      by: Column = col("embedding")): DataFrame = {
     // the embedding rides THROUGH the argmax (every row of a vec_id group
     // carries the identical vector), so recovering it needs no second
     // corpus scan + re-join — the aggregation's output IS the assignment
     emb.join(broadcast(cent))
-      .withColumn("sim", dot(col("embedding"), col("cent_emb")))
+      .withColumn("sim", dot(by, col("cent_emb")))
       .groupBy(col("vec_id"))
       .agg(max_by(struct(col("cent_id").as("cell"), col("embedding").as("c_emb")),
         struct(col("sim"), -col("cent_id"))).as("m"))
@@ -112,51 +151,40 @@ object Similarity {
 
   /** Default deterministic centroid rule: vec_id % 100 == 0, capped at
     * IvfK seeds (vec_id < IvfSeedCap). */
-  def ivfCentroids(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  def ivfCentroids(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < IvfSeedCap)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
 
   /** IVF coarse assignment over any (vec_id, embedding) frame with the
     * default centroid rule. Exposed so ScaleStressSpec can measure
     * cell-occupancy balance on a synthesized corpus. */
-  def ivfAssign(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    ivfAssignTo(emb, ivfCentroids(emb))
+  def ivfAssign(emb: DataFrame): DataFrame = ivfAssignTo(emb, ivfCentroids(emb))
 
   /** The IVF probe: each query ranks the centroids, scans its nprobe
     * nearest cells from `assigned`, and keeps the exact top-k by cosine.
-    * Shared by the one-shot (sim_ann_ivf) and incremental
-    * (sim_ann_incremental) paths — identical query semantics over however
-    * the assignment table was produced. */
-  def probeTopK(q: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame,
-      assigned: org.apache.spark.sql.DataFrame,
-      k: Int, nprobe: Int,
-      excludeSelf: Boolean = true): org.apache.spark.sql.DataFrame = {
-    val wCell = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("csim", dot(col("q_emb"), col("cent_emb")))
-      .withColumn("crn", row_number().over(wCell))
-      .filter(col("crn") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("cent_id").as("cell"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    probes.join(assigned, "cell")
-      // self-exclusion only when query and corpus share an id space (the
-      // embedding-to-embedding ops); cross-modal retrieval keeps every hit
-      .filter(if (excludeSelf) col("q_id") =!= col("c_id") else lit(true))
-      .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
+    * Every IVF consumer queries through it — sim_ann_ivf, the incremental
+    * and streaming indexes, the recall readouts and cross-modal retrieval
+    * — whatever built the assignment table. */
+  def probeTopK(q: DataFrame, cent: DataFrame, assigned: DataFrame,
+      nprobe: Int = Nprobe, excludeSelf: Boolean = true): DataFrame =
+    topK(probeCells(q, cent, nprobe)
+        .select(col("q_id"), col("q_emb"), col("cent_id").as("cell"))
+        .join(assigned, "cell")
+        // self-exclusion only when query and corpus share an id space (the
+        // embedding-to-embedding ops); cross-modal retrieval keeps every hit
+        .filter(if (excludeSelf) notSelf else lit(true))
+        .withColumn("cos", dot(col("q_emb"), col("c_emb"))), "cos")
       .select(col("q_id"), col("c_id"), round6(col("cos")).as("cos"), col("rn"))
       .orderBy(col("q_id"), col("rn"))
-  }
 
-  def annTopKFrom(emb: org.apache.spark.sql.DataFrame,
-      k: Int = 5, nprobe: Int = 2): org.apache.spark.sql.DataFrame = {
-    val cent = ivfCentroids(emb)
-    val q = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probeTopK(q, cent, ivfAssign(emb), k, nprobe)
-  }
+  /** IVF-style ANN: coarse-quantize the corpus into cells (centroids = a
+    * deterministic sample), probe only the query's nprobe nearest cells.
+    * The scale path for similarity search: the corpus is shuffled once by
+    * cell, and each query touches nprobe/K of the data instead of all of it. */
+  def annTopK(s: SparkSession, d: String): DataFrame = annTopKFrom(T.embeddings(s, d))
+
+  def annTopKFrom(emb: DataFrame): DataFrame =
+    probeTopK(embQueries(emb), ivfCentroids(emb), ivfAssign(emb))
 
   /** Incremental ANN (r12 — the verdict's "persistable index" item, the
     * dedup_incremental pattern applied to IVF): the BASE corpus's centroids
@@ -171,8 +199,7 @@ object Similarity {
     * cent_id, ranked probes), so the op still gets an exact SQL oracle:
     * incremental ingest must produce byte-identical results to assigning
     * everything against the same centroids in one shot. */
-  def annIncremental(s: org.apache.spark.sql.SparkSession, d: String,
-      k: Int = 5, nprobe: Int = 2): org.apache.spark.sql.DataFrame = {
+  def annIncremental(s: SparkSession, d: String): DataFrame = {
     val emb = T.embeddings(s, d)
     val isDelta = col("vec_id") % 7 === 3
     val base = emb.filter(!isDelta)
@@ -190,10 +217,199 @@ object Similarity {
     val pAssigned = s.read.parquet(s"$idx/assignments")
     val assigned = pAssigned.unionByName(ivfAssignTo(delta, pCent))
     // query the fresh batch against the updated index
-    val q = delta.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probeTopK(q, pCent, assigned, k, nprobe)
+    probeTopK(embQueries(delta, col("vec_id") % 3 === 0), pCent, assigned)
   }
+
+  /** PQ geometry: PqM subspaces of PqSub dims, coded against a fixed
+    * codebook of the subvectors of every PqSeedEvery-th vector below
+    * PqSeedCap (K = 64 seeds whatever the corpus size). */
+  private val PqM = 8
+  private val PqSub = 8
+  private val PqSeedEvery = 25
+  private val PqSeedCap = 1600
+
+  /** The PQ coder: each row of `v` (keys…, vec) is cut into PqM
+    * subvectors, each encoded as its nearest codebook entry (squared L2
+    * via the three-dot identity, so every distance is the same sequential
+    * fold both engines run; tie → lowest seed id), and decoded back to one
+    * `recon` vector per key. The broadcast codebook reduces the argmin
+    * map-side: one (id, m) shuffle total. keys.head is the vector id. */
+  private def pqReconstruct(v: DataFrame, keys: Seq[String], vec: String): DataFrame = {
+    def subSlices(x: Column): Column = explode(array((0 until PqM).map(m =>
+      struct(lit(m).as("m"), slice(x, m * PqSub + 1, PqSub).as("sub"))): _*))
+    val kc = keys.map(col)
+    val id = col(keys.head)
+    val subs = v.select(kc :+ subSlices(col(vec)).as("x"): _*)
+      .select(kc ++ Seq(col("x.m").as("m"), col("x.sub").as("sub")): _*)
+    val seedSubs = v.filter(id % PqSeedEvery === 0 && id < PqSeedCap)
+      .select(id.as("s_id"), subSlices(col(vec)).as("x"))
+      .select(col("s_id"), col("x.m").as("sm"), col("x.sub").as("s_sub"))
+    val d2 = dot(col("sub"), col("sub")) + dot(col("s_sub"), col("s_sub")) -
+      lit(2) * dot(col("sub"), col("s_sub"))
+    val codes = subs.join(broadcast(seedSubs), col("m") === col("sm"))
+      .withColumn("d2", d2)
+      .groupBy(kc :+ col("m"): _*)
+      .agg(min_by(col("s_id"), struct(col("d2"), col("s_id"))).as("code"))
+    // reconstruction: concat the coded centroid slices back to full dims
+    codes.join(broadcast(seedSubs),
+        col("m") === col("sm") && col("code") === col("s_id"))
+      .groupBy(kc: _*)
+      .agg(flatten(transform(array_sort(collect_list(struct(col("m"), col("s_sub")))),
+        x => x.getField("s_sub"))).as("recon"))
+  }
+
+  /** exact's (q_id, c_id) rows left-joined to approx's, hit = 1 where the
+    * index found the pair: the grain of every recall readout. */
+  private def hits(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("q_id"), col("c_id"))
+      .join(approx.select(col("q_id"), col("c_id")).withColumn("hit", lit(1)),
+        Seq("q_id", "c_id"), "left")
+
+  /** n_hit · 10^6 / k, truncated toward zero (DuckDB's `//`). */
+  private def recallMicros(nHit: Column, k: Column): Column =
+    (nHit.cast("long") * lit(1000000L) / k.cast("long")).cast("long").as("recall_micros")
+
+  /** Per-query recall@TopK of `approx` against `exact`: ONE aggregation
+    * over the left join computes k and n_hit together, so the brute-force
+    * plan runs once. */
+  private def recallPerQuery(exact: DataFrame, approx: DataFrame): DataFrame =
+    hits(exact, approx)
+      .groupBy(col("q_id"))
+      .agg(count(lit(1)).cast("int").as("k"),
+        sum(coalesce(col("hit"), lit(0))).cast("int").as("n_hit"))
+      .select(col("q_id"), col("k"), col("n_hit"), recallMicros(col("n_hit"), col("k")))
+      .orderBy(col("q_id"))
+
+  // ------------------------------------------------- ANN oracle CTEs ---
+  // The DuckDB mirror of each step above, generated once and composed per
+  // key. Every CTE reads the query set as `q` (q_id, q_emb, …) and the
+  // centroids as `cent` (cent_id, cent_emb).
+
+  /** DuckDB mirror of [[dot]]: the in-order double fold over `dims`
+    * elements, the one spelling of a dot in every oracle. */
+  private[ops] def duckDot(a: String, b: String, dims: Int = 64): String =
+    s"list_sum(list_transform(generate_series(1, $dims), " +
+      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+
+  /** WITH clause over the given CTE definitions. */
+  private[ops] def ctes(defs: String*): String = defs.mkString("WITH ", ",\n      ", "\n      ")
+
+  /** Mirror of [[topK]]: `from`'s rows ranked within q_id by `score` DESC,
+    * tie → lowest c_id, first TopK kept, as CTE `name`. */
+  private def topKSql(name: String, from: String, score: String): String =
+    s"""$name AS (
+        SELECT * FROM (
+          SELECT *, row_number() OVER (PARTITION BY q_id
+                                       ORDER BY $score DESC, c_id) AS rn
+          FROM $from)
+        WHERE rn <= $TopK)"""
+
+  /** A ranked CTE in the top-k ops' output shape. */
+  private def rankedSql(from: String, score: String, as: String): String =
+    s"""SELECT q_id, c_id, round($score, 6) + 0.0 AS $as, CAST(rn AS INTEGER) AS rn
+      FROM $from ORDER BY q_id, rn"""
+
+  /** Mirror of [[embQueries]]. */
+  private def embQuerySql(pred: String = "vec_id % 50 = 0", carry: String = ""): String =
+    s"q AS (SELECT vec_id AS q_id, embedding AS q_emb$carry FROM embeddings WHERE $pred)"
+
+  private val NotSelfSql = "q.q_id <> e.vec_id"
+
+  /** Mirror of [[exactTopK]] over `q` and the corpus, as CTE `exact`. */
+  private def exactSql(on: String, carry: String = ""): String =
+    topKSql("exact", s"""(
+          SELECT q.*, e.vec_id AS c_id$carry,
+                 ${duckDot("q.q_emb", "e.embedding")} AS cos
+          FROM q JOIN embeddings e ON $on)""", "cos")
+
+  /** Mirror of [[ivfCentroids]], with an optional extra corpus predicate. */
+  private[ops] def seededCentSql(extra: String = ""): String =
+    s"cent AS (SELECT vec_id AS cent_id, embedding AS cent_emb FROM embeddings WHERE $IvfSeedSql$extra)"
+
+  /** Mirror of [[ivfAssignTo]]: each row of `src` (vec_id, embedding, `by`)
+    * joins the cell whose centroid maximizes by·cent_emb, tie → lowest
+    * cent_id, as CTE `assigned` (c_id, c_emb, cell). */
+  private[ops] def assignSql(src: String = "embeddings", by: String = "embedding"): String =
+    s"""assigned AS (
+        SELECT c_id, c_emb, cell FROM (
+          SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id AS cell,
+                 row_number() OVER (PARTITION BY e.vec_id
+                   ORDER BY ${duckDot(s"e.$by", "c.cent_emb")} DESC, c.cent_id) AS arn
+          FROM $src e CROSS JOIN cent c)
+        WHERE arn = 1)"""
+
+  /** Mirror of [[probeCells]], as CTE `probes` (q_id, q_emb, cell, csim, crn). */
+  private def probeSql(nprobe: Int): String =
+    s"""probes AS (
+        SELECT * FROM (
+          SELECT *, row_number() OVER (PARTITION BY q_id
+                                       ORDER BY csim DESC, cell) AS crn
+          FROM (SELECT q.q_id, q.q_emb, c.cent_id AS cell,
+                       ${duckDot("q.q_emb", "c.cent_emb")} AS csim
+                FROM q CROSS JOIN cent c))
+        WHERE crn <= $nprobe)"""
+
+  /** The probed cells' members scored against their query, as CTE `cand`. */
+  private def candSql(excludeSelf: Boolean): String =
+    s"""cand AS (
+        SELECT p.q_id, a.c_id, p.crn, ${duckDot("p.q_emb", "a.c_emb")} AS cos
+        FROM probes p JOIN assigned a ON p.cell = a.cell
+        ${if (excludeSelf) "WHERE p.q_id <> a.c_id" else ""})"""
+
+  /** Mirror of [[probeTopK]] through its ranked CTE `approx`. */
+  private def ivfSql(q: String, cent: String, assign: String = assignSql(),
+      excludeSelf: Boolean = true): Seq[String] =
+    Seq(q, cent, assign, probeSql(Nprobe), candSql(excludeSelf),
+      topKSql("approx", "cand", "cos"))
+
+  /** Mirror of [[pqReconstruct]] over `src` (keys…, vec): CTEs ms, subs,
+    * ssubs (the codebook), codes and recon (keys…, recon). */
+  private def pqSql(src: String, keys: Seq[String], vec: String): Seq[String] = {
+    val id = keys.head
+    def sub(t: String) = s"$t.$vec[$PqSub*ms.m+1 : $PqSub*ms.m+$PqSub]"
+    def on(t: String) = keys.map(k => s"$t.$k").mkString(", ")
+    val d2 = s"${duckDot("v.sub", "v.sub", PqSub)} + ${duckDot("ss.s_sub", "ss.s_sub", PqSub)}" +
+      s" - 2 * ${duckDot("v.sub", "ss.s_sub", PqSub)}"
+    Seq(s"ms AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m)",
+      s"""subs AS (
+        SELECT ${on("r")}, ms.m, ${sub("r")} AS sub FROM $src r CROSS JOIN ms)""",
+      s"""ssubs AS (
+        SELECT r.$id AS s_id, ms.m AS sm, ${sub("r")} AS s_sub
+        FROM $src r CROSS JOIN ms
+        WHERE r.$id % $PqSeedEvery = 0 AND r.$id < $PqSeedCap)""",
+      s"""codes AS (
+        SELECT * FROM (
+          SELECT v.*, ss.s_id,
+                 row_number() OVER (PARTITION BY v.$id, v.m
+                                    ORDER BY ($d2) ASC, ss.s_id) AS rn
+          FROM subs v JOIN ssubs ss ON v.m = ss.sm)
+        WHERE rn = 1)""",
+      s"""recon AS (
+        SELECT ${on("c")}, flatten(list(ss.s_sub ORDER BY c.m)) AS recon
+        FROM codes c JOIN ssubs ss ON c.m = ss.sm AND c.s_id = ss.s_id
+        GROUP BY ${on("c")})""")
+  }
+
+  /** Mirror of [[hits]]: exact left-joined to the ranked CTE `approx`. */
+  private def hitsSql(approx: String): String =
+    s"FROM exact e LEFT JOIN $approx x ON e.q_id = x.q_id AND e.c_id = x.c_id"
+
+  /** Mirror of [[recallMicros]]: integer `//`, never `/` (float division
+    * then a rounding CAST would give 666667 for 2/3, not 666666). */
+  private def recallMicrosSql(nHit: String, k: String): String =
+    s"CAST($nHit * 1000000 // $k AS BIGINT)"
+
+  /** Mirror of [[recallPerQuery]] over the CTEs `exact` and `approx`. */
+  private val recallSql: String =
+    s"""SELECT e.q_id, CAST(count(*) AS INTEGER) AS k,
+             CAST(count(x.c_id) AS INTEGER) AS n_hit,
+             ${recallMicrosSql("count(x.c_id)", "count(*)")} AS recall_micros
+      ${hitsSql("approx")}
+      GROUP BY e.q_id ORDER BY e.q_id"""
+
+  /** sim_ann_ivf's oracle; stream_ann_query serves the same probe. */
+  private[ops] val annIvfSql: String =
+    ctes(ivfSql(embQuerySql(), seededCentSql()): _*) + rankedSql("approx", "cos", "cos")
 
   // ------------------------------------------------ k-means training ---
 
@@ -316,20 +532,11 @@ object Similarity {
 
   /** Micro-space IVF assignment: cell = argmax over Σ m_v[i]·m_c[i] (exact
     * integers both engines), carrying the RAW embedding through as c_emb so
-    * candidate scoring stays in real cosine space. The trained-centroid
-    * counterpart of ivfAssignTo. */
-  def ivfAssignMicro(emb: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    emb.select(col("vec_id"), col("embedding"),
-        transform(microArr(col("embedding")), x => x.cast("float")).as("mf"))
-      .join(broadcast(cent))
-      .withColumn("sim", dot(col("mf"), col("cent_emb")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("cent_id").as("cell"), col("embedding").as("c_emb")),
-        struct(col("sim"), -col("cent_id"))).as("m"))
-      .select(col("vec_id").as("c_id"), col("m.cell").as("cell"),
-        col("m.c_emb").as("c_emb"))
-  }
+    * candidate scoring stays in real cosine space. */
+  def ivfAssignMicro(emb: DataFrame, cent: DataFrame): DataFrame =
+    ivfAssignTo(emb.select(col("vec_id"), col("embedding"),
+        transform(microArr(col("embedding")), x => x.cast("float")).as("mf")),
+      cent, col("mf"))
 
   /** nprobe values the recall curve sweeps — shared by the Spark program
     * and the generated oracle so the two cannot drift. */
@@ -338,106 +545,45 @@ object Similarity {
   /** recall@5 vs brute force for each nprobe in CurveNprobes, one pass:
     * rank all 5 candidate cells once (crn), checkpoint the ranked candidate
     * set + the exact top-5, then each curve point filters crn <= nprobe. */
-  def recallCurve(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val q = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    val exact = broadcast(q).join(c, col("q_id") =!= col("c_id"))
-      .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
+  def recallCurve(emb: DataFrame): DataFrame = {
+    val q = embQueries(emb)
+    val exact = exactTopK(q, corpus(emb), Some(notSelf))
       .select(col("q_id"), col("c_id"))
       .localCheckpoint()                       // consumed once per curve point
-    val cent = ivfCentroids(emb)
-    val maxNp = CurveNprobes.max
-    val wCell = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("csim", dot(col("q_emb"), col("cent_emb")))
-      .withColumn("crn", row_number().over(wCell))
-      .filter(col("crn") <= maxNp)
+    val cand = probeCells(q, ivfCentroids(emb), CurveNprobes.max)
       .select(col("q_id"), col("q_emb"), col("crn"), col("cent_id").as("cell"))
-    val cand = probes.join(ivfAssign(emb), "cell")
-      .filter(col("q_id") =!= col("c_id"))
+      .join(ivfAssign(emb), "cell")
+      .filter(notSelf)
       .withColumn("cos", dot(col("q_emb"), col("c_emb")))
       .select(col("q_id"), col("c_id"), col("crn"), col("cos"))
       .localCheckpoint()                       // ranked ONCE, filtered 4×
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
     CurveNprobes.map { np =>
-      val approx = cand.filter(col("crn") <= np)
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("c_id"))
-      exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "c_id"), "left")
+      hits(exact, topK(cand.filter(col("crn") <= np), "cos"))
         .agg(count(lit(1)).as("k_total"),
           sum(coalesce(col("hit"), lit(0))).as("n_hit"))
         .select(lit(np).as("nprobe"), col("k_total"), col("n_hit"))
     }.reduce(_ unionByName _)
       .select(col("nprobe"), col("k_total"), col("n_hit").cast("long").as("n_hit"),
-        (col("n_hit").cast("long") * lit(1000000L)
-          / col("k_total")).cast("long").as("recall_micros"))
+        recallMicros(col("n_hit"), col("k_total")))
       .orderBy(col("nprobe"))
   }
 
-  /** Generated mirror of recallCurve: shared exact/cent/assigned/cand CTEs,
-    * then one (ap, r) CTE pair per CurveNprobes entry — same loop bound as
-    * the Spark side (the kmeansOracleStages discipline). */
+  /** Generated mirror of recallCurve: shared q/cent/assigned/probes/cand/
+    * exact CTEs, then one (ap, r) CTE pair per CurveNprobes entry — same
+    * loop bound as the Spark side (the kmeansOracleStages discipline). */
   private def recallCurveSql: String = {
-    val ddot = (a: String, b: String) =>
-      s"list_sum(list_transform(generate_series(1, 64), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-    val base = s"""WITH exact AS (
-        SELECT q_id, c_id FROM (
-          SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-                 row_number() OVER (PARTITION BY a.vec_id
-                   ORDER BY ${ddot("a.embedding", "b.embedding")} DESC,
-                   b.vec_id) AS rn
-          FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-          WHERE a.vec_id % 50 = 0)
-        WHERE rn <= 5),
-      cent AS (
-        SELECT vec_id AS cent_id, embedding AS cent_emb
-        FROM embeddings WHERE $IvfSeedSql),
-      a1 AS (
-        SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY ${ddot("e.embedding", "c.cent_emb")} DESC,
-                 c.cent_id) AS arn
-        FROM embeddings e CROSS JOIN cent c),
-      assigned AS (SELECT c_id, c_emb, cent_id AS cell FROM a1 WHERE arn = 1),
-      q AS (
-        SELECT vec_id AS q_id, embedding AS q_emb
-        FROM embeddings WHERE vec_id % 50 = 0),
-      p1 AS (
-        SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY ${ddot("q.q_emb", "c.cent_emb")} DESC,
-                 c.cent_id) AS crn
-        FROM q CROSS JOIN cent c),
-      cand AS (
-        SELECT p.q_id, a.c_id, p.crn, ${ddot("p.q_emb", "a.c_emb")} AS cos
-        FROM (SELECT * FROM p1 WHERE crn <= ${CurveNprobes.max}) p
-        JOIN assigned a ON p.cell = a.cell
-        WHERE p.q_id <> a.c_id)"""
-    val perNp = CurveNprobes.map { np =>
-      s""",
-      ap$np AS (
-        SELECT q_id, c_id FROM (
-          SELECT q_id, c_id,
-                 row_number() OVER (PARTITION BY q_id
-                   ORDER BY cos DESC, c_id) AS rn
-          FROM cand WHERE crn <= $np)
-        WHERE rn <= 5),
-      r$np AS (
+    val perNp = CurveNprobes.flatMap { np => Seq(
+      topKSql(s"ap$np", s"(SELECT * FROM cand WHERE crn <= $np)", "cos"),
+      s"""r$np AS (
         SELECT $np AS nprobe, count(*) AS k_total, count(x.c_id) AS n_hit
-        FROM exact e LEFT JOIN ap$np x
-          ON e.q_id = x.q_id AND e.c_id = x.c_id)"""
-    }.mkString
+        ${hitsSql(s"ap$np")})""")
+    }
     val union = CurveNprobes.map(np => s"SELECT * FROM r$np").mkString(" UNION ALL ")
-    s"""$base$perNp
-      SELECT CAST(nprobe AS INTEGER) AS nprobe, CAST(k_total AS BIGINT) AS k_total,
+    ctes(Seq(embQuerySql(), seededCentSql(), assignSql(), probeSql(CurveNprobes.max),
+        candSql(excludeSelf = true), exactSql(NotSelfSql)) ++ perNp: _*) +
+      s"""SELECT CAST(nprobe AS INTEGER) AS nprobe, CAST(k_total AS BIGINT) AS k_total,
              CAST(n_hit AS BIGINT) AS n_hit,
-             CAST(n_hit * 1000000 // k_total AS BIGINT) AS recall_micros
+             ${recallMicrosSql("n_hit", "k_total")} AS recall_micros
       FROM ($union) ORDER BY nprobe"""
   }
 
@@ -446,8 +592,7 @@ object Similarity {
     * 64-byte thumb column via hex-pair → conv) — the cross-modal query set
     * shared by the retrieval/recall ops. Integer cell values are exact in
     * float32, so downstream dots stay engine-reproducible. */
-  private def thumbQueries(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
+  private def thumbQueries(s: SparkSession, d: String): DataFrame = {
     val mm = thrivespark.multimodal.Multimodal
     val media = mm.mediaPpmFromDocuments(
       T.documents(s, d).filter(col("doc_id") % 25 === 0))
@@ -459,187 +604,121 @@ object Similarity {
             .cast("float")).as("q_emb"))
   }
 
-  /** The DuckDB mirror of kmeansTrain: micro corpus `kmm`, seed codebook
-    * `kc0`, then per iteration an argmax-assignment CTE, a (cell, dim)
-    * sum CTE, a per-cell new-centroid list CTE and a stats CTE — generated
-    * by the same loop bound as the Spark side (the bpeOracleStages
-    * discipline). Prefixed k* to compose collision-free with the recall
-    * SQL's CTE names. */
-  private def kmeansOracleStages(iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append(s"""WITH kmm AS (
-        SELECT vec_id, list_transform(embedding,
+  /** Mirror of [[thumbQueries]]: the closed-form planted pixels of every
+    * 25th document, box-filtered to 8×8 cell means, as the `q` CTE. */
+  private val thumbQuerySql: String =
+    """m AS (
+        SELECT doc_id AS media_id,
+               8 + (doc_id % 9) AS w,
+               8 + (doc_id % 7) AS h
+        FROM documents WHERE doc_id % 25 = 0),
+      px AS (
+        SELECT m.media_id, m.w, m.h, x.x AS x, y.y AS y,
+               (3 * m.media_id + x.x + 2 * y.y) % 256      AS r,
+               (3 * m.media_id + x.x + 2 * y.y + 37) % 256 AS g,
+               (3 * m.media_id + x.x + 2 * y.y + 74) % 256 AS b
+        FROM m
+        JOIN generate_series(0, 15) AS x(x) ON x.x < m.w
+        JOIN generate_series(0, 13) AS y(y) ON y.y < m.h),
+      cells AS (
+        SELECT media_id,
+               ((y * 8) // h) * 8 + (x * 8) // w AS idx,
+               SUM(r + g + b) // (3 * COUNT(*)) AS mv
+        FROM px GROUP BY 1, 2),
+      q AS (
+        SELECT media_id AS q_id,
+               list(CAST(mv AS DOUBLE) ORDER BY idx) AS q_emb
+        FROM cells GROUP BY 1)"""
+
+  /** The DuckDB mirror of kmeansTrain: micro corpus `kmm` (which keeps the
+    * raw embedding for the micro-space assignment), seed codebook `kc0`,
+    * then per iteration an argmax-assignment CTE, a (cell, dim) sum CTE, a
+    * per-cell new-centroid list CTE and a stats CTE — generated by the
+    * same loop bound as the Spark side (the bpeOracleStages discipline).
+    * Prefixed k* to compose collision-free with the recall SQL's CTE
+    * names. */
+  private def kmeansOracleStages(iters: Int): Seq[String] =
+    Seq(s"""kmm AS (
+        SELECT vec_id, embedding, list_transform(embedding,
                  x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS m
-        FROM embeddings),
-      kc0 AS (SELECT vec_id AS cent_id, m AS cm FROM kmm WHERE $IvfSeedSql)""")
-    for (t <- 0 until iters) {
-      sb.append(s""",
-      ka$t AS (
+        FROM embeddings)""",
+      s"kc0 AS (SELECT vec_id AS cent_id, m AS cm FROM kmm WHERE $IvfSeedSql)") ++
+    (0 until iters).flatMap(t => Seq(
+      s"""ka$t AS (
         SELECT vec_id, m, cent_id AS cell FROM (
           SELECT v.vec_id, v.m, c.cent_id,
                  row_number() OVER (PARTITION BY v.vec_id
-                   ORDER BY list_sum(list_transform(generate_series(1, 64),
-                     i -> v.m[i] * c.cm[i])) DESC, c.cent_id) AS rn
+                   ORDER BY ${duckDot("v.m", "c.cm")} DESC, c.cent_id) AS rn
           FROM kmm v CROSS JOIN kc$t c)
-        WHERE rn = 1),
-      kg$t AS (
+        WHERE rn = 1)""",
+      s"""kg$t AS (
         SELECT cell, i.i AS i, CAST(SUM(m[i.i]) AS BIGINT) AS sv, COUNT(*) AS n
         FROM ka$t CROSS JOIN generate_series(1, 64) AS i(i)
-        GROUP BY 1, 2),
-      ku$t AS (
+        GROUP BY 1, 2)""",
+      s"""ku$t AS (
         SELECT cell, list(sv // n ORDER BY i) AS cml, any_value(n) AS n
-        FROM kg$t GROUP BY cell),
-      kc${t + 1} AS (
+        FROM kg$t GROUP BY cell)""",
+      s"""kc${t + 1} AS (
         SELECT c.cent_id, COALESCE(u.cml, c.cm) AS cm,
                COALESCE(u.n, 0) AS n, c.cm AS prev
-        FROM kc$t c LEFT JOIN ku$t u ON u.cell = c.cent_id),
-      ks$t AS (
+        FROM kc$t c LEFT JOIN ku$t u ON u.cell = c.cent_id)""",
+      s"""ks$t AS (
         SELECT ${t + 1} AS it, cent_id, CAST(n AS BIGINT) AS n,
                CAST(list_sum(cm) AS BIGINT) AS csum,
-               CAST(list_sum(list_transform(generate_series(1, 64),
-                 i -> abs(cm[i] - prev[i]))) AS BIGINT) AS shift
-        FROM kc${t + 1})""")
-    }
-    sb.toString
-  }
+               CAST(list_sum(list_transform(cm, (x, i) -> abs(x - prev[i]))) AS BIGINT) AS shift
+        FROM kc${t + 1})"""))
 
   /** The IVFADC program (shared by sim_ann_ivfpq and its recall readout).
     * See the sim_ann_ivfpq Op comment for the full design. */
-  def ivfpqTopK(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-      val M = 8; val SUB = 8; val nprobe = 2
-      val emb = T.embeddings(s, d)
-      val cent = ivfCentroids(emb)
-      // coarse assignment + residual against the owning centroid (the
-      // build stage: one broadcast argmax + one broadcast diff, map-side)
-      val resid = ivfAssignTo(emb, cent)
-        .join(broadcast(cent), col("cell") === col("cent_id"))
-        .select(col("c_id"), col("cell"),
-          zip_with(col("c_emb"), col("cent_emb"), (a, b) => a - b).as("res"))
-      def subSlices(v: Column): Column = explode(array((0 until M).map(m =>
-        struct(lit(m).as("m"), slice(v, m * SUB + 1, SUB).as("sub"))): _*))
-      val subs = resid.select(col("c_id"), col("cell"), subSlices(col("res")).as("x"))
-        .select(col("c_id"), col("cell"), col("x.m").as("m"), col("x.sub").as("sub"))
-      // fixed-size RESIDUAL codebook: K = 64 seed residuals regardless of
-      // corpus size (the constant-broadcast discipline of sim_ann_pq)
-      val seedSubs = resid.filter(col("c_id") % 25 === 0 && col("c_id") < 1600)
-        .select(col("c_id").as("s_id"), subSlices(col("res")).as("x"))
-        .select(col("s_id"), col("x.m").as("sm"), col("x.sub").as("s_sub"))
-      val d2 = dot(col("sub"), col("sub")) + dot(col("s_sub"), col("s_sub")) -
-        lit(2) * dot(col("sub"), col("s_sub"))
-      val codes = subs.join(broadcast(seedSubs), col("m") === col("sm"))
-        .withColumn("d2", d2)
-        .groupBy(col("c_id"), col("cell"), col("m"))
-        .agg(min_by(col("s_id"), struct(col("d2"), col("s_id"))).as("code"))
-      val recon = codes.join(broadcast(seedSubs),
-          col("m") === col("sm") && col("code") === col("s_id"))
-        .groupBy(col("c_id"), col("cell"))
-        .agg(flatten(transform(array_sort(collect_list(struct(col("m"), col("s_sub")))),
-          x => x.getField("s_sub"))).as("rres"))
-      // query side: rank cells once, probe nprobe of them, ADC-score the
-      // probed cells' codes only — an equi-join on cell, never a cartesian
-      val q = emb.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wCell = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))
-      val probes = q.join(broadcast(cent))
-        .withColumn("csim", dot(col("q_emb"), col("cent_emb")))
-        .withColumn("crn", row_number().over(wCell))
-        .filter(col("crn") <= nprobe)
-        .select(col("q_id"), col("q_emb"), col("cent_id").as("cell"), col("csim"))
-      val wTop = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-      probes.join(recon, "cell")
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("approx", col("csim") + dot(col("q_emb"), col("rres")))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("c_id"), round6(col("approx")).as("approx_cos"), col("rn"))
-        .orderBy(col("q_id"), col("rn"))
+  def ivfpqTopK(s: SparkSession, d: String): DataFrame = {
+    val emb = T.embeddings(s, d)
+    val cent = ivfCentroids(emb)
+    // coarse assignment + residual against the owning centroid (the
+    // build stage: one broadcast argmax + one broadcast diff, map-side)
+    val resid = ivfAssignTo(emb, cent)
+      .join(broadcast(cent), col("cell") === col("cent_id"))
+      .select(col("c_id"), col("cell"),
+        zip_with(col("c_emb"), col("cent_emb"), (a, b) => a - b).as("res"))
+    // fixed-size RESIDUAL codebook (the constant-broadcast discipline of
+    // sim_ann_pq), keyed by (c_id, cell) so the probe can join on cell
+    val recon = pqReconstruct(resid, Seq("c_id", "cell"), "res")
+    // query side: rank cells once, probe nprobe of them, ADC-score the
+    // probed cells' codes only — an equi-join on cell, never a cartesian
+    val probes = probeCells(embQueries(emb), cent, Nprobe)
+      .select(col("q_id"), col("q_emb"), col("cent_id").as("cell"), col("csim"))
+    topK(probes.join(recon, "cell")
+        .filter(notSelf)
+        .withColumn("approx", col("csim") + dot(col("q_emb"), col("recon"))), "approx")
+      .select(col("q_id"), col("c_id"), round6(col("approx")).as("approx_cos"), col("rn"))
+      .orderBy(col("q_id"), col("rn"))
   }
 
-  private def ivfpqCtes: String = s"""cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE $IvfSeedSql),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              resid AS (
-                SELECT a.c_id, a.cent_id AS cell,
-                       list_transform(generate_series(1, 64),
-                         i -> a.c_emb[i] - c.cent_emb[i]) AS res
-                FROM a1 a JOIN cent c ON a.cent_id = c.cent_id
-                WHERE a.arn = 1),
-              ms AS (SELECT unnest(generate_series(0, 7)) AS m),
-              subs AS (
-                SELECT r.c_id, r.cell, ms.m, r.res[8*ms.m+1 : 8*ms.m+8] AS sub
-                FROM resid r CROSS JOIN ms),
-              ssubs AS (
-                SELECT r.c_id AS s_id, ms.m AS sm,
-                       r.res[8*ms.m+1 : 8*ms.m+8] AS s_sub
-                FROM resid r CROSS JOIN ms
-                WHERE r.c_id % 25 = 0 AND r.c_id < 1600),
-              enc1 AS (
-                SELECT v.c_id, v.cell, v.m, ss.s_id,
-                       row_number() OVER (PARTITION BY v.c_id, v.m ORDER BY
-                         (list_sum(list_transform(generate_series(1, 8),
-                            i -> CAST(v.sub[i] AS DOUBLE) * CAST(v.sub[i] AS DOUBLE)))
-                          + list_sum(list_transform(generate_series(1, 8),
-                            i -> CAST(ss.s_sub[i] AS DOUBLE) * CAST(ss.s_sub[i] AS DOUBLE)))
-                          - 2 * list_sum(list_transform(generate_series(1, 8),
-                            i -> CAST(v.sub[i] AS DOUBLE) * CAST(ss.s_sub[i] AS DOUBLE)))) ASC,
-                         ss.s_id) AS rn
-                FROM subs v JOIN ssubs ss ON v.m = ss.sm),
-              recon AS (
-                SELECT c.c_id, c.cell, flatten(list(ss.s_sub ORDER BY c.m)) AS rres
-                FROM enc1 c JOIN ssubs ss ON c.m = ss.sm AND c.s_id = ss.s_id
-                WHERE c.rn = 1
-                GROUP BY c.c_id, c.cell),
-              q AS (SELECT vec_id AS q_id, embedding AS q_emb
-                    FROM embeddings WHERE vec_id % 50 = 0),
-              probes AS (
-                SELECT q_id, q_emb, cell, csim FROM (
-                  SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                         list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) AS csim,
-                         row_number() OVER (PARTITION BY q.q_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                           c.cent_id) AS crn
-                  FROM q CROSS JOIN cent c)
-                WHERE crn <= 2),
-              ivfpq_cand AS (
-                SELECT p.q_id, r.c_id,
-                       p.csim + list_sum(list_transform(generate_series(1, 64),
-                         i -> CAST(p.q_emb[i] AS DOUBLE) * CAST(r.rres[i] AS DOUBLE))) AS approx
-                FROM probes p JOIN recon r ON p.cell = r.cell
-                WHERE r.c_id <> p.q_id)"""
+  /** Mirror of ivfpqTopK through its ranked CTE `approx`. */
+  private val ivfpqSql: Seq[String] =
+    Seq(embQuerySql(), seededCentSql(), assignSql(),
+      s"""resid AS (
+        SELECT a.c_id, a.cell,
+               list_transform(generate_series(1, 64),
+                 i -> a.c_emb[i] - c.cent_emb[i]) AS res
+        FROM assigned a JOIN cent c ON a.cell = c.cent_id)""") ++
+    pqSql("resid", Seq("c_id", "cell"), "res") ++
+    Seq(probeSql(Nprobe),
+      s"""adc AS (
+        SELECT p.q_id, r.c_id,
+               p.csim + ${duckDot("p.q_emb", "r.recon")} AS score
+        FROM probes p JOIN recon r ON p.cell = r.cell
+        WHERE r.c_id <> p.q_id)""",
+      topKSql("approx", "adc", "score"))
 
   val ops: Seq[Op] = Seq(
     Op("sim_topk_cosine",
       (s, d) => {
         val emb = T.embeddings(s, d)
-        val q = emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        broadcast(q).join(c, col("q_id") =!= col("c_id"))
-          .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
+        exactTopK(embQueries(emb), corpus(emb), Some(notSelf))
           .select(col("q_id"), col("c_id"), round6(col("cos")).as("cos"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
       },
-      Some(s"""SELECT q_id, c_id, round(cos, 6) + 0.0 AS cos, rn
-              FROM (
-                SELECT a.vec_id AS q_id, b.vec_id AS c_id, $duckDot AS cos,
-                       CAST(row_number() OVER (PARTITION BY a.vec_id
-                                          ORDER BY $duckDot DESC, b.vec_id) AS INTEGER) AS rn
-                FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-                WHERE a.vec_id % 50 = 0)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(ctes(embQuerySql(), exactSql(NotSelfSql)) + rankedSql("exact", "cos", "cos"))),
 
     // HARD-NEGATIVE MINING (r17) — the contrastive-training data op: for
     // each anchor, the top-5 most-similar vectors with a DIFFERENT label.
@@ -660,24 +739,16 @@ object Similarity {
             col("label").as("q_label"))
         val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("label").as("c_label"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        broadcast(q).join(c, col("q_label") =!= col("c_label"))
-          .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
+        exactTopK(q, c, Some(col("q_label") =!= col("c_label")))
           .select(col("q_id"), col("q_label"), col("c_id"), col("c_label"),
             round6(col("cos")).as("cos"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
       },
-      Some(s"""SELECT q_id, q_label, c_id, c_label, round(cos, 6) + 0.0 AS cos, rn
-              FROM (
-                SELECT a.vec_id AS q_id, a.label AS q_label,
-                       b.vec_id AS c_id, b.label AS c_label, $duckDot AS cos,
-                       CAST(row_number() OVER (PARTITION BY a.vec_id
-                                          ORDER BY $duckDot DESC, b.vec_id) AS INTEGER) AS rn
-                FROM embeddings a JOIN embeddings b ON a.label <> b.label
-                WHERE a.vec_id % 50 = 0)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(ctes(embQuerySql(carry = ", label AS q_label"),
+          exactSql("q.q_label <> e.label", ", e.label AS c_label")) +
+        """SELECT q_id, q_label, c_id, c_label, round(cos, 6) + 0.0 AS cos,
+                 CAST(rn AS INTEGER) AS rn
+          FROM exact ORDER BY q_id, rn""")),
 
     // Approximate scale path — but fully DETERMINISTIC: centroid choice
     // (vec_id % 100), assignment (max sim, tie → lowest cent_id), probe set
@@ -687,40 +758,7 @@ object Similarity {
     // recall vs brute force is measured separately in DedupSimilaritySpec.
     Op("sim_ann_ivf",
       (s, d) => annTopK(s, d),
-      Some(s"""WITH cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE $IvfSeedSql),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              assigned AS (SELECT c_id, c_emb, cent_id AS cell FROM a1 WHERE arn = 1),
-              q AS (
-                SELECT vec_id AS q_id, embedding AS q_emb
-                FROM embeddings WHERE vec_id % 50 = 0),
-              p1 AS (
-                SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                       row_number() OVER (PARTITION BY q.q_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS crn
-                FROM q CROSS JOIN cent c),
-              probes AS (SELECT q_id, q_emb, cell FROM p1 WHERE crn <= 2),
-              cand AS (
-                SELECT p.q_id, a.c_id,
-                       list_sum(list_transform(generate_series(1, 64),
-                         i -> CAST(p.q_emb[i] AS DOUBLE) * CAST(a.c_emb[i] AS DOUBLE))) AS cos
-                FROM probes p JOIN assigned a ON p.cell = a.cell
-                WHERE p.q_id <> a.c_id)
-              SELECT q_id, c_id, round(cos, 6) + 0.0 AS cos, rn FROM (
-                SELECT q_id, c_id, cos,
-                       CAST(row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, c_id) AS INTEGER) AS rn
-                FROM cand)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(annIvfSql)),
 
     // Incremental ANN over a PERSISTED index (see annIncremental's doc):
     // base index written+reread as parquet, delta batch assigned to
@@ -732,45 +770,14 @@ object Similarity {
     // delta's % 3 = 0 slice.
     Op("sim_ann_incremental",
       (s, d) => annIncremental(s, d),
-      Some(s"""WITH cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE $IvfSeedSql AND vec_id % 7 <> 3),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              assigned AS (SELECT c_id, c_emb, cent_id AS cell FROM a1 WHERE arn = 1),
-              q AS (
-                SELECT vec_id AS q_id, embedding AS q_emb
-                FROM embeddings WHERE vec_id % 7 = 3 AND vec_id % 3 = 0),
-              p1 AS (
-                SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                       row_number() OVER (PARTITION BY q.q_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS crn
-                FROM q CROSS JOIN cent c),
-              probes AS (SELECT q_id, q_emb, cell FROM p1 WHERE crn <= 2),
-              cand AS (
-                SELECT p.q_id, a.c_id,
-                       list_sum(list_transform(generate_series(1, 64),
-                         i -> CAST(p.q_emb[i] AS DOUBLE) * CAST(a.c_emb[i] AS DOUBLE))) AS cos
-                FROM probes p JOIN assigned a ON p.cell = a.cell
-                WHERE p.q_id <> a.c_id)
-              SELECT q_id, c_id, round(cos, 6) + 0.0 AS cos, rn FROM (
-                SELECT q_id, c_id, cos,
-                       CAST(row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, c_id) AS INTEGER) AS rn
-                FROM cand)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(ctes(ivfSql(embQuerySql("vec_id % 7 = 3 AND vec_id % 3 = 0"),
+          seededCentSql(" AND vec_id % 7 <> 3")): _*) +
+        rankedSql("approx", "cos", "cos"))),
 
     // Recall@k of the IVF index vs exact brute force, AS A QUERY — "measure,
     // don't guess" applied to ANN quality. A production vector store ships
     // recall dashboards next to its index; this computes per-query hit
-    // counts by left-semi-joining the exact top-k against the IVF top-k on
+    // counts by left-joining the exact top-k against the IVF top-k on
     // (q_id, c_id). Both sides are deterministic (total orders throughout
     // the ladder), so even the RECALL MEASUREMENT gets an exact SQL oracle
     // — the number the dashboard shows is differentially tested, not
@@ -780,84 +787,11 @@ object Similarity {
     Op("sim_ann_recall",
       (s, d) => {
         val emb = T.embeddings(s, d)
-        val q = emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val exact = broadcast(q).join(c, col("q_id") =!= col("c_id"))
-          .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("c_id"))
-        val approx = annTopKFrom(emb).select(col("q_id"), col("c_id"))
-        // ONE aggregation over exact (left-joined to approx with a match
-        // flag) computes k and n_hit together — the previous two-branch
-        // shape (left_semi for hits + a separate groupBy for k) executed
-        // the brute-force exact plan TWICE per run
-        exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "c_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(lit(1)).cast("int").as("k"),
-            sum(coalesce(col("hit"), lit(0))).cast("int").as("n_hit"))
-          .select(col("q_id"), col("k"), col("n_hit"),
-            (col("n_hit").cast("long") * lit(1000000L)
-              / col("k").cast("long")).cast("long").as("recall_micros"))
-          .orderBy(col("q_id"))
+        recallPerQuery(exactTopK(embQueries(emb), corpus(emb), Some(notSelf)),
+          annTopKFrom(emb))
       },
-      Some(s"""WITH exact AS (
-                SELECT q_id, c_id FROM (
-                  SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-                         row_number() OVER (PARTITION BY a.vec_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) DESC,
-                           b.vec_id) AS rn
-                  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-                  WHERE a.vec_id % 50 = 0)
-                WHERE rn <= 5),
-              cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE $IvfSeedSql),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              assigned AS (SELECT c_id, c_emb, cent_id AS cell FROM a1 WHERE arn = 1),
-              q AS (
-                SELECT vec_id AS q_id, embedding AS q_emb
-                FROM embeddings WHERE vec_id % 50 = 0),
-              p1 AS (
-                SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                       row_number() OVER (PARTITION BY q.q_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS crn
-                FROM q CROSS JOIN cent c),
-              probes AS (SELECT q_id, q_emb, cell FROM p1 WHERE crn <= 2),
-              cand AS (
-                SELECT p.q_id, a.c_id,
-                       list_sum(list_transform(generate_series(1, 64),
-                         i -> CAST(p.q_emb[i] AS DOUBLE) * CAST(a.c_emb[i] AS DOUBLE))) AS cos
-                FROM probes p JOIN assigned a ON p.cell = a.cell
-                WHERE p.q_id <> a.c_id),
-              approx AS (
-                SELECT q_id, c_id FROM (
-                  SELECT q_id, c_id,
-                         row_number() OVER (PARTITION BY q_id
-                           ORDER BY cos DESC, c_id) AS rn
-                  FROM cand)
-                WHERE rn <= 5),
-              hit AS (
-                SELECT e.q_id, COUNT(*) AS n_hit
-                FROM exact e JOIN approx x ON e.q_id = x.q_id AND e.c_id = x.c_id
-                GROUP BY 1),
-              kq AS (SELECT q_id, COUNT(*) AS k FROM exact GROUP BY 1)
-              SELECT kq.q_id, CAST(kq.k AS INTEGER) AS k,
-                     CAST(COALESCE(h.n_hit, 0) AS INTEGER) AS n_hit,
-                     CAST(COALESCE(h.n_hit, 0) * 1000000 // kq.k AS BIGINT) AS recall_micros
-              FROM kq LEFT JOIN hit h ON h.q_id = kq.q_id
-              ORDER BY kq.q_id""")),
+      Some(ctes(ivfSql(embQuerySql(), seededCentSql()) :+ exactSql(NotSelfSql): _*) +
+        recallSql)),
 
     // The nprobe dial AS AN ORACLED QUERY (r16 — the recall-curve readout a
     // vector store publishes before picking its probe budget): recall@5 of
@@ -889,7 +823,7 @@ object Similarity {
         stats.toDF("it", "cent_id", "n", "csum", "shift")
           .orderBy(col("it"), col("cent_id"))
       },
-      Some(kmeansOracleStages(KmeansIters) + "\n" +
+      Some(ctes(kmeansOracleStages(KmeansIters): _*) +
         (0 until KmeansIters).map(t => s"SELECT * FROM ks$t").mkString(
           "SELECT CAST(it AS INTEGER) AS it, cent_id, n, csum, shift FROM (",
           " UNION ALL ", ") ORDER BY it, cent_id"))),
@@ -907,81 +841,20 @@ object Similarity {
     // DedupSimilaritySpec.
     Op("sim_ann_pq",
       (s, d) => {
-        val M = 8; val SUB = 8
         val emb = T.embeddings(s, d)
-        def subSlices(v: Column): Column = explode(array((0 until M).map(m =>
-          struct(lit(m).as("m"), slice(v, m * SUB + 1, SUB).as("sub"))): _*))
-        val subs = emb.select(col("vec_id"), subSlices(col("embedding")).as("x"))
-          .select(col("vec_id"), col("x.m").as("m"), col("x.sub").as("sub"))
-        // fixed-size codebook: K = 64 seeds regardless of corpus size (the
-        // codebook must stay a constant-size broadcast at 100 TB)
-        val seedSubs = emb.filter(col("vec_id") % 25 === 0 && col("vec_id") < 1600)
-          .select(col("vec_id").as("s_id"), subSlices(col("embedding")).as("x"))
-          .select(col("s_id"), col("x.m").as("sm"), col("x.sub").as("s_sub"))
-        // encode: per (vector, subspace) the nearest centroid by squared L2,
-        // expanded via the three-dot identity so every distance is the same
-        // sequential fold both engines run; broadcast codebook ⇒ the argmin
-        // reduces map-side, one (vec_id, m) shuffle total
-        val d2 = dot(col("sub"), col("sub")) + dot(col("s_sub"), col("s_sub")) -
-          lit(2) * dot(col("sub"), col("s_sub"))
-        val codes = subs.join(broadcast(seedSubs), col("m") === col("sm"))
-          .withColumn("d2", d2)
-          .groupBy(col("vec_id"), col("m"))
-          .agg(min_by(col("s_id"), struct(col("d2"), col("s_id"))).as("code"))
-        // reconstruction: concat the coded centroid slices back to 64 dims
-        val recon = codes.join(broadcast(seedSubs),
-            col("m") === col("sm") && col("code") === col("s_id"))
-          .groupBy(col("vec_id"))
-          .agg(flatten(transform(array_sort(collect_list(struct(col("m"), col("s_sub")))),
-            x => x.getField("s_sub"))).as("recon"))
-        val q = emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-        broadcast(q).join(recon.select(col("vec_id").as("c_id"), col("recon")),
-            col("q_id") =!= col("c_id"))
-          .withColumn("approx", dot(col("q_emb"), col("recon")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
+        val recon = pqReconstruct(emb, Seq("vec_id"), "embedding")
+        topK(broadcast(embQueries(emb)).join(
+            recon.select(col("vec_id").as("c_id"), col("recon")), notSelf)
+            .withColumn("approx", dot(col("q_emb"), col("recon"))), "approx")
           .select(col("q_id"), col("c_id"), round6(col("approx")).as("approx_cos"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
       },
-      Some("""WITH ms AS (SELECT unnest(generate_series(0, 7)) AS m),
-              subs AS (
-                SELECT e.vec_id, ms.m, e.embedding[8*ms.m+1 : 8*ms.m+8] AS sub
-                FROM embeddings e CROSS JOIN ms),
-              ssubs AS (
-                SELECT s.vec_id AS s_id, ms.m AS sm,
-                       s.embedding[8*ms.m+1 : 8*ms.m+8] AS s_sub
-                FROM embeddings s CROSS JOIN ms WHERE s.vec_id % 25 = 0 AND s.vec_id < 1600),
-              enc1 AS (
-                SELECT v.vec_id, v.m, ss.s_id,
-                       row_number() OVER (PARTITION BY v.vec_id, v.m ORDER BY
-                         (list_sum(list_transform(generate_series(1, 8),
-                            i -> CAST(v.sub[i] AS DOUBLE) * CAST(v.sub[i] AS DOUBLE)))
-                          + list_sum(list_transform(generate_series(1, 8),
-                            i -> CAST(ss.s_sub[i] AS DOUBLE) * CAST(ss.s_sub[i] AS DOUBLE)))
-                          - 2 * list_sum(list_transform(generate_series(1, 8),
-                            i -> CAST(v.sub[i] AS DOUBLE) * CAST(ss.s_sub[i] AS DOUBLE)))) ASC,
-                         ss.s_id) AS rn
-                FROM subs v JOIN ssubs ss ON v.m = ss.sm),
-              codes AS (SELECT vec_id, m, s_id FROM enc1 WHERE rn = 1),
-              recon AS (
-                SELECT c.vec_id, flatten(list(ss.s_sub ORDER BY c.m)) AS recon
-                FROM codes c JOIN ssubs ss ON c.m = ss.sm AND c.s_id = ss.s_id
-                GROUP BY c.vec_id),
-              q AS (SELECT vec_id AS q_id, embedding AS q_emb
-                    FROM embeddings WHERE vec_id % 50 = 0),
-              cand AS (
-                SELECT q.q_id, r.vec_id AS c_id,
-                       list_sum(list_transform(generate_series(1, 64),
-                         i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(r.recon[i] AS DOUBLE))) AS approx
-                FROM q JOIN recon r ON r.vec_id <> q.q_id)
-              SELECT q_id, c_id, round(approx, 6) + 0.0 AS approx_cos, rn
-              FROM (SELECT q_id, c_id, approx,
-                           CAST(row_number() OVER (PARTITION BY q_id
-                             ORDER BY approx DESC, c_id) AS INTEGER) AS rn
-                    FROM cand)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(ctes(pqSql("embeddings", Seq("vec_id"), "embedding") ++ Seq(embQuerySql(),
+          s"""adc AS (
+            SELECT q.q_id, r.vec_id AS c_id, ${duckDot("q.q_emb", "r.recon")} AS score
+            FROM q JOIN recon r ON r.vec_id <> q.q_id)""",
+          topKSql("approx", "adc", "score")): _*) +
+        rankedSql("approx", "score", "approx_cos"))),
 
     // IVFADC (r17 — the billion-scale ANN architecture, composing the two
     // ladders): coarse IVF quantization prunes the CANDIDATE SET (probe
@@ -1001,13 +874,7 @@ object Similarity {
     // force is measured in DedupSimilaritySpec.
     Op("sim_ann_ivfpq",
       (s, d) => ivfpqTopK(s, d),
-      Some(s"""WITH $ivfpqCtes
-              SELECT q_id, c_id, round(approx, 6) + 0.0 AS approx_cos, rn
-              FROM (SELECT q_id, c_id, approx,
-                           CAST(row_number() OVER (PARTITION BY q_id
-                             ORDER BY approx DESC, c_id) AS INTEGER) AS rn
-                    FROM ivfpq_cand)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(ctes(ivfpqSql: _*) + rankedSql("approx", "score", "approx_cos"))),
 
     // Recall@5 of the IVFADC probe vs exact brute force, AS A QUERY (the
     // sim_ann_recall discipline applied to the r17 composition): the
@@ -1019,54 +886,10 @@ object Similarity {
     Op("sim_ann_ivfpq_recall",
       (s, d) => {
         val emb = T.embeddings(s, d)
-        val q = emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val exact = broadcast(q).join(c, col("q_id") =!= col("c_id"))
-          .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("c_id"))
-        val approx = ivfpqTopK(s, d).select(col("q_id"), col("c_id"))
-        exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "c_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(lit(1)).cast("int").as("k"),
-            sum(coalesce(col("hit"), lit(0))).cast("int").as("n_hit"))
-          .select(col("q_id"), col("k"), col("n_hit"),
-            (col("n_hit").cast("long") * lit(1000000L)
-              / col("k").cast("long")).cast("long").as("recall_micros"))
-          .orderBy(col("q_id"))
+        recallPerQuery(exactTopK(embQueries(emb), corpus(emb), Some(notSelf)),
+          ivfpqTopK(s, d))
       },
-      Some(s"""WITH exact AS (
-                SELECT q_id, c_id FROM (
-                  SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-                         row_number() OVER (PARTITION BY a.vec_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) DESC,
-                           b.vec_id) AS rn
-                  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-                  WHERE a.vec_id % 50 = 0)
-                WHERE rn <= 5),
-              $ivfpqCtes,
-              approx AS (
-                SELECT q_id, c_id FROM (
-                  SELECT q_id, c_id,
-                         row_number() OVER (PARTITION BY q_id
-                           ORDER BY approx DESC, c_id) AS rn
-                  FROM ivfpq_cand)
-                WHERE rn <= 5),
-              hit AS (
-                SELECT e.q_id, COUNT(*) AS n_hit
-                FROM exact e JOIN approx x ON e.q_id = x.q_id AND e.c_id = x.c_id
-                GROUP BY 1),
-              kq AS (SELECT q_id, COUNT(*) AS k FROM exact GROUP BY 1)
-              SELECT kq.q_id, CAST(kq.k AS INTEGER) AS k,
-                     CAST(COALESCE(h.n_hit, 0) AS INTEGER) AS n_hit,
-                     CAST(COALESCE(h.n_hit, 0) * 1000000 // kq.k AS BIGINT) AS recall_micros
-              FROM kq LEFT JOIN hit h ON h.q_id = kq.q_id
-              ORDER BY kq.q_id""")),
-
+      Some(ctes(ivfpqSql :+ exactSql(NotSelfSql): _*) + recallSql)),
 
     // The NAIVE all-pairs formulation — no blocking in the user's query.
     // SimilarityJoinRewrite (optimizer rule) injects exact projection-bucket
@@ -1085,9 +908,9 @@ object Similarity {
           .orderBy(col("a_id"), col("b_id"))
       },
       Some(s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                     round($duckDot, 6) + 0.0 AS cos
+                     round(${duckDot("a.embedding", "b.embedding")}, 6) + 0.0 AS cos
               FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-              WHERE $duckDot > 0.45
+              WHERE ${duckDot("a.embedding", "b.embedding")} > 0.45
               ORDER BY a_id, b_id""")),
 
     Op("sim_threshold_pairs",
@@ -1103,10 +926,10 @@ object Similarity {
           .orderBy(col("a_id"), col("b_id"))
       },
       Some(s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.label AS label,
-                     round($duckDot, 6) + 0.0 AS cos
+                     round(${duckDot("a.embedding", "b.embedding")}, 6) + 0.0 AS cos
               FROM embeddings a JOIN embeddings b
                 ON a.label = b.label AND a.vec_id < b.vec_id
-              WHERE $duckDot > 0.3
+              WHERE ${duckDot("a.embedding", "b.embedding")} > 0.3
               ORDER BY a_id, b_id""")),
 
     Op("multimodal_join",
@@ -1305,15 +1128,6 @@ object Similarity {
               FROM s
               ORDER BY media_id""")),
 
-    // The trimodal manifest in its production shape: ONE scan of the corpus
-    // table, ONE mapPartitions pass decoding image (PPM) + audio (WAV) +
-    // video (Y4M, every-3rd-frame sampled) payloads side by side, doc-level
-    // columns riding through — zero joins, zero Exchanges (pinned in
-    // PlanSpec). Per-modality extract ops would cost three scans and two
-    // media_id shuffles for row-local work; at 100 TB the fused pass is the
-    // only sane plan. Every emitted feature is integer math over the three
-    // closed-form planted signals, so one DuckDB query recomputes the whole
-    // manifest exactly.
     // Cross-modal retrieval (r14 — the composition that ties the two mature
     // axes together): decoded IMAGE features → 64-dim feature vector → ANN
     // probe against the standing embedding index. This is the retrieval
@@ -1330,64 +1144,13 @@ object Similarity {
     // only from probed cells (equi-join on cell) — no cartesian.
     Op("multimodal_retrieval",
       (s, d) => {
-        val q = thumbQueries(s, d)
         val emb = T.embeddings(s, d)
-        probeTopK(q, ivfCentroids(emb), ivfAssign(emb), k = 5, nprobe = 2,
+        probeTopK(thumbQueries(s, d), ivfCentroids(emb), ivfAssign(emb),
             excludeSelf = false)
           .select(col("q_id"), col("c_id"), col("cos").as("score"), col("rn"))
       },
-      Some(s"""WITH m AS (
-                SELECT doc_id AS media_id,
-                       8 + (doc_id % 9) AS w,
-                       8 + (doc_id % 7) AS h
-                FROM documents WHERE doc_id % 25 = 0),
-              px AS (
-                SELECT m.media_id, m.w, m.h, x.x AS x, y.y AS y,
-                       (3 * m.media_id + x.x + 2 * y.y) % 256      AS r,
-                       (3 * m.media_id + x.x + 2 * y.y + 37) % 256 AS g,
-                       (3 * m.media_id + x.x + 2 * y.y + 74) % 256 AS b
-                FROM m
-                JOIN generate_series(0, 15) AS x(x) ON x.x < m.w
-                JOIN generate_series(0, 13) AS y(y) ON y.y < m.h),
-              cells AS (
-                SELECT media_id,
-                       ((y * 8) // h) * 8 + (x * 8) // w AS idx,
-                       SUM(r + g + b) // (3 * COUNT(*)) AS mv
-                FROM px GROUP BY 1, 2),
-              q AS (
-                SELECT media_id AS q_id,
-                       list(CAST(mv AS DOUBLE) ORDER BY idx) AS q_emb
-                FROM cells GROUP BY 1),
-              cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE $IvfSeedSql),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              assigned AS (SELECT c_id, c_emb, cent_id AS cell FROM a1 WHERE arn = 1),
-              p1 AS (
-                SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                       row_number() OVER (PARTITION BY q.q_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> q.q_emb[i] * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS crn
-                FROM q CROSS JOIN cent c),
-              probes AS (SELECT q_id, q_emb, cell FROM p1 WHERE crn <= 2),
-              cand AS (
-                SELECT p.q_id, a.c_id,
-                       list_sum(list_transform(generate_series(1, 64),
-                         i -> p.q_emb[i] * CAST(a.c_emb[i] AS DOUBLE))) AS cos
-                FROM probes p JOIN assigned a ON p.cell = a.cell)
-              SELECT q_id, c_id, round(cos, 6) + 0.0 AS score, rn FROM (
-                SELECT q_id, c_id, cos,
-                       CAST(row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, c_id) AS INTEGER) AS rn
-                FROM cand)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(ctes(ivfSql(thumbQuerySql, seededCentSql(), excludeSelf = false): _*) +
+        rankedSql("approx", "cos", "score"))),
 
     // Recall@5 of the cross-modal IVF probe vs the brute-force exact
     // top-5 on the SAME derived thumbnail vectors (r14 — sim_ann_recall's
@@ -1404,91 +1167,11 @@ object Similarity {
       (s, d) => {
         val q = thumbQueries(s, d)
         val emb = T.embeddings(s, d)
-        val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val exact = broadcast(q).join(c)
-          .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("c_id"))
-        val approx = probeTopK(q, ivfCentroids(emb), ivfAssign(emb),
-            k = 5, nprobe = 2, excludeSelf = false)
-          .select(col("q_id"), col("c_id"))
-        exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "c_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(lit(1)).cast("int").as("k"),
-            sum(coalesce(col("hit"), lit(0))).cast("int").as("n_hit"))
-          .select(col("q_id"), col("k"), col("n_hit"),
-            (col("n_hit").cast("long") * lit(1000000L)
-              / col("k").cast("long")).cast("long").as("recall_micros"))
-          .orderBy(col("q_id"))
+        recallPerQuery(exactTopK(q, corpus(emb), None),
+          probeTopK(q, ivfCentroids(emb), ivfAssign(emb), excludeSelf = false))
       },
-      Some(s"""WITH m AS (
-                SELECT doc_id AS media_id,
-                       8 + (doc_id % 9) AS w,
-                       8 + (doc_id % 7) AS h
-                FROM documents WHERE doc_id % 25 = 0),
-              px AS (
-                SELECT m.media_id, m.w, m.h, x.x AS x, y.y AS y,
-                       (3 * m.media_id + x.x + 2 * y.y) % 256      AS r,
-                       (3 * m.media_id + x.x + 2 * y.y + 37) % 256 AS g,
-                       (3 * m.media_id + x.x + 2 * y.y + 74) % 256 AS b
-                FROM m
-                JOIN generate_series(0, 15) AS x(x) ON x.x < m.w
-                JOIN generate_series(0, 13) AS y(y) ON y.y < m.h),
-              cells AS (
-                SELECT media_id,
-                       ((y * 8) // h) * 8 + (x * 8) // w AS idx,
-                       SUM(r + g + b) // (3 * COUNT(*)) AS mv
-                FROM px GROUP BY 1, 2),
-              q AS (
-                SELECT media_id AS q_id,
-                       list(CAST(mv AS DOUBLE) ORDER BY idx) AS q_emb
-                FROM cells GROUP BY 1),
-              exact AS (
-                SELECT q_id, c_id FROM (
-                  SELECT q.q_id, e.vec_id AS c_id,
-                         row_number() OVER (PARTITION BY q.q_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> q.q_emb[i] * CAST(e.embedding[i] AS DOUBLE))) DESC,
-                           e.vec_id) AS rn
-                  FROM q CROSS JOIN embeddings e)
-                WHERE rn <= 5),
-              cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE $IvfSeedSql),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              assigned AS (SELECT c_id, c_emb, cent_id AS cell FROM a1 WHERE arn = 1),
-              p1 AS (
-                SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                       row_number() OVER (PARTITION BY q.q_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> q.q_emb[i] * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS crn
-                FROM q CROSS JOIN cent c),
-              probes AS (SELECT q_id, q_emb, cell FROM p1 WHERE crn <= 2),
-              approx AS (
-                SELECT q_id, c_id FROM (
-                  SELECT p.q_id, a.c_id,
-                         row_number() OVER (PARTITION BY p.q_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> p.q_emb[i] * CAST(a.c_emb[i] AS DOUBLE))) DESC,
-                           a.c_id) AS rn
-                  FROM probes p JOIN assigned a ON p.cell = a.cell)
-                WHERE rn <= 5)
-              SELECT e.q_id, CAST(count(*) AS INTEGER) AS k,
-                     CAST(count(ap.c_id) AS INTEGER) AS n_hit,
-                     CAST(count(ap.c_id) * 1000000 / count(*) AS BIGINT)
-                       AS recall_micros
-              FROM exact e LEFT JOIN approx ap
-                ON e.q_id = ap.q_id AND e.c_id = ap.c_id
-              GROUP BY e.q_id ORDER BY e.q_id""")),
+      Some(ctes(ivfSql(thumbQuerySql, seededCentSql(), excludeSelf = false) :+
+        exactSql("true"): _*) + recallSql)),
 
     // The same cross-modal recall readout with the TRAINED codebook (r16 —
     // the measurement the k-means trainer exists to move): centroids are
@@ -1514,93 +1197,23 @@ object Similarity {
         val q = thumbQueries(s, d)
         val emb = T.embeddings(s, d)
         val cent = trainedCentroids(s, d)
-        val c = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val exact = broadcast(q).join(c)
-          .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("c_id"))
-        val approx = probeTopK(q, cent, ivfAssignMicro(emb, cent),
-            k = 5, nprobe = 2, excludeSelf = false)
-          .select(col("q_id"), col("c_id"))
-        exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "c_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(lit(1)).cast("int").as("k"),
-            sum(coalesce(col("hit"), lit(0))).cast("int").as("n_hit"))
-          .select(col("q_id"), col("k"), col("n_hit"),
-            (col("n_hit").cast("long") * lit(1000000L)
-              / col("k").cast("long")).cast("long").as("recall_micros"))
-          .orderBy(col("q_id"))
+        recallPerQuery(exactTopK(q, corpus(emb), None),
+          probeTopK(q, cent, ivfAssignMicro(emb, cent), excludeSelf = false))
       },
-      Some(kmeansOracleStages(KmeansIters) + s""",
-              m AS (
-                SELECT doc_id AS media_id,
-                       8 + (doc_id % 9) AS w,
-                       8 + (doc_id % 7) AS h
-                FROM documents WHERE doc_id % 25 = 0),
-              px AS (
-                SELECT m.media_id, m.w, m.h, x.x AS x, y.y AS y,
-                       (3 * m.media_id + x.x + 2 * y.y) % 256      AS r,
-                       (3 * m.media_id + x.x + 2 * y.y + 37) % 256 AS g,
-                       (3 * m.media_id + x.x + 2 * y.y + 74) % 256 AS b
-                FROM m
-                JOIN generate_series(0, 15) AS x(x) ON x.x < m.w
-                JOIN generate_series(0, 13) AS y(y) ON y.y < m.h),
-              cells AS (
-                SELECT media_id,
-                       ((y * 8) // h) * 8 + (x * 8) // w AS idx,
-                       SUM(r + g + b) // (3 * COUNT(*)) AS mv
-                FROM px GROUP BY 1, 2),
-              q AS (
-                SELECT media_id AS q_id,
-                       list(CAST(mv AS DOUBLE) ORDER BY idx) AS q_emb
-                FROM cells GROUP BY 1),
-              exact AS (
-                SELECT q_id, c_id FROM (
-                  SELECT q.q_id, e.vec_id AS c_id,
-                         row_number() OVER (PARTITION BY q.q_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> q.q_emb[i] * CAST(e.embedding[i] AS DOUBLE))) DESC,
-                           e.vec_id) AS rn
-                  FROM q CROSS JOIN embeddings e)
-                WHERE rn <= 5),
-              cent AS (SELECT cent_id, cm FROM kc$KmeansIters),
-              a1 AS (
-                SELECT v.vec_id AS c_id, c.cent_id,
-                       row_number() OVER (PARTITION BY v.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> v.m[i] * c.cm[i])) DESC, c.cent_id) AS arn
-                FROM kmm v CROSS JOIN cent c),
-              assigned AS (
-                SELECT a.c_id, e.embedding AS c_emb, a.cent_id AS cell
-                FROM a1 a JOIN embeddings e ON e.vec_id = a.c_id
-                WHERE a.arn = 1),
-              p1 AS (
-                SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                       row_number() OVER (PARTITION BY q.q_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> q.q_emb[i] * CAST(c.cm[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS crn
-                FROM q CROSS JOIN cent c),
-              probes AS (SELECT q_id, q_emb, cell FROM p1 WHERE crn <= 2),
-              approx AS (
-                SELECT q_id, c_id FROM (
-                  SELECT p.q_id, a.c_id,
-                         row_number() OVER (PARTITION BY p.q_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> p.q_emb[i] * CAST(a.c_emb[i] AS DOUBLE))) DESC,
-                           a.c_id) AS rn
-                  FROM probes p JOIN assigned a ON p.cell = a.cell)
-                WHERE rn <= 5)
-              SELECT e.q_id, CAST(count(*) AS INTEGER) AS k,
-                     CAST(count(ap.c_id) AS INTEGER) AS n_hit,
-                     CAST(count(ap.c_id) * 1000000 / count(*) AS BIGINT)
-                       AS recall_micros
-              FROM exact e LEFT JOIN approx ap
-                ON e.q_id = ap.q_id AND e.c_id = ap.c_id
-              GROUP BY e.q_id ORDER BY e.q_id""")),
+      Some(ctes(kmeansOracleStages(KmeansIters) ++
+        ivfSql(thumbQuerySql, s"cent AS (SELECT cent_id, cm AS cent_emb FROM kc$KmeansIters)",
+          assignSql("kmm", "m"), excludeSelf = false) :+
+        exactSql("true"): _*) + recallSql)),
 
+    // The trimodal manifest in its production shape: ONE scan of the corpus
+    // table, ONE mapPartitions pass decoding image (PPM) + audio (WAV) +
+    // video (Y4M, every-3rd-frame sampled) payloads side by side, doc-level
+    // columns riding through — zero joins, zero Exchanges (pinned in
+    // PlanSpec). Per-modality extract ops would cost three scans and two
+    // media_id shuffles for row-local work; at 100 TB the fused pass is the
+    // only sane plan. Every emitted feature is integer math over the three
+    // closed-form planted signals, so one DuckDB query recomputes the whole
+    // manifest exactly.
     Op("multimodal_manifest",
       (s, d) => {
         val mm = thrivespark.multimodal.Multimodal

@@ -271,18 +271,8 @@ object StreamingOps {
           .annIngestStream(s, stage, T.embeddings(s, d).schema, cp, centDir,
             s"$root/index")
       },
-      Some(s"""WITH cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE ${Similarity.IvfSeedSql}),
-              a1 AS (
-                SELECT e.vec_id AS c_id, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c)
-              SELECT c_id, cent_id AS cell FROM a1 WHERE arn = 1
-              ORDER BY c_id""")),
+      Some(Similarity.ctes(Similarity.seededCentSql(), Similarity.assignSql()) +
+        "SELECT c_id, cell FROM assigned ORDER BY c_id")),
 
     // Streaming ANN query (r17 — completes the streaming index story:
     // annIngestStream maintains the index, this serves it): retrieval
@@ -304,40 +294,7 @@ object StreamingOps {
         thrivespark.streaming.StreamRunner.annQueryStream(s, stage,
           T.embeddings(s, d).schema, cp, centDir, idxDir, s"$root/results")
       },
-      Some(s"""WITH cent AS (
-                SELECT vec_id AS cent_id, embedding AS cent_emb
-                FROM embeddings WHERE ${Similarity.IvfSeedSql}),
-              a1 AS (
-                SELECT e.vec_id AS c_id, e.embedding AS c_emb, c.cent_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_sum(list_transform(generate_series(1, 64),
-                           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                         c.cent_id) AS arn
-                FROM embeddings e CROSS JOIN cent c),
-              assigned AS (SELECT c_id, cent_id AS cell, c_emb FROM a1 WHERE arn = 1),
-              q AS (SELECT vec_id AS q_id, embedding AS q_emb
-                    FROM embeddings WHERE vec_id % 50 = 0),
-              probes AS (
-                SELECT q_id, q_emb, cell FROM (
-                  SELECT q.q_id, q.q_emb, c.cent_id AS cell,
-                         row_number() OVER (PARTITION BY q.q_id
-                           ORDER BY list_sum(list_transform(generate_series(1, 64),
-                             i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(c.cent_emb[i] AS DOUBLE))) DESC,
-                           c.cent_id) AS crn
-                  FROM q CROSS JOIN cent c)
-                WHERE crn <= 2),
-              cand AS (
-                SELECT p.q_id, a.c_id,
-                       list_sum(list_transform(generate_series(1, 64),
-                         i -> CAST(p.q_emb[i] AS DOUBLE) * CAST(a.c_emb[i] AS DOUBLE))) AS cos
-                FROM probes p JOIN assigned a ON p.cell = a.cell
-                WHERE a.c_id <> p.q_id)
-              SELECT q_id, c_id, round(cos, 6) + 0.0 AS cos, rn
-              FROM (SELECT q_id, c_id, cos,
-                           CAST(row_number() OVER (PARTITION BY q_id
-                             ORDER BY cos DESC, c_id) AS INTEGER) AS rn
-                    FROM cand)
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      Some(Similarity.annIvfSql)),
 
     Op("stream_score_model",
       (s, d) => {

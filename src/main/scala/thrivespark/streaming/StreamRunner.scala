@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import thrivespark.DurableStage
+import thrivespark.ops.Similarity
 
 /** Structured Streaming execution paths (SURVEY.md §2.10 #58/#59): the ops
   * whose semantics only exist under streaming — watermark late-drop and
@@ -349,7 +350,7 @@ object StreamRunner {
     val in = replay(spark, srcDir, schema).select(col("vec_id"), col("embedding"))
     drainEachBatch(in, checkpoint) { (batch, batchId) =>
       val cent = batch.sparkSession.read.parquet(centDir)   // standing cells, never rebuilt
-      thrivespark.ops.Similarity.ivfAssignTo(batch, cent)
+      Similarity.ivfAssignTo(batch, cent)
         .select(col("c_id"), col("cell"))
         .coalesce(2).write.mode("overwrite")
         .parquet(s"$idxDir/batch=$batchId")
@@ -386,19 +387,14 @@ object StreamRunner {
       val cent = s.read.parquet(centDir)
       val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val wCell = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))
         // ≤ IvfK distinct cells whatever the batch size — codebook-bounded
-        val cells = b.join(broadcast(cent))
-          .withColumn("csim", thrivespark.ops.Similarity.dot(col("q_emb"), col("cent_emb")))
-          .withColumn("crn", row_number().over(wCell))
-          .filter(col("crn") <= 2)
+        val cells = Similarity.probeCells(b, cent, Similarity.Nprobe)
           .select(col("cent_id")).distinct()
           .collect().map(_.getLong(0)).toSeq
         val assigned = s.read.parquet(idxDir)
           .filter(col("cell").isin(cells: _*))   // partition pruning
           .select(col("c_id"), col("cell").cast("long").as("cell"), col("c_emb"))
-        thrivespark.ops.Similarity.probeTopK(b, cent, assigned, k = 5, nprobe = 2)
+        Similarity.probeTopK(b, cent, assigned)
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/batch=$batchId")
       } finally b.unpersist(): Unit

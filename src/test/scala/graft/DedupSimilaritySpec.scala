@@ -40,7 +40,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("sim_ann_ivf: k results per query, recall vs brute force is sane") {
-    val ann = Similarity.annTopK(spark, sf001, k = 5, nprobe = 2)
+    val ann = Similarity.annTopK(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = thrivespark.Registry.queries("sim_topk_cosine")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -666,12 +666,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val seededCent = Similarity.ivfCentroids(emb)
     val seeded = recallOf(Similarity.probeTopK(q, seededCent,
-      Similarity.ivfAssignTo(emb, seededCent), k = 5, nprobe = 1).collect())
+      Similarity.ivfAssignTo(emb, seededCent), nprobe = 1).collect())
     val trainedCent = Similarity.kmeansTrainFrom(emb, iters = 3)._1
       .map { case (id, cm) => (id, cm.map(_.toFloat).toSeq) }
       .toDF("cent_id", "cent_emb")
     val trained = recallOf(Similarity.probeTopK(q, trainedCent,
-      Similarity.ivfAssignMicro(emb, trainedCent), k = 5, nprobe = 1).collect())
+      Similarity.ivfAssignMicro(emb, trainedCent), nprobe = 1).collect())
     info(f"recall@5 nprobe=1: seeded $seeded%.3f trained $trained%.3f")
     // measured (deterministic corpus): seeded 0.502, trained 1.000
     assert(trained > seeded + 0.15,
@@ -691,5 +691,33 @@ class DedupSimilaritySpec extends AnyFunSuite {
     Similarity.kmeansTrainFrom(emb, iters = 2): Unit
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"kmeansTrainFrom leaked persistent RDDs: $leaked")
+  }
+
+  test("one definition per ANN step: the DuckDB dot fold and the IVF " +
+      "cell-ranking window each appear exactly once under src/main/scala") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    // whitespace-collapsed, so a copy split over lines still counts
+    val texts = files(root).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try f.getPath -> src.mkString.replaceAll("\\s+", " ") finally src.close()
+    }
+    Seq("list_sum(list_transform(generate_series(1, ",
+        """orderBy(col("csim").desc, col("cent_id"))""").foreach { needle =>
+      val hits = texts.map { case (p, t) =>
+        p -> (t.split(java.util.regex.Pattern.quote(needle), -1).length - 1)
+      }.filter(_._2 > 0)
+      assert(hits.map(_._2).sum == 1,
+        s"`$needle` must have one definition, found:\n" + hits.mkString("\n"))
+    }
+  }
+
+  test("stream_ann_query's oracle IS sim_ann_ivf's: the union of streamed " +
+      "probes is checked against the one-shot probe's SQL, not a copy of it") {
+    val oracles = SparkEntry.oracleSql
+    assert(oracles("stream_ann_query") == oracles("sim_ann_ivf"))
   }
 }
